@@ -11,9 +11,9 @@ TCP and prints a metric table, then as its last line one JSON object
 per-layer metrics instead of the end-to-end ones.
 
 Steadiness mode:
-  python3 perfbench/run.py --steady 10 [--workloads a,b] [--seconds N]
+  python3 perfbench/run.py --steady 10 [--seconds N]
 
-repeats each workload with seeds 1..N and prints, per end-to-end metric,
+repeats each workload of BENCHMARK.json with seeds 1..N and prints, per end-to-end metric,
 the median, the quartiles and the spread (interquartile range over the
 median) against the metric's bound in BENCHMARK.json.
 
@@ -102,13 +102,12 @@ def run_once(classpath, workload, seed, seconds, trace, echo=True):
     return json.loads(result_file.read_text())
 
 
-def steady(classpath, reps, workloads, seconds):
+def steady(classpath, reps, seconds):
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
     bounds = {m["name"]: m["bound"] for m in spec["end_to_end"]}
     seconds = seconds or spec["run_seconds"]
-    names = workloads.split(",") if workloads else [w["name"] for w in spec["workloads"]]
     worst = 0.0
-    for wl in names:
+    for wl in (w["name"] for w in spec["workloads"]):
         values = {}
         for seed in range(1, reps + 1):
             r = run_once(classpath, wl, seed, seconds, 0, echo=False)
@@ -124,12 +123,11 @@ def steady(classpath, reps, workloads, seconds):
             q1, med, q3 = statistics.quantiles(xs, n=4)
             spread = (q3 - q1) / med if med else float("inf")
             ok = spread <= bounds.get(k, 0) / 3
-            if k != "setup_s":
-                worst = max(worst, spread / bounds[k])
+            worst = max(worst, spread / bounds[k])
             print(f"{k:16s} {med:12.4f} {q1:12.4f} {q3:12.4f} {spread:8.4f} "
                   f"{bounds.get(k, 0):6.2f}  {'yes' if ok else 'NO'}")
         print(flush=True)
-    print(f"largest spread/bound (setup_s excluded): {worst:.3f}")
+    print(f"largest spread/bound: {worst:.3f}")
 
 
 def main():
@@ -139,7 +137,6 @@ def main():
     ap.add_argument("--seconds", type=float)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--steady", type=int, metavar="N")
-    ap.add_argument("--workloads")
     ap.add_argument("--selftest", action="store_true")
     a = ap.parse_args()
     try:
@@ -155,7 +152,7 @@ def main():
             sys.stderr.write(p.stderr[-6000:])
         return p.returncode
     if a.steady:
-        steady(classpath, a.steady, a.workloads, a.seconds)
+        steady(classpath, a.steady, a.seconds)
         return 0
     if not a.workload or a.seconds is None:
         ap.error("--workload and --seconds are required")

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Seeded inputs for one run, built through public APIs only: TPC-H
   * shaped `lineitem`/`orders` parquet at sf0.1 cardinality, a text
-  * corpus with a persisted text index (`TextIndex.write` + `append`),
-  * and its embeddings with a persisted IVF index
+  * corpus with its embeddings, and over them a persisted text index
+  * (`TextIndex.write` + `append`) and IVF index
   * (`Embeddings.writeIvfIndex`). The same seed gives the same bytes. */
 final case class Fixtures(root: String) {
   def data: String = s"$root/data"
@@ -17,7 +17,6 @@ final case class Fixtures(root: String) {
   def textIndex: String = s"$root/idx/text"
   def ivfIndex: String = s"$root/idx/ivf"
   def results: String = s"$root/results"
-  def writeback: String = s"$root/writeback"
 }
 
 object Fixtures {
@@ -41,32 +40,42 @@ object Fixtures {
     Array.fill(Dim)(r.nextGaussian())
   }
 
-  /** What a workload reads: the TPC-H tables, the text corpus and its
-    * embeddings, or the corpus with its text and IVF indexes. */
+  /** What a workload reads: the TPC-H tables, or the text corpus and
+    * its embeddings with their text and IVF indexes. */
   sealed trait Part
   case object Tables extends Part
-  case object Corpus extends Part
   case object Indexes extends Part
 
-  /** Build the parts a workload needs: the tables, and the corpus
-    * followed by its text index and IVF index, concurrently. */
-  def build(spark: SparkSession, f: Fixtures, seed: Long, needs: Set[Part]): Unit = {
-    val split = (Docs * 4) / 5
-    def docs = spark.read.parquet(f.docs)
-    val corpus: () => Unit = () => {
-      writeCorpus(spark, f, seed)
-      if (needs(Indexes)) concurrently(
-        () => {
-          graft.pipeline.TextIndex.write(docs.where(col("doc_id") < split), f.textIndex, buckets = 4)
-          graft.pipeline.TextIndex.append(docs.where(col("doc_id") >= split), f.textIndex)
-        },
-        () => graft.pipeline.Embeddings.writeIvfIndex(spark.read.parquet(f.vectors), f.ivfIndex,
-          nlist = Clusters, pqK = 16, pqIters = 3))
-    }
+  /** Write the data files a workload reads: the tables and the corpus
+    * parquet, concurrently. This is input generation, not set-up. */
+  def writeData(spark: SparkSession, f: Fixtures, seed: Long, needs: Set[Part]): Unit =
     concurrently(
       (if (needs(Tables)) Seq(() => writeTables(spark, f, seed)) else Nil) ++
-      (if (needs(Corpus) || needs(Indexes)) Seq(corpus) else Nil): _*)
+      (if (needs(Indexes)) Seq(() => writeCorpus(spark, f, seed)) else Nil): _*)
+
+  /** Build the persisted indexes over the corpus: the text index
+    * (`TextIndex.write` + `append`) and the IVF index, concurrently.
+    * Part of set-up. */
+  def buildIndexes(spark: SparkSession, f: Fixtures): Unit = {
+    val split = (Docs * 4) / 5
+    def docs = spark.read.parquet(f.docs)
+    concurrently(
+      () => {
+        graft.pipeline.TextIndex.write(docs.where(col("doc_id") < split), f.textIndex, buckets = 4)
+        graft.pipeline.TextIndex.append(docs.where(col("doc_id") >= split), f.textIndex)
+      },
+      () => graft.pipeline.Embeddings.writeIvfIndex(spark.read.parquet(f.vectors), f.ivfIndex,
+        nlist = Clusters, pqK = 16, pqIters = 3))
   }
+
+  /** Remove the indexes so the next [[buildIndexes]] starts from nothing. */
+  def dropIndexes(f: Fixtures): Unit =
+    Seq(f.textIndex, f.ivfIndex).foreach { d =>
+      val p = java.nio.file.Paths.get(d)
+      if (java.nio.file.Files.exists(p))
+        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+          .forEach(x => java.nio.file.Files.delete(x))
+    }
 
   /** Run the tasks on their own threads; rethrow the first failure. */
   def concurrently(tasks: (() => Unit)*): Unit = {

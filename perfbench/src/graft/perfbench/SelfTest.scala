@@ -23,6 +23,9 @@ object SelfTest {
       def list(seed: Long) = (0 until wl.clients).map(c => wl.stream(seed, c, f).take(40).map(_.sql).toList)
       check(s"${wl.name}: the same seed gives the same statement list")(list(7) == list(7))
       check(s"${wl.name}: another seed gives another statement list")(list(7) != list(8))
+      check(s"${wl.name}: a client's statements vary within a run") {
+        (0 until wl.clients).forall(c => wl.stream(7, c, f).take(4 * wl.cycle).map(_.sql).toSet.size == 4 * wl.cycle)
+      }
       check(s"${wl.name}: every streamed statement has an expected answer") {
         val keys = wl.expectations(7, f).map(_.key).toSet
         (0 until wl.clients).forall(c => wl.stream(7, c, f).take(200).forall(s => keys(s.expected.key)))
@@ -39,6 +42,9 @@ object SelfTest {
       refused && Stats.tail(xs.take(40), 0.75) == 30.0
     }
     check("the median needs no samples beyond it")(Stats.median(Seq(3.0, 1.0, 2.0)) == 2.0)
+    check("the median of an even count is the mean of the middle two") {
+      Stats.median(Seq(4.0, 1.0, 3.0, 2.0)) == 2.5
+    }
 
     check("self time subtracts the union of child intervals on nested spans") {
       val spans = Seq(

@@ -27,9 +27,12 @@ object Stats {
   def tailText(xs: Seq[Double], p: Double): String =
     try f"${tail(xs, p)}%.1f" catch { case _: Refused => s"refused (n=${xs.size})" }
 
+  /** The middle value, or the mean of the two middle values. */
   def median(xs: Seq[Double]): Double = {
     require(xs.nonEmpty, "median of no samples")
-    xs.sorted.apply(rank(xs.size, 0.5) - 1)
+    val s = xs.sorted
+    val n = s.size
+    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
   }
 
   def mean(xs: Seq[Double]): Double =

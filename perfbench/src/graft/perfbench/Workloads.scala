@@ -1,7 +1,7 @@
 package graft.perfbench
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{count, expr, max, min}
+import org.apache.spark.sql.functions.expr
 
 /** How a statement's expected rows are computed in set-up, through a
   * route that bypasses QueryService, its result files and the wire. */
@@ -38,22 +38,6 @@ object Expected {
     def key: String = s"direct:$sql"
     def frame(spark: SparkSession, f: Fixtures): DataFrame = spark.sql(sql)
   }
-
-  /** A write-back read over what `sql` selects: (n, lo, hi) of `id`. */
-  final case class Summary(sql: String, id: String) extends Expected {
-    def key: String = s"summary:$sql"
-    def frame(spark: SparkSession, f: Fixtures): DataFrame =
-      spark.sql(sql).agg(count("*").as("n"), min(id).as("lo"), max(id).as("hi"))
-  }
-
-  /** The one-row acknowledgment a command statement materializes. */
-  case object Ack extends Expected {
-    def key: String = "ack"
-    def frame(spark: SparkSession, f: Fixtures): DataFrame = {
-      import spark.implicits._
-      Seq("OK").toDF("result")
-    }
-  }
 }
 
 final case class Statement(kind: String, sql: String, expected: Expected)
@@ -82,12 +66,10 @@ sealed trait Workload {
   def cycle: Int
   /** Rows of each expected answer the paging plan can reach. */
   def reach: Int = pages.filter(_.forward).map(_.limit).sum
-
-  protected def rng(seed: Long, client: Int) = new java.util.Random(seed * 1000003L + client)
 }
 
 object Workloads {
-  val all: Seq[Workload] = Seq(ServeSmall, BulkPage, CurationWrite)
+  val all: Seq[Workload] = Seq(ServeSmall, BulkPage)
 
   def byName(n: String): Workload = all.find(_.name == n).getOrElse(
     throw new IllegalArgumentException(
@@ -109,8 +91,6 @@ object Workloads {
     s"$a $b"
   }
 
-  private def pick[T](r: java.util.Random, xs: IndexedSeq[T]): T = xs(r.nextInt(xs.size))
-
   /** Small serving statements: every result has at most 100 rows and
     * the client reads one 100-row JSON page. */
   object ServeSmall extends Workload {
@@ -118,7 +98,12 @@ object Workloads {
     val clients = 4
     val pages = Seq(PageReq(100, forward = true, arrow = false))
     val needs: Set[Fixtures.Part] = Set(Fixtures.Tables, Fixtures.Indexes)
-    private val PoolPerKind = 1
+    /** Statements drawn per kind. Client `c` takes a kind's statements
+      * in pool order starting at the `c`-th, so at any time the clients
+      * run different statements, and each client varies its statements
+      * from cycle to cycle. The pool is small because every statement's
+      * answer is computed in the run. */
+    val PoolPerKind = 4
 
     def pool(seed: Long, f: Fixtures): Map[String, IndexedSeq[Statement]] = {
       val r = new java.util.Random(seed)
@@ -168,30 +153,28 @@ object Workloads {
       val shapes = Seq("lineitem" -> (() => keyRange), "orders" -> (() => ordersRange),
         "q6" -> (() => q6), "corpus_search" -> (() => search), "corpus_ann" -> (() => ann),
         "corpus_hybrid" -> (() => hybrid))
-      shapes.map { case (k, make) =>
-        k -> IndexedSeq.fill(PoolPerKind)(make())
-      }.toMap
+      shapes.map { case (k, make) => k -> IndexedSeq.fill(PoolPerKind)(make()) }.toMap
     }
 
     /** Statement mix: 40% read_files, 20% each retrieval TVF, as a fixed
       * five-statement cycle: a 100-row key-range read (lineitem and orders
       * in turn), `corpus_search`, `corpus_ann`, the Q6-style aggregate,
       * `corpus_hybrid`. Every cycle holds the same mix and delivers the
-      * same rows; the seed picks the statements. */
+      * same rows. */
     val cycle = 5
 
     def stream(seed: Long, client: Int, f: Fixtures): Iterator[Statement] = {
       val p = pool(seed, f)
-      val r = rng(seed, client)
       Iterator.from(0).map { i =>
-        val kind = i % cycle match {
-          case 0 => if ((i / cycle + client) % 2 == 0) "lineitem" else "orders"
-          case 1 => "corpus_search"
-          case 2 => "corpus_ann"
-          case 3 => "q6"
-          case _ => "corpus_hybrid"
+        val j = i / cycle
+        val (kind, nth) = i % cycle match {
+          case 0 => (if ((j + client) % 2 == 0) "lineitem" else "orders", j / 2)
+          case 1 => ("corpus_search", j)
+          case 2 => ("corpus_ann", j)
+          case 3 => ("q6", j)
+          case _ => ("corpus_hybrid", j)
         }
-        pick(r, p(kind))
+        p(kind)((nth + client) % PoolPerKind)
       }
     }
 
@@ -234,65 +217,11 @@ object Workloads {
     /** The pool in a seeded order, over and over. */
     def stream(seed: Long, client: Int, f: Fixtures): Iterator[Statement] = {
       val p = pool(seed, f)
-      val order = scala.util.Random.javaRandomToRandom(rng(seed, client)).shuffle(p.indices.toList)
+      val r = new java.util.Random(seed * 1000003L + client)
+      val order = scala.util.Random.javaRandomToRandom(r).shuffle(p.indices.toList)
       Iterator.continually(order).flatten.map(p)
     }
 
     def expectations(seed: Long, f: Fixtures): Seq[Expected] = pool(seed, f).map(_.expected)
-  }
-
-  /** The README curation script, one statement at a time per client:
-    * quality filter, write-back into a per-client per-iteration
-    * directory, an aggregate over the fresh files, a small scoring
-    * statement. */
-  object CurationWrite extends Workload {
-    val name = "curation_write"
-    val clients = 2
-    val pages = Seq(PageReq(100, forward = true, arrow = false))
-    val needs: Set[Fixtures.Part] = Set(Fixtures.Corpus)
-    /** One script iteration. */
-    val cycle = 4
-    private val Thresholds = IndexedSeq("0.08", "0.10", "0.12")
-    private val Ranges = 8
-
-    private def ranges(seed: Long): IndexedSeq[(Int, Int)] = {
-      val r = new java.util.Random(seed)
-      IndexedSeq.fill(Ranges) {
-        val a = r.nextInt(Fixtures.Docs - 100)
-        (a, a + 20 + r.nextInt(80))
-      }
-    }
-
-    private def filtered(f: Fixtures, t: String) =
-      s"select doc_id, quality from corpus_quality('${f.docs}') where quality > $t"
-    private def scoring(f: Fixtures, lo: Int, hi: Int) =
-      s"select doc_id, n_tokens, quality from corpus_quality('${f.docs}') " +
-        s"where doc_id between $lo and $hi order by doc_id"
-
-    def stream(seed: Long, client: Int, f: Fixtures): Iterator[Statement] = {
-      val r = rng(seed, client)
-      val rs = ranges(seed)
-      Iterator.from(0).flatMap { i =>
-        val t = pick(r, Thresholds)
-        val (lo, hi) = pick(r, rs)
-        val dir = s"${f.writeback}/c$client/i$i"
-        val q = filtered(f, t)
-        Seq(
-          Statement("quality_filter", s"$q order by doc_id", Expected.Direct(s"$q order by doc_id")),
-          Statement("write_back", s"insert overwrite directory '$dir' using parquet $q",
-            Expected.Ack),
-          Statement("read_back",
-            s"select count(*) as n, min(doc_id) as lo, max(doc_id) as hi from read_files('$dir')",
-            Expected.Summary(q, "doc_id")),
-          Statement("quality_score", scoring(f, lo, hi), Expected.Direct(scoring(f, lo, hi))))
-      }
-    }
-
-    def expectations(seed: Long, f: Fixtures): Seq[Expected] =
-      Thresholds.flatMap { t =>
-        val q = filtered(f, t)
-        Seq(Expected.Direct(s"$q order by doc_id"), Expected.Summary(q, "doc_id"))
-      } ++ ranges(seed).map { case (lo, hi) => Expected.Direct(scoring(f, lo, hi)) } :+
-        Expected.Ack
   }
 }
