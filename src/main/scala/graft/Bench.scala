@@ -1,14 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
-
 import java.util.Locale
 
 /** Per-round benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, forcing full materialization through the noop
   * sink (count() would let column pruning skip projected compute).
   * Prints one JSON line {"metric","value","unit","queries","sf",
-  * "errors"} AND writes it to SPARK_GRAFT_BENCH_OUT (default
-  * bench_out.json), so consumers never have to scrape logs. All
+  * "errors"} AND writes it to files (see [[runTarget]]: a per-run
+  * copy always, SPARK_GRAFT_BENCH_OUT, default bench_out.json, at the
+  * reference core count), so consumers never have to scrape logs. All
   * number formatting is Locale.ROOT (a comma-decimal JVM locale would
   * otherwise emit invalid JSON). Failed queries are excluded from the
   * total and listed under "errors".
@@ -99,17 +98,40 @@ object Bench {
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       }
     } catch { case _: Exception => Map.empty }
+
+  /** Core counts and out files of one run, decided from the
+    * environment alone. `refCpus` is the CPU count the committed
+    * reference epoch (bench_ref.json and the control baselines) was
+    * measured at. Both counts parse as integers once — garbage fails
+    * loudly — and compare as numbers.
+    *
+    * Every run writes its own immutable `<out>_c<cpus>` copy: a round
+    * benches the same tree at two CPU counts, and before r19 the later
+    * (low-core) run overwrote the main run's per-query map in the
+    * single mutable out file — the per-query and scaling comparisons
+    * ran empty for two rounds. Only a run at the
+    * reference count also overwrites the mutable out file, which the
+    * retime discipline and the bench_ref merge read. */
+  private[graft] final case class RunTarget(cpus: Int, refCpus: Int,
+                                            out: String, perRunOut: String) {
+    def atRef: Boolean = cpus == refCpus
+    def outFiles: Seq[String] = (if (atRef) Seq(out) else Nil) :+ perRunOut
+  }
+
+  private[graft] def runTarget(env: String => Option[String]): RunTarget = {
+    val cpus = Engine.countFrom(env, "SPARK_GRAFT_CPUS", 32)
+    val out = env("SPARK_GRAFT_BENCH_OUT").getOrElse("bench_out.json")
+    val dot = out.lastIndexOf('.')
+    val perRun =
+      if (dot > out.lastIndexOf('/')) s"${out.take(dot)}_c$cpus${out.drop(dot)}"
+      else s"${out}_c$cpus"
+    RunTarget(cpus, Engine.countFrom(env, "SPARK_GRAFT_REF_CPUS", 32), out, perRun)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    // The CPU count the committed reference epoch (bench_ref.json and
-    // the control baselines) was measured at. Control ratios from a
-    // run at a DIFFERENT core count compare apples to oranges — the
-    // r18 c8 scaling run read inflated:true purely because the
-    // controls themselves got 4x fewer cores — so such runs carry no
-    // box-health claim (inflated:false, controls omitted).
-    val refCpus = sys.env.getOrElse("SPARK_GRAFT_REF_CPUS", "32")
+    val target = runTarget(sys.env.get)
+    val outPath = target.out
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt)
     val noiseReps = math.max(0, sys.env.getOrElse("SPARK_GRAFT_NOISE_REPS", "2").toInt)
     // default ref: the COMMITTED min-merged per-query reference
@@ -123,14 +145,7 @@ object Bench {
       else outPath
     val refTimes = referenceTimes(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", defaultRef), sfDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new sources.GraftExtensions)
-      .getOrCreate()
-    Engine.tune(spark)
+    val spark = Engine.session("graft-bench", target.cpus)
     // Catalog statistics, OUTSIDE the timed region (production shape:
     // ANALYZE TABLE runs once after load, queries amortize it) — the
     // bench then times the stats-backed CBO plans users would get.
@@ -281,9 +296,11 @@ object Bench {
     // ref-less run, or a run at a non-reference core count carries no
     // health claim (empty controls object) — the reference control
     // times were measured at refCpus cores, so at any other count the
-    // ratio conflates core count with box sickness.
+    // ratio conflates core count with box sickness (the r18 c8 scaling
+    // run read inflated:true purely because the controls themselves
+    // got 4x fewer cores).
     val controlRatios: Seq[(String, Double)] =
-      if (refTimes.isEmpty || only.nonEmpty || cpus != refCpus) Seq.empty
+      if (refTimes.isEmpty || only.nonEmpty || !target.atRef) Seq.empty
       else results.collect {
         case (k, v, true) if ControlQueries.contains(k) && refTimes.contains(k) =>
           k -> v / refTimes(k)
@@ -297,39 +314,23 @@ object Bench {
         f"${controlsMedian.get}%.2fx ref (${controlRatios.map { case (k, r) =>
           f"$k=$r%.2f" }.mkString(", ")}); re-run in a quieter window " +
         "before this stands as a round number or merges into bench_ref")
-    if (refTimes.nonEmpty && only.isEmpty && cpus != refCpus)
-      System.err.println(s"[bench] NOTE: run at $cpus cores != reference epoch " +
-        s"$refCpus — control ratios would conflate core count with box " +
-        "health, so this run carries no inflated/controls claim")
+    if (!target.atRef)
+      System.err.println(s"[bench] NOTE: run at ${target.cpus} cores != reference " +
+        s"epoch ${target.refCpus} — no inflated/controls claim, and $outPath is " +
+        s"left as is (this run's map: ${target.perRunOut})")
     val controlsJson = controlRatios.map { case (k, r) => "\"" + k + "\":" + num(r) }
       .mkString("{", ",", "}")
     val healthJson = s""""controls":$controlsJson,""" +
       controlsMedian.map(m => s""""controls_median":${num(m)},""").getOrElse("") +
       s""""inflated":$inflated,"""
-    // cpus is an env string; emit numeric JSON only when it is one
-    val cpusJson = if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else jstr(cpus)
     val line = s"""{"metric":"total","value":${num(total)},"unit":"sec",""" +
-      healthJson + s""""cpus":$cpusJson,""" +
+      healthJson + s""""cpus":${target.cpus},""" +
       s""""queries":$qs,"sf":${jstr(sfDir)},"errors":$errors,"retimed":$retimedJson}"""
     println(line)
-    val absOut = java.nio.file.Paths.get(outPath).toAbsolutePath
-    try java.nio.file.Files.writeString(absOut, line + "\n")
-    catch { case e: Exception => System.err.println(s"[bench] write $outPath: ${e.getMessage}") }
-    // Per-run IMMUTABLE copy, keyed by core count: the driver benches
-    // the same tree at two CPU counts, and before r19 the later (low-
-    // core) run overwrote the main run's per-query map in the single
-    // mutable out file — the driver's per-query and scaling
-    // comparisons ran empty for two rounds. The final summary line
-    // points here, so each run's map survives the other.
-    val immutableOut = {
-      val s = absOut.toString
-      val dot = s.lastIndexOf('.')
-      val p = if (dot > s.lastIndexOf('/')) s.substring(0, dot) + s"_c$cpus" + s.substring(dot)
-              else s + s"_c$cpus"
-      java.nio.file.Paths.get(p)
+    target.outFiles.foreach { f =>
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(f), line + "\n")
+      catch { case e: Exception => System.err.println(s"[bench] write $f: ${e.getMessage}") }
     }
-    try java.nio.file.Files.writeString(immutableOut, line + "\n")
-    catch { case e: Exception => System.err.println(s"[bench] write $immutableOut: ${e.getMessage}") }
     // The LAST stdout line is a SHORT self-contained summary: a
     // log-tail capture that truncates the full per-query line from the
     // front still ends with one complete parseable JSON object (with a
@@ -337,8 +338,8 @@ object Bench {
     // in the file stays authoritative.
     println(s"""{"metric":"total","value":${num(total)},"unit":"sec",""" +
       s""""n_queries":${results.count(_._3)},"inflated":$inflated,""" +
-      s""""cpus":$cpusJson,"sf":${jstr(sfDir)},"errors":$errors,""" +
-      s""""queries_file":${jstr(immutableOut.toString)}}""")
+      s""""cpus":${target.cpus},"sf":${jstr(sfDir)},"errors":$errors,""" +
+      s""""queries_file":${jstr(java.nio.file.Paths.get(target.perRunOut).toAbsolutePath.toString)}}""")
     spark.stop()
   }
 }

@@ -23,17 +23,32 @@ object Engine {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def session(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Positive integer from an env knob such as `SPARK_GRAFT_CPUS`, or
+    * `default` when unset. Anything else fails loudly: a core count
+    * that silently fell back would mislabel every number a run
+    * records. */
+  def countFrom(env: String => Option[String], name: String, default: Int): Int =
+    env(name).fold(default) { raw =>
+      raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$name must be a positive integer, got '$raw'"))
+    }
+
+  /** Core count for `local[N]`: `SPARK_GRAFT_CPUS`, else `default`. */
+  def envCpus(default: Int = 32): Int = countFrom(sys.env.get, "SPARK_GRAFT_CPUS", default)
+
+  /** The one session builder every main uses (ClusterCheck aside: it
+    * needs a local-cluster master). FAIR mode lets QueryService's
+    * per-slot pools share the cluster; a main that sets no
+    * `spark.scheduler.pool` runs every job in FAIR's default pool,
+    * which schedules FIFO, exactly like FIFO mode. */
+  def session(appName: String = "graft", cpus: Int = envCpus()): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // FAIR mode + QueryService's per-slot pools = concurrent service
-      // queries share the cluster instead of head-of-line blocking
-      // (context-level conf: must be set at session creation)
+      // context-level conf: must be set at session creation
       .config("spark.scheduler.mode", "FAIR")
       .withExtensions(new sources.GraftExtensions)
       .getOrCreate()
@@ -41,8 +56,8 @@ object Engine {
     spark
   }
 
-  /** Runtime conf safe to apply to an externally-built session (Verify /
-    * Bench / tests build their own). Idempotent. */
+  /** Runtime conf safe to apply to an externally-built session (tests
+    * and ClusterCheck build their own). Idempotent. */
   def tune(spark: SparkSession): Unit = {
     val c = spark.conf
     c.set("spark.sql.adaptive.enabled", "true")
@@ -76,8 +91,8 @@ object Engine {
     // joinReorder stays OFF by default — a measured decision, not an
     // oversight: on the analyzed TPC-H surface the DP reorder never
     // beat the declared fact-first orders and regressed q8 3.4× / q9
-    // 1.9× (tools.CboAudit), because Spark's reorder cost model
-    // prices intermediate ROWS but not broadcast-ability, so it
+    // 1.9× (tools.QueryProfile --reorder), because Spark's reorder
+    // cost model prices intermediate ROWS but not broadcast-ability, so it
     // happily moves a big fact⋈dim chain ahead of the selective
     // filters that make each step broadcastable. It exists to rescue
     // PESSIMAL declared orders (PlanSpec proves the mechanism:

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,15 +8,7 @@ object Verify {
     SparkEntry.oracleSfDir = sfDir // path-referencing oracles (q_rowid)
     // Optional 3rd arg: comma-separated query-name subset (local iteration aid).
     val only = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new sources.GraftExtensions)
-      .getOrCreate()
-    Engine.tune(spark)
+    val spark = Engine.session("graft-verify", Engine.envCpus(4))
     // stats-backed catalog tables: plans carry real cardinalities and
     // the verify run exercises the same catalog-relation path
     // production uses after ANALYZE TABLE. (Join reordering itself

@@ -272,7 +272,7 @@ object Multimodal {
     * codegen'd bit_count(xor) terms and candidate rows carry 16 bytes,
     * never strings) exploded into `64/bandBits` chunk values, chunk c
     * = bits [c·bandBits, (c+1)·bandBits) MSB-first. Exposed to
-    * FuzzyScaleProbe so the candidate-volume measurement shares this
+    * `ScaleProbe fuzzy` so the candidate-volume measurement shares this
     * exact derivation with the production join. */
   private[graft] def phashChunks(media: DataFrame, bandBits: Int): DataFrame = {
     require(bandBits == 8 || bandBits == 16,

@@ -322,7 +322,12 @@ object TextDedup {
     * same label propagation instead of reimplementing it. NOTE: eagerly
     * materializes the pair frame at call time (one Spark job); with no
     * checkpoint dir configured the fallback is localCheckpoint, whose
-    * blocks do not survive executor loss. */
+    * blocks do not survive executor loss.
+    *
+    * `maxIters` bounds only the distributed propagation loop. The
+    * driver fast path (edge list within `spark.graft.clusters.maxLocalEdges`)
+    * returns exact components whatever `maxIters` is, so a small
+    * `maxIters` truncates labels only on graphs over the edge cap. */
   def clustersFromPairs(docs: DataFrame, pairFrame: DataFrame,
                         maxIters: Int = 20): DataFrame = {
     // Materialize the pair join BEFORE symmetrizing: a union of the
@@ -351,7 +356,10 @@ object TextDedup {
       (Int.MaxValue - 1).toLong)
     // One CAPPED collect decides the route AND fetches the edges: a
     // limit(cap+1) over the materialized blocks never ships more than
-    // cap+1 rows to the driver, whichever route wins.
+    // cap+1 rows to the driver, whichever route wins. On the
+    // large-graph route that is a one-time cost per call: at most
+    // cap+1 rows (default 1M edges, ~16 MB) reach the driver and are
+    // dropped before the distributed loop starts.
     val headEdges: Array[org.apache.spark.sql.Row] =
       if (localEdgeCap >= 1) pairs.limit(localEdgeCap.toInt + 1).collect()
       else Array.empty
@@ -1101,7 +1109,7 @@ object TextDedup {
     NativeExpressions.simhash_bits(shingleHashes(text, k))
 
   /** Aligned band-chunk rows over a [[withHashes]] frame — the simhash
-    * candidate join's bucketing, exposed to FuzzyScaleProbe so the
+    * candidate join's bucketing, exposed to `ScaleProbe fuzzy` so the
     * candidate-volume measurement shares this exact derivation. */
   private[graft] def simhashChunks(sh: DataFrame, bandBits: Int): DataFrame = {
     require(bandBits == 8 || bandBits == 16,

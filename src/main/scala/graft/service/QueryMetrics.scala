@@ -18,7 +18,9 @@ import java.util.concurrent.ConcurrentHashMap
   * well-pruned query reads a fraction of the table), shuffle
   * read/write are the exchange traffic (THE 100 TB cost driver), and
   * spill bytes nonzero means partitions outgrew executor memory — the
-  * signal to repartition or salt. */
+  * signal to repartition or salt. `shuffleReadRecords` counts exchange
+  * rows (the scale probes' fusion-bound check); the wire response
+  * leaves it out. */
 final case class QueryMetrics(
     numJobs: Int,
     numStages: Int,
@@ -33,7 +35,8 @@ final case class QueryMetrics(
     diskSpillBytes: Long,
     executorRunTimeMs: Long,
     wallTimeMs: Long,
-    queueWaitMs: Long)
+    queueWaitMs: Long,
+    shuffleReadRecords: Long)
 
 /** SparkListener that attributes task metrics to queries by job
   * group id (QueryService runs each query under a job group named by
@@ -56,7 +59,7 @@ final class MetricsCollector(maxTracked: Int = 10000) extends SparkListener {
   private final class Acc {
     var jobs = 0; var stages = 0; var tasks = 0L
     var inRows = 0L; var inBytes = 0L; var outRows = 0L; var outBytes = 0L
-    var shufRead = 0L; var shufWrite = 0L
+    var shufRead = 0L; var shufReadRecords = 0L; var shufWrite = 0L
     var memSpill = 0L; var diskSpill = 0L
     var runMs = 0L
     @volatile var wallMs = 0L
@@ -116,6 +119,7 @@ final class MetricsCollector(maxTracked: Int = 10000) extends SparkListener {
       acc.outRows += m.outputMetrics.recordsWritten
       acc.outBytes += m.outputMetrics.bytesWritten
       acc.shufRead += m.shuffleReadMetrics.totalBytesRead
+      acc.shufReadRecords += m.shuffleReadMetrics.recordsRead
       acc.shufWrite += m.shuffleWriteMetrics.bytesWritten
       acc.memSpill += m.memoryBytesSpilled
       acc.diskSpill += m.diskBytesSpilled
@@ -145,7 +149,8 @@ final class MetricsCollector(maxTracked: Int = 10000) extends SparkListener {
       a.synchronized {
         QueryMetrics(a.jobs, a.stages, a.tasks, a.inRows, a.inBytes,
           a.outRows, a.outBytes, a.shufRead, a.shufWrite,
-          a.memSpill, a.diskSpill, a.runMs, a.wallMs, a.queueWaitMs)
+          a.memSpill, a.diskSpill, a.runMs, a.wallMs, a.queueWaitMs,
+          a.shufReadRecords)
       }
     }
 

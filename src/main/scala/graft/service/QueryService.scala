@@ -49,8 +49,8 @@ final class QueryService(
   // SparkContext, shared external catalog, same injected extensions —
   // fresh SQLConf and temp-view namespace) with CBO join reordering
   // ON, while Engine.tune keeps it OFF for engine-authored DataFrame
-  // paths. The split is a measured decision (tools.CboAudit): the DP
-  // reorder regressed hand-ordered fact-first TPC-H declarations (q8
+  // paths. The split is a measured decision (tools.QueryProfile
+  // --reorder): the DP reorder regressed hand-ordered fact-first TPC-H declarations (q8
   // 3.4×, q9 1.9× — Spark's cost model prices rows, not
   // broadcast-ability) but is exactly the rescue arbitrary
   // service-submitted SQL needs, since ad-hoc authors don't order
@@ -416,11 +416,6 @@ final class QueryService(
     } catch { case _: Exception => () } // unreadable root = empty history
   }
 
-  /** Detach the service from the shared SparkContext: without this,
-    * every construction (service restarts within one driver, test
-    * suites) leaves another MetricsCollector on the listener bus, each
-    * processing every event and holding up to maxTracked accumulator
-    * maps. Idempotent. */
   /** Startup hook for serving deployments: prime the session's
     * cold-start machinery (JIT, codegen framework, parquet readers,
     * exchange plumbing — see [[Warmup]]) BEFORE the listener accepts
@@ -432,6 +427,11 @@ final class QueryService(
     * SQL session; returns wall seconds spent. */
   def warmup(): Double = Warmup.prime(sqlSession)
 
+  /** Detach the service from the shared SparkContext: without this,
+    * every construction (service restarts within one driver, test
+    * suites) leaves another MetricsCollector on the listener bus, each
+    * processing every event and holding up to maxTracked accumulator
+    * maps. Idempotent. */
   def close(): Unit = {
     spark.sparkContext.removeSparkListener(metricsCollector)
     try spark.streams.removeListener(streamingListener)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Fresh-JVM first-query latency for the heaviest SERVING plan — the
@@ -23,15 +22,7 @@ object ColdStartProbe {
     require(args.length == 4,
       "usage: ColdStartProbe <textIndexDir> <ivfIndexDir> <sfDir> <warm 0|1>")
     val Array(tidx, ivf, sfDir, warmFlag) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.sources.GraftExtensions)
-      .getOrCreate()
-    graft.Engine.tune(spark)
+    val spark = graft.Engine.session("graft-coldstart")
     val tWarm =
       if (warmFlag == "1") graft.service.Warmup.prime(spark) else 0.0
     val t0 = System.nanoTime()

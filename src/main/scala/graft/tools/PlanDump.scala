@@ -1,16 +1,15 @@
 package graft.tools
 
 import graft.{Engine, SparkEntry}
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for named SparkEntry queries to files —
   * the optimization round's plan evidence
   * (`plans/r<N>/<query>_{before,after}.txt`).
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> [q1,q2,...]
-  * (no query list = every declared query). Session setup mirrors
-  * graft.Bench exactly (same master/conf/stats/fixtures), so the plans
-  * are the ones the bench times.
+  * (no query list = every declared query). Session setup is graft.Bench's
+  * (Engine.session, catalog stats, index fixtures), so the plans are
+  * the ones the bench times.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -19,15 +18,7 @@ object PlanDump {
     val suffix = args(1)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.sources.GraftExtensions)
-      .getOrCreate()
-    Engine.tune(spark)
+    val spark = Engine.session("graft-plandump")
     Engine.analyzeTables(spark, sfDir)
     SparkEntry.prepareIndexFixtures(spark, sfDir)
     java.nio.file.Files.createDirectories(outDir)

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.{Engine, SparkEntry}
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
@@ -11,10 +10,16 @@ import java.util.concurrent.atomic.LongAdder
   * the "where does the wall-clock actually go" companion to PlanDump
   * (initial plans hide AQE stage reuse; this measures what executed).
   *
-  * Usage: runMain graft.tools.QueryProfile q1[,q2,...]
+  * Usage: runMain graft.tools.QueryProfile q1[,q2,...] [--reorder]
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_PROF_REPS
   * (default 2 — reports the LAST rep, so JIT/first-use costs are
   * excluded and the numbers match the bench's min-of-reps regime).
+  *
+  * `--reorder` is the CBO join-reorder audit: each query is profiled
+  * twice, `spark.sql.cbo.joinReorder.enabled` on then off, and each
+  * run also prints the optimized plan's leaves in join order — a
+  * cost-model misstep on a specific query is then attributable before
+  * it ships (the audit behind Engine.tune's reorder-off default).
   */
 object QueryProfile {
   private class Acc {
@@ -29,19 +34,12 @@ object QueryProfile {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: QueryProfile q1[,q2,...]")
+    require(args.nonEmpty, "usage: QueryProfile q1[,q2,...] [--reorder]")
     val names = args(0).split(",").toSeq
+    val reorderAudit = args.drop(1).contains("--reorder")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_PROF_REPS", "2").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.sources.GraftExtensions)
-      .getOrCreate()
-    Engine.tune(spark)
+    val spark = Engine.session("graft-profile")
     Engine.analyzeTables(spark, sfDir)
     SparkEntry.prepareIndexFixtures(spark, sfDir)
 
@@ -81,8 +79,14 @@ object QueryProfile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    names.foreach { name =>
+    val reorderConf = "spark.sql.cbo.joinReorder.enabled"
+    val settings: Seq[Option[Boolean]] =
+      if (reorderAudit) Seq(Some(true), Some(false)) else Seq(None)
+    for (name <- names; reorder <- settings) {
       val fn = SparkEntry.queries(name)
+      val defaultReorder = spark.conf.get(reorderConf)
+      reorder.foreach(r => spark.conf.set(reorderConf, r.toString))
+      val tag = reorder.fold("")(r => s" reorder=$r")
       var rep = 0
       while (rep < reps) {
         stageAcc.clear(); stageName.clear(); jobStages.clear(); jobWall.clear()
@@ -91,12 +95,18 @@ object QueryProfile {
         System.gc()
         collecting = rep == reps - 1
         val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val df = fn(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
         if (collecting) {
-          // let the async listener bus drain before reading
-          Thread.sleep(300)
-          println(f"%n=== $name rep$rep wall ${wall}%.3f s ===")
+          org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+          println(f"%n=== $name$tag rep$rep wall ${wall}%.3f s ===")
+          if (reorder.isDefined) {
+            println("optimized-plan leaves in join order:")
+            df.queryExecution.optimizedPlan.collectLeaves().zipWithIndex.foreach {
+              case (l, i) => println(f"  leaf$i%02d ${l.toString.linesIterator.next().take(90)}")
+            }
+          }
           val jobs = jobWall.keySet().toArray(Array.empty[Integer]).map(_.toInt).sorted
           jobs.foreach { jid =>
             val (ts, te, desc) = jobWall.get(jid)
@@ -123,6 +133,7 @@ object QueryProfile {
         }
         rep += 1
       }
+      spark.conf.set(reorderConf, defaultReorder)
     }
     spark.stop()
   }

@@ -40,4 +40,28 @@ class BenchRefSpec extends AnyFunSuite {
     assert(text.contains("\"sf\":\"/root/testdata/sf0.1\""),
       "bench_ref.json must carry sf /root/testdata/sf0.1")
   }
+
+  private def env(kv: (String, String)*): String => Option[String] = kv.toMap.get
+
+  test("Bench core counts parse as integers, compare as numbers, and fail loudly on garbage") {
+    val t = Bench.runTarget(env("SPARK_GRAFT_CPUS" -> " 32", "SPARK_GRAFT_REF_CPUS" -> "032"))
+    assert(t.cpus == 32 && t.refCpus == 32 && t.atRef)
+    val d = Bench.runTarget(env())
+    assert(d.cpus == 32 && d.refCpus == 32)
+    assert(!Bench.runTarget(env("SPARK_GRAFT_CPUS" -> "8")).atRef)
+    Seq("eight", "", "0", "-4", "3.5").foreach { bad =>
+      intercept[IllegalArgumentException](Bench.runTarget(env("SPARK_GRAFT_CPUS" -> bad)))
+      intercept[IllegalArgumentException](Bench.runTarget(env("SPARK_GRAFT_REF_CPUS" -> bad)))
+    }
+  }
+
+  test("only a Bench run at the reference core count overwrites the mutable out file") {
+    assert(Bench.runTarget(env()).outFiles == Seq("bench_out.json", "bench_out_c32.json"))
+    val c8 = Bench.runTarget(env("SPARK_GRAFT_CPUS" -> "8",
+      "SPARK_GRAFT_BENCH_OUT" -> "runs/a.b/out.json"))
+    assert(c8.outFiles == Seq("runs/a.b/out_c8.json"))
+    val ref8 = Bench.runTarget(env("SPARK_GRAFT_CPUS" -> "8", "SPARK_GRAFT_REF_CPUS" -> "8",
+      "SPARK_GRAFT_BENCH_OUT" -> "runs/a.b/out"))
+    assert(ref8.outFiles == Seq("runs/a.b/out", "runs/a.b/out_c8"))
+  }
 }

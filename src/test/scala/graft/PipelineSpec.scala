@@ -1748,4 +1748,71 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     val en = toks.count(Set("the", "and", "of", "is", "a"))
     assert(row.getAs[Long]("score_en") == en)
   }
+
+  test("scale-probe replicas: k× rows, replica 0 is the base, ids offset per replica") {
+    import graft.tools.Replicas
+    val k = 3
+    val off = Replicas.nextId(docs, "doc_id")
+    val baseRows = docs.collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
+    Seq(Replicas.Salted, Replicas.Heaps).foreach { mode =>
+      val out = Replicas.documents(docs, k, mode, off)
+      assert(out.columns.toSeq == docs.columns.toSeq)
+      val rows = out.collect()
+      assert(rows.length == k * baseRows.size)
+      assert(rows.map(_.getAs[Long]("doc_id")).toSet ==
+        (for (i <- 0 until k; id <- baseRows.keys) yield id + i * off).toSet)
+      assert(rows.filter(_.getAs[Long]("doc_id") < off).toSet == baseRows.values.toSet)
+    }
+    val embOff = Replicas.nextId(emb, "vec_id")
+    val vecs = Replicas.embeddings(emb, k, embOff).collect()
+    assert(vecs.length == k * emb.count())
+    assert(vecs.filter(_.getLong(0) < embOff).toSet ==
+      emb.select("vec_id", "embedding").collect().toSet)
+    // replicated together, embeddings take the documents' stride
+    val baseVecIds = emb.select("vec_id").collect().map(_.getLong(0))
+    assert(Replicas.embeddings(emb, k, off).collect().map(_.getLong(0)).toSet ==
+      (for (i <- 0 until k; v <- baseVecIds) yield v + i * off).toSet)
+  }
+
+  test("scale-probe replicas: salt and Heaps insertion patterns, jitter bound, deterministic") {
+    import graft.tools.Replicas
+    val k = 3
+    val off = Replicas.nextId(docs, "doc_id")
+    val base = docs.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("text")).toMap
+    // single-spaced texts, so word positions are exact
+    val plain = base.filter { case (_, t) => t.nonEmpty && t.split(" ", -1).forall(w =>
+      w.nonEmpty && !w.exists(Character.isWhitespace)) }
+    assert(plain.size > base.size / 2)
+    def check(mode: Replicas.Text, salt: Int => String, period: Int => Int): Unit = {
+      val out = Replicas.documents(docs, k, mode, off).collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("text")).toMap
+      for (i <- 1 until k; (id, text) <- plain) {
+        val words = text.split(" ")
+        val toks = out(id + i * off).split(" ")
+        val p = period(i)
+        // a salt token after every p words that are followed by a space
+        val expected = (0 until (words.length - 1) / p).map(j => p + (p + 1) * j)
+        assert(toks.indices.filter(toks(_) == salt(i)) == expected, s"$mode replica $i doc $id")
+        assert(toks.filterNot(_ == salt(i)).toSeq == words.toSeq)
+      }
+    }
+    check(Replicas.Salted, i => s"zqr${i}salt", _ => 4)
+    check(Replicas.Heaps, _ => "zqrsalt", i => 3 + i)
+
+    val embOff = Replicas.nextId(emb, "vec_id")
+    val baseVec = emb.select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+    val vecs = Replicas.embeddings(emb, k, embOff).collect()
+    val deltas = for (r <- vecs.toSeq if r.getLong(0) >= embOff;
+                      src = baseVec(r.getLong(0) % embOff);
+                      (a, b) <- r.getSeq[Float](1).zip(src)) yield math.abs(a - b).toDouble
+    assert(deltas.size == (k - 1) * baseVec.values.map(_.size).sum)
+    assert(deltas.forall(_ <= 0.05 + 1e-6) && deltas.max > 0.01)
+
+    Seq(Replicas.Salted, Replicas.Heaps).foreach { mode =>
+      assert(Replicas.documents(docs, k, mode, off).collect().toSet ==
+        Replicas.documents(docs, k, mode, off).collect().toSet)
+    }
+    assert(vecs.toSet == Replicas.embeddings(emb, k, embOff).collect().toSet)
+  }
 }

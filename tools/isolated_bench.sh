@@ -119,7 +119,9 @@ for q in "${QUERIES[@]}"; do
     -cp "$CLASSES:/opt/spark/jars/*" graft.Bench >/dev/null 2>&1
   # failure fallback must stay a valid Python expression — a bare NaN
   # token would NameError the final heredoc and discard every result
-  s=$(python3 -c "import json,sys;print(json.load(open('$tmp'))['queries'].get('$q','float(\"nan\")'))" 2>/dev/null || echo "float('nan')")
+  # the per-run copy: Bench rewrites $tmp only at the reference core count
+  run="${tmp%.json}_c$CPUS.json"
+  s=$(python3 -c "import json,sys;print(json.load(open('$run'))['queries'].get('$q','float(\"nan\")'))" 2>/dev/null || echo "float('nan')")
   SEC[$q]="$s"
   echo "[isolated] $q ${s}s" >&2
 done

@@ -3,18 +3,22 @@
 #
 #   1. correctness gate at sf0.001 AND sf0.01 (Verify + DuckDB compare)
 #   2. full ScalaTest suite
-#   3. ClusterCheck (local[8] vs local-cluster hash parity)
-#   4. bench at sf0.1 — with the box-health controls: a run marked
+#   3. scale-probe smoke (tools/probe_smoke.sh: every ScaleProbe family
+#      at 1×/2× on sf0.01, report table headers vs the committed
+#      *_SCALE.md)
+#   4. ClusterCheck (local[8] vs local-cluster hash parity)
+#   5. bench at sf0.1 (at the reference core count: only such a run
+#      rewrites bench_out.json) — with the box-health controls: a run marked
 #      inflated:true (control median >1.3x the committed refs) is
 #      REPORTED loud, and the rest of the close-out switches to
 #      control-median NORMALIZATION (r17 verdict task 2: refs are
 #      all-time-best mins, so a persistently slower host would
 #      otherwise mark every run inflated and deadlock the close-out
 #      forever)
-#   5. min-merge into bench_ref.json (existing keys raw — min only
+#   6. min-merge into bench_ref.json (existing keys raw — min only
 #      lowers; NEW keys from an inflated run enter divided by the
 #      control median so a sick box can't loosen their gates)
-#   6. AUTO-ADJUDICATE every mover (>2.5x its committed ref x the
+#   7. AUTO-ADJUDICATE every mover (>2.5x its committed ref x the
 #      run's control median) with fresh JVMs at REPS=5 — no mover
 #      ships unadjudicated; the verdict ratio is vs_ref_normalized,
 #      normalized by the ADJUDICATION RUN'S OWN fresh-JVM control
@@ -28,8 +32,11 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 ROUND="${1:-}"
 CPUS="${SPARK_GRAFT_CPUS:-32}"
+[ "$CPUS" = "${SPARK_GRAFT_REF_CPUS:-32}" ] || {
+  echo "FAIL: the close-out benches at the reference core count" \
+    "(SPARK_GRAFT_REF_CPUS, default 32), not $CPUS"; exit 1; }
 
-echo "== [1/6] correctness gate (sf0.001, sf0.01)"
+echo "== [1/7] correctness gate (sf0.001, sf0.01)"
 for sf in 0.001 0.01; do
   out="/tmp/graft_closeout_verify_$sf"
   rm -rf "$out"
@@ -40,17 +47,20 @@ for sf in 0.001 0.01; do
     | grep -q " 0 fail" || { echo "FAIL: oracle mismatch at sf$sf"; exit 1; }
 done
 
-echo "== [2/6] sbt test"
+echo "== [2/7] sbt test"
 sbt -batch test > /tmp/closeout_sbt_test.log 2>&1 \
   || { tail -30 /tmp/closeout_sbt_test.log; echo "FAIL: sbt test"; exit 1; }
 grep -E "Tests: succeeded" /tmp/closeout_sbt_test.log | tail -1
 
-echo "== [3/6] ClusterCheck"
+echo "== [3/7] scale-probe smoke"
+tools/probe_smoke.sh /root/testdata/sf0.01
+
+echo "== [4/7] ClusterCheck"
 sbt -batch "runMain graft.ClusterCheck" > /tmp/closeout_cluster.log 2>&1 \
   || { tail -20 /tmp/closeout_cluster.log; echo "FAIL: ClusterCheck"; exit 1; }
 tail -2 cluster_check.json 2>/dev/null || true
 
-echo "== [4/6] bench at sf0.1 (fresh JVM, box-health controls)"
+echo "== [5/7] bench at sf0.1 (fresh JVM, box-health controls)"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -76,10 +86,10 @@ if python3 -c "import json,sys; sys.exit(0 if json.load(open('bench_out.json')).
 fi
 if [ -n "$ROUND" ]; then cp bench_out.json "BENCH_r$ROUND.json"; fi
 
-echo "== [5/6] min-merge into bench_ref.json"
+echo "== [6/7] min-merge into bench_ref.json"
 python3 tools/merge_bench_ref.py bench_out.json
 
-echo "== [6/6] mover auto-adjudication (fresh JVM, REPS=5)"
+echo "== [7/7] mover auto-adjudication (fresh JVM, REPS=5)"
 SPARK_GRAFT_ISO_MOVERS=bench_out.json SPARK_GRAFT_REPS=5 \
   tools/isolated_bench.sh /root/testdata/sf0.1 isolated_bench.json
 if [ -n "$ROUND" ]; then cp isolated_bench.json "ISOLATED_BENCH_r$ROUND.json"; fi

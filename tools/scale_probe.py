@@ -40,7 +40,10 @@ def run_bench(sf_dir: str, out_json: str, cpus: str = "32") -> dict:
     if r.returncode != 0:
         sys.stderr.write(r.stdout.decode()[-4000:])
         raise SystemExit(f"bench failed at {sf_dir} (rc {r.returncode})")
-    with open(out_json) as f:
+    # Bench's per-run copy: out_json itself is rewritten only by a run at
+    # the reference core count (SPARK_GRAFT_REF_CPUS)
+    root, ext = os.path.splitext(out_json)
+    with open(f"{root}_c{cpus}{ext}") as f:
         return json.load(f)
 
 
