@@ -815,8 +815,8 @@ object SparkEntry {
         .orderBy("o_orderkey")),
 
     // The reference's read_files('glob') table function surface
-    // (read_files_task.rs:64-115) — here via the SQL-rewrite in
-    // graft.sources.ReadFiles over the same parquet.
+    // (read_files_task.rs:64-115) — here through
+    // graft.sources.ReadFiles.sql, the service's statement entry.
     "q_read_files" -> ((s, d) => {
       Engine.tune(s)
       sources.ReadFiles.sql(s,
@@ -824,9 +824,8 @@ object SparkEntry {
           "WHERE l_orderkey < 50 ORDER BY l_orderkey, l_linenumber")
     }),
 
-    // The same TVF resolved NATIVELY by the analyzer via
-    // SparkSessionExtensions.injectTableFunction (GraftExtensions) —
-    // no SQL pre-pass; named args flow through NamedArgumentExpression.
+    // The same TVF through a bare spark.sql (no connection scope),
+    // with an explicit format=> named argument.
     "q_read_files_tvf" -> ((s, d) =>
       s.sql(s"SELECT l_orderkey, l_linenumber, l_quantity " +
         s"FROM read_files('$d/lineitem.parquet', format=>'parquet') " +

@@ -39,8 +39,7 @@ final class QueryService(
     connections: Connections = Connections(),
     maxTrackedStatuses: Int = 10000,
     maxConcurrentQueries: Int = 8,
-    queryTimeoutMs: Long = 0,
-    reorderJoins: Boolean = true) {
+    queryTimeoutMs: Long = 0) {
 
   private val statuses = new ConcurrentHashMap[String, QueryStatus]()
 
@@ -58,13 +57,13 @@ final class QueryService(
   // declaration). A child session rather than a per-statement conf
   // flip because SQLConf is session-scoped: flipping it on the host's
   // session would race concurrently-planning host queries. The child
-  // resolves catalog tables and read_files()/connections like the
-  // parent — the reference's service is a standalone server speaking
-  // SQL over storage connections, not over a host program's temp
-  // views, so parent temp views are deliberately out of contract.
-  // Reorder only engages for statements whose tables carry catalog
-  // statistics (CBO is inert without them) — `reorderJoins = false`
-  // opts a service out entirely.
+  // resolves catalog tables and the injected TVFs (read_files with
+  // this service's connections) like the parent — the reference's
+  // service is a standalone server speaking SQL over storage
+  // connections, not over a host program's temp views, so parent temp
+  // views are deliberately out of contract. Reorder only engages for
+  // statements whose tables carry catalog statistics (CBO is inert
+  // without them).
   private[graft] val sqlSession: SparkSession = {
     val s = spark.newSession()
     graft.Engine.tune(s)
@@ -78,7 +77,7 @@ final class QueryService(
     spark.conf.getAll.foreach { case (k, v) =>
       if (k.startsWith("spark.graft.")) s.conf.set(k, v)
     }
-    s.conf.set("spark.sql.cbo.joinReorder.enabled", reorderJoins.toString)
+    s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
     s
   }
 

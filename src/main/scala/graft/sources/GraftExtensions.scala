@@ -9,14 +9,12 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Catalyst-native registration of the reference's `read_files` table
-  * function — the "TVF injection" path SURVEY §7 reserved for when the
-  * SQL-rewrite needed upgrading. With the extension installed,
+  * function and the corpus TVFs. With the extension installed,
   * `SELECT ... FROM read_files('glob' [, name=>'value']...)` resolves
-  * through the analyzer like any built-in TVF: no pre-pass over the
-  * SQL text, string literals are naturally inert, and the produced
-  * plan is the ordinary file-source relation (full pushdown/pruning).
-  * The regex-rewrite path (ReadFiles.sql) remains for sessions built
-  * without extensions.
+  * through the analyzer like any built-in TVF: string literals are
+  * naturally inert, and the produced plan is the ordinary file-source
+  * relation (full pushdown/pruning). Every TVF resolves `connection=>`
+  * against the connections [[ReadFiles.sql]] scopes to its statement.
   *
   * Install via `.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.sources.GraftExtensions`.
@@ -472,9 +470,7 @@ object CorpusSearchTVF {
       s"corpus_search: maxscore/theta_rows apply to mode=>'bm25' " +
         s"(the BM25 pruned serving route), got mode '$mode'")
     val spark = SparkSession.active
-    ReadFilesTVF.connections.applyTo(spark)
-    val resolve = (p: String) =>
-      ReadFilesTVF.connections.resolve(opts.get("connection"), p)
+    val resolve = (p: String) => ReadFiles.resolve(opts.get("connection"), p)
     val resolved = resolve(path)
     import org.apache.spark.sql.functions.{col, lit}
     import spark.implicits._
@@ -603,9 +599,7 @@ object CorpusAnnTVF {
     val escapeCap = opts.get("escape_cap").map(_.toInt).getOrElse(Int.MaxValue)
     require(escapeCap >= 0, s"corpus_ann: escape_cap $escapeCap must be >= 0")
     val spark = SparkSession.active
-    ReadFilesTVF.connections.applyTo(spark)
-    val resolve = (p: String) =>
-      ReadFilesTVF.connections.resolve(opts.get("connection"), p)
+    val resolve = (p: String) => ReadFiles.resolve(opts.get("connection"), p)
     val resolved = resolve(path)
     import org.apache.spark.sql.functions.{col, size}
     import spark.implicits._
@@ -795,9 +789,7 @@ object CorpusDedupTVF {
     val kOpt = opts.get("k").map(_.toInt)
     kOpt.foreach(k => require(k >= 1, s"corpus_dedup: k $k must be >= 1"))
     val spark = SparkSession.active
-    ReadFilesTVF.connections.applyTo(spark)
-    val resolve = (p: String) =>
-      ReadFilesTVF.connections.resolve(opts.get("connection"), p)
+    val resolve = (p: String) => ReadFiles.resolve(opts.get("connection"), p)
     val resolved = resolve(path)
     val maxHammingOpt: Option[Int] = opts.get("max_hamming").map { h =>
       try h.toInt catch { case _: NumberFormatException =>
@@ -948,8 +940,7 @@ object ReadStoreTVF {
           s"read_store: as_of must be an integer generation, got '$v'") }
     }
     val spark = SparkSession.active
-    ReadFilesTVF.connections.applyTo(spark)
-    val resolved = ReadFilesTVF.connections.resolve(opts.get("connection"), path)
+    val resolved = ReadFiles.resolve(opts.get("connection"), path)
     // ONE generation listing serves the loud non-store guard, the
     // live resolution, and the time-travel lookup — plan-time I/O
     // matters when the store lives on an object store
@@ -998,8 +989,7 @@ object ReadStoreTVF {
 private[sources] object TvfCorpus {
   def docs(tvf: String, spark: SparkSession, path: String,
            connection: Option[String]): org.apache.spark.sql.DataFrame = {
-    ReadFilesTVF.connections.applyTo(spark)
-    val resolved = ReadFilesTVF.connections.resolve(connection, path)
+    val resolved = ReadFiles.resolve(connection, path)
     IndexLayouts.familyOf(spark, resolved).foreach(fam =>
       throw new IllegalArgumentException(
         s"$tvf: $resolved is ${fam.label} — expected a " +
@@ -1291,9 +1281,7 @@ object CorpusHybridTVF {
             s"(lexical, dense), got '$ws'") }
     }.getOrElse(Nil)
     val spark = SparkSession.active
-    ReadFilesTVF.connections.applyTo(spark)
-    val resolve = (p: String) =>
-      ReadFilesTVF.connections.resolve(opts.get("connection"), p)
+    val resolve = (p: String) => ReadFiles.resolve(opts.get("connection"), p)
     import org.apache.spark.sql.functions.{col, size, explode}
     import spark.implicits._
     def termsOf(s0: String): Seq[String] =
@@ -1547,8 +1535,7 @@ object CorpusIndexStatsTVF {
         "corpus_index_stats: expected exactly one positional path argument")
     }
     val spark = SparkSession.active
-    ReadFilesTVF.connections.applyTo(spark)
-    val resolved = ReadFilesTVF.connections.resolve(opts.get("connection"), path)
+    val resolved = ReadFiles.resolve(opts.get("connection"), path)
     val mode = opts.getOrElse("mode", "stats").toLowerCase
     require(mode == "stats" || mode == "drift",
       s"corpus_index_stats: unknown mode '$mode' (expected 'stats' or 'drift')")
@@ -1616,47 +1603,67 @@ object CorpusIndexStatsTVF {
   }
 }
 
+/** `read_files('glob' [, connection=>name] [, format=>'csv'|'json'|
+  * 'orc'|'parquet'] [, header=>, inferschema=>] [, mergeschema=>]
+  * [, mode=>] [, rowid=>'true'])`: the reference's table function
+  * (read_files_task.rs:64-115) as the ordinary file-source relation,
+  * so pushdown and pruning apply to the scan.
+  *
+  * Options beyond the reference grammar (its roadmap formats):
+  * `format` (else inferred from the extension), `header`/`inferschema`
+  * for CSV, `mergeschema=>'true'` for schema-drifted parquet
+  * directories (the reference's schema-drift TODO,
+  * DEV_NOTES.md:151-152), `mode` for text formats and `rowid`. */
 object ReadFilesTVF {
-  /** Connection registry for TVF resolution — settable by the hosting
-    * service (the reference configures connections per worker;
-    * worker.rs:95-179). */
-  @volatile var connections: Connections = Connections()
-
-  private def str(e: Expression, what: String): String = e match {
-    case Literal(s: UTF8String, StringType) => s.toString
-    case other =>
-      throw new IllegalArgumentException(
-        s"read_files: $what must be a string literal, got $other")
-  }
-
   def build(args: Seq[Expression]): LogicalPlan = {
-    var path: Option[String] = None
-    val opts = scala.collection.mutable.Map[String, String]()
-    args.foreach {
-      case NamedArgumentExpression(key, value) =>
-        opts(key.toLowerCase) = str(value, s"argument $key")
-      case lit if path.isEmpty => path = Some(str(lit, "path"))
-      case extra =>
-        throw new IllegalArgumentException(
-          s"read_files: unexpected positional argument $extra")
+    val (pos, opts) = TvfArgs.parse("read_files", args, Set("connection",
+      "format", "header", "inferschema", "mergeschema", "mode", "rowid"))
+    val path = pos match {
+      case p :: Nil => ReadFiles.resolve(opts.get("connection"), p)
+      case _ => throw new IllegalArgumentException(
+        "read_files: expected exactly one positional path argument")
     }
-    val p = path.getOrElse(
-      throw new IllegalArgumentException("read_files: missing path argument"))
     val spark = SparkSession.active
-    connections.applyTo(spark)
-    val resolved = connections.resolve(opts.get("connection"), p)
-    val fmt = opts.getOrElse("format", ReadFiles.inferFormat(resolved))
-    val df = fmt match {
+    val fmt = opts.getOrElse("format", ReadFiles.inferFormat(path))
+    // mode=>'permissive' (default; malformed rows → nulls) |
+    // 'dropmalformed' | 'failfast' — Spark's malformed-record
+    // policies for text formats, where real-world files are never as
+    // clean as the schema claims.
+    val parseMode = opts.getOrElse("mode", "PERMISSIVE").toUpperCase
+    val base = fmt match {
       case "csv" => spark.read
         .option("header", opts.getOrElse("header", "true"))
         .option("inferSchema", opts.getOrElse("inferschema", "true"))
-        .csv(resolved)
-      case "json" => spark.read.json(resolved)
-      case "orc" => spark.read.orc(resolved)
-      case _ => spark.read
-        .option("mergeSchema", opts.getOrElse("mergeschema", "false"))
-        .parquet(resolved)
+        .option("mode", parseMode)
+        .csv(path)
+      case "json" => spark.read.option("mode", parseMode).json(path)
+      case "orc" => spark.read.orc(path)
+      case _ =>
+        // Stock reader first (inference, mergeSchema, nested types
+        // all Spark's own); fall back to the widened ingestion path
+        // only when the footer carries a type Spark rejects (FLOAT16 —
+        // see WidenedParquet).
+        try spark.read
+          .option("mergeSchema", opts.getOrElse("mergeschema", "false"))
+          .parquet(path)
+        catch {
+          case e: Throwable if Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+              .exists(t => Option(t.getMessage).exists(_.contains("PARQUET_TYPE_ILLEGAL"))) =>
+            WidenedParquet.read(spark, path)
+        }
     }
+    // rowid=>'true': STABLE record identity per row — the reference
+    // assigns record ids during the scan (read_files_task.rs:156-289);
+    // Spark's `_metadata` struct carries the same (file, physical row
+    // position) identity without a window or an indeterminate id.
+    // Parquet only (the row-index metadata column is a parquet-reader
+    // feature).
+    val df =
+      if (opts.get("rowid").contains("true") && fmt == "parquet") {
+        import org.apache.spark.sql.functions.col
+        base.select(col("*"), col("_metadata.file_name").as("_file"),
+          col("_metadata.row_index").as("_row_id"))
+      } else base
     df.queryExecution.analyzed
   }
 }

@@ -31,8 +31,16 @@ object Connection {
 }
 
 final case class Connections(conns: Map[String, Connection]) {
-  def resolve(connection: Option[String], path: String): String =
-    conns.getOrElse(connection.getOrElse("default"), Connection.Fs("")) match {
+  /** A named connection must exist (a typo fails loud, never reads
+    * the path as given); no name means `default`, and with no
+    * `default` the path is used as given. */
+  def resolve(connection: Option[String], path: String): String = {
+    val conn = connection match {
+      case None => conns.getOrElse("default", Connection.Fs(""))
+      case Some(name) => conns.getOrElse(name, throw new IllegalArgumentException(
+        s"unknown connection '$name' (known: ${conns.keys.toSeq.sorted.mkString(", ")})"))
+    }
+    conn match {
       case _ if path.contains("://") => path
       case Connection.Fs(root) =>
         if (root.isEmpty || path.startsWith("/")) path
@@ -42,6 +50,7 @@ final case class Connections(conns: Map[String, Connection]) {
         val rel = path.stripPrefix("/")
         if (root.isEmpty) s"s3a://${s.bucket}/$rel" else s"s3a://${s.bucket}/$root/$rel"
     }
+  }
 
   /** Apply every S3 connection's endpoint/credentials/path-style to
     * the session's Hadoop conf as per-bucket s3a settings. Idempotent;
@@ -87,8 +96,11 @@ object Connections {
 
 /** The reference's `read_files('glob'[, connection=>'name'])` table
   * function (/root/reference/src/handlers/operator_handler/operators/
-  * table_func_tasks/read_files_task.rs:64-115,156-289) re-expressed as a
-  * SQL rewrite onto Spark's native sources.
+  * table_func_tasks/read_files_task.rs:64-115,156-289) on Spark's
+  * native sources. The call resolves through the analyzer as the
+  * injected [[ReadFilesTVF]] (every session the engine builds installs
+  * [[GraftExtensions]]); this object scopes a statement's storage
+  * connections for it.
   *
   * The reference hand-rolls: storage listing + glob match, streaming
   * parquet decode into ≤10k-row batches, record-id assignment and
@@ -96,20 +108,8 @@ object Connections {
   * path — Hadoop glob expansion, split planning via
   * `spark.sql.files.maxPartitionBytes`, the vectorized reader, and
   * shuffle — so the only thing to build is the SQL surface itself.
-  *
-  * Options beyond the reference grammar (its roadmap formats):
-  * `format=>'csv'|'json'|'parquet'`, `header`/`inferschema` for CSV,
-  * and `mergeschema=>'true'` for schema-drifted parquet directories
-  * (the reference's schema-drift TODO, DEV_NOTES.md:151-152).
   */
 object ReadFiles {
-  // read_files('path' [, name=>'value']...) — case-insensitive,
-  // whitespace-tolerant; single-quoted args as in the reference
-  // grammar (read_files_task.rs:64-115).
-  private val Call =
-    """(?is)read_files\s*\(\s*'([^']+)'((?:\s*,\s*\w+\s*=>\s*'[^']*')*)\s*\)""".r
-  private val Arg = """(?is)(\w+)\s*=>\s*'([^']*)'""".r
-
   /** Format from the file extension only (a directory or glob without
     * one defaults to parquet, the reference's native format; pass
     * format=> explicitly for extensionless CSV/JSON layouts). */
@@ -121,100 +121,31 @@ object ReadFiles {
     else "parquet"
   }
 
-  final case class Rewritten(sql: String, views: Seq[String])
+  // The connections of the statement analyzing on this thread. A
+  // ThreadLocal, not a session conf or a shared var: QueryService
+  // plans concurrent statements with different callers' connections
+  // on ONE session, and analysis — where every TVF builder resolves
+  // its `connection=>` — is eager and runs on the thread that called
+  // spark.sql, so the thread is exactly the statement scope (the
+  // TextIndex.confOverrides argument).
+  private val statementConnections: ThreadLocal[Connections] =
+    ThreadLocal.withInitial(() => Connections())
 
-  // Globally unique view suffix: concurrent statements over the SAME
-  // path must never share a view name, or one statement's
-  // post-analysis drop races another statement's analysis
-  // (TABLE_OR_VIEW_NOT_FOUND under a concurrent QueryService).
-  private val viewCounter = new java.util.concurrent.atomic.AtomicLong()
+  /** `path` resolved against the statement's `connection=>` — the one
+    * resolution step of `read_files` and the corpus TVFs. */
+  private[sources] def resolve(connection: Option[String], path: String): String =
+    statementConnections.get().resolve(connection, path)
 
-  /** Rewrite every read_files(...) call in `sql` to a registered temp
-    * view over the resolved path(s). Calls inside single-quoted string
-    * literals are left untouched (quote-parity scan). Returns the
-    * rewritten SQL plus the view names, so callers can drop the views
-    * once the statement is analyzed (ReadFiles.sql does). */
-  def rewrite(spark: SparkSession, sql: String,
-              connections: Connections = Connections()): Rewritten = {
-    val out = new StringBuilder
-    val views = Seq.newBuilder[String]
-    var last = 0
-    for (m <- Call.findAllMatchIn(sql)) {
-      val quotesBefore = sql.substring(0, m.start).count(_ == '\'')
-      if (quotesBefore % 2 == 0) { // outside any string literal
-        val args = Arg.findAllMatchIn(m.group(2))
-          .map(a => a.group(1).toLowerCase -> a.group(2)).toMap
-        val path = connections.resolve(args.get("connection"), m.group(1))
-        val fmt = args.getOrElse("format", inferFormat(path))
-        // mode=>'permissive' (default; malformed rows → nulls) |
-        // 'dropmalformed' | 'failfast' — Spark's malformed-record
-        // policies surfaced through the TVF for text formats, where
-        // real-world files are never as clean as the schema claims.
-        val parseMode = args.getOrElse("mode", "PERMISSIVE").toUpperCase
-        val base = fmt match {
-          case "csv" => spark.read
-            .option("header", args.getOrElse("header", "true"))
-            .option("inferSchema", args.getOrElse("inferschema", "true"))
-            .option("mode", parseMode)
-            .csv(path)
-          case "json" => spark.read.option("mode", parseMode).json(path)
-          case "orc" => spark.read.orc(path)
-          case _ =>
-            // Stock reader first (inference, mergeSchema, nested types
-            // all Spark's own); fall back to the widened ingestion
-            // path only when the footer carries a type Spark rejects
-            // (FLOAT16 — see WidenedParquet).
-            try spark.read
-              .option("mergeSchema", args.getOrElse("mergeschema", "false"))
-              .parquet(path)
-            catch {
-              case e: Throwable if {
-                var t: Throwable = e; var hit = false
-                while (t != null && !hit) {
-                  hit = Option(t.getMessage).exists(_.contains("PARQUET_TYPE_ILLEGAL"))
-                  t = t.getCause
-                }
-                hit
-              } => WidenedParquet.read(spark, path)
-            }
-        }
-        // rowid=>'true': STABLE record identity per row — the
-        // reference assigns record ids during the scan
-        // (read_files_task.rs:156-289); Spark's `_metadata` struct
-        // carries the same (file, physical row position) identity
-        // without a window or an indeterminate id. Parquet only (the
-        // row-index metadata column is a parquet-reader feature).
-        val df =
-          if (args.get("rowid").contains("true") && fmt == "parquet")
-            base.select(org.apache.spark.sql.functions.col("*"),
-              org.apache.spark.sql.functions.col("_metadata.file_name").as("_file"),
-              org.apache.spark.sql.functions.col("_metadata.row_index").as("_row_id"))
-          else base
-        // A collision-free view name per call site, unique across
-        // concurrent statements.
-        val view =
-          s"read_files_${Integer.toHexString(path.hashCode)}_${viewCounter.incrementAndGet()}"
-        df.createOrReplaceTempView(view)
-        views += view
-        out.append(sql.substring(last, m.start)).append(view)
-        last = m.end
-      }
-    }
-    out.append(sql.substring(last))
-    Rewritten(out.toString, views.result())
-  }
-
-  /** Rewrite + execute one statement. Temp views are dropped as soon
-    * as the statement is analyzed (Dataset creation is eagerly
-    * analyzed, so the returned DataFrame keeps its resolved relations)
-    * — a long-lived query service leaks no catalog entries. */
+  /** Execute one statement with `connections` serving its
+    * `connection=>` arguments. */
   def sql(spark: SparkSession, statement: String,
           connections: Connections = Connections()): DataFrame = {
-    connections.applyTo(spark)
-    val r = rewrite(spark, statement, connections)
-    val df = spark.sql(r.sql)
-    r.views.foreach(spark.catalog.dropTempView)
-    df
+    val prior = statementConnections.get()
+    statementConnections.set(connections)
+    try {
+      connections.applyTo(spark)
+      spark.sql(statement)
+    } finally statementConnections.set(prior)
   }
 }
 

@@ -51,6 +51,28 @@ class ServiceSpec extends AnyFunSuite with SparkFixture {
     assert(svc.reader(storeId).asDataFrame.head().getLong(0) > 0)
   }
 
+  test("service connections reach read_files and the corpus TVFs") {
+    val root2 = java.nio.file.Files.createTempDirectory("graft_svc_conn").toString
+    val svc2 = new QueryService(spark, root2,
+      connections = graft.sources.Connections.fromRoots(Map("default" -> "", "fx" -> sfDir)))
+    def rows(s: QueryService, sql: String): Seq[String] = {
+      val id = s.runQuery(sql)
+      assert(s.awaitComplete(id) == QueryStatus.Complete, s.status(id))
+      s.reader(id).asDataFrame.collect().map(_.toString).toSeq
+    }
+    try {
+      Seq("select r_regionkey, r_name from read_files(%s) order by r_regionkey" ->
+            "region.parquet",
+          "select doc_id, quality from corpus_quality(%s) order by doc_id" ->
+            "documents.parquet")
+        .foreach { case (shape, file) =>
+          val want = rows(svc, shape.format(s"'$sfDir/$file'"))
+          assert(want.nonEmpty)
+          assert(rows(svc2, shape.format(s"'$file', connection=>'fx'")) == want)
+        }
+    } finally svc2.close()
+  }
+
   test("error status carries the failure message") {
     val id = svc.runQuery("select * from read_files('/no/such/path.parquet')")
     svc.awaitComplete(id) match {

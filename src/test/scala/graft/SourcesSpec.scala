@@ -38,6 +38,15 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
     val df = ReadFiles.sql(spark,
       "select count(*) as n from read_files('region.parquet', connection=>'test_fs')", conns)
     assert(df.collect()(0).getLong(0) == 5)
+    // a named connection missing from the map fails loud, naming the
+    // known ones — through read_files and through a corpus TVF
+    Seq("select * from read_files('region.parquet', connection=>'tset_fs')",
+        "select * from corpus_quality('documents.parquet', connection=>'tset_fs')")
+      .foreach { stmt =>
+        val e = intercept[Exception](ReadFiles.sql(spark, stmt, conns))
+        assert(e.getMessage.contains("unknown connection 'tset_fs' (known: default, test_fs)"),
+          e.getMessage)
+      }
   }
 
   // Mirror of the reference's S3 connection config
@@ -131,14 +140,11 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
     val df = spark.sql(
       s"select r_regionkey, r_name from read_files('$sfDir/region.parquet') order by r_regionkey")
     assert(df.count() == 5)
-    // named connection through the TVF registry
-    graft.sources.ReadFilesTVF.connections =
-      Connections.fromRoots(Map("default" -> "", "tvf_fs" -> sfDir))
-    try {
-      val viaConn = spark.sql(
-        "select count(*) as n from read_files('nation.parquet', connection=>'tvf_fs')")
-      assert(viaConn.collect()(0).getLong(0) == 25)
-    } finally graft.sources.ReadFilesTVF.connections = Connections()
+    // named connection, scoped to the statement by ReadFiles.sql
+    val viaConn = ReadFiles.sql(spark,
+      "select count(*) as n from read_files('nation.parquet', connection=>'tvf_fs')",
+      Connections.fromRoots(Map("default" -> "", "tvf_fs" -> sfDir)))
+    assert(viaConn.collect()(0).getLong(0) == 25)
     // filters still push into the scan through the TVF plan
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -154,12 +160,22 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
       spark.sql("select * from read_files(42)").collect()
     }
     assert(e.getMessage.contains("read_files"), e.getMessage)
+    // a misspelled option fails loud, naming the allowed set
+    val typo = intercept[Exception] {
+      spark.sql(s"select * from read_files('$sfDir/region.parquet', mergeshema=>'true')")
+    }
+    assert(typo.getMessage.contains("read_files: unknown option(s) mergeshema " +
+      "(expected connection, format, header, inferschema, mergeschema, mode, rowid)"),
+      typo.getMessage)
+    // every option reaches a bare spark.sql too
+    val withRowId = spark.sql(
+      s"select _file, _row_id from read_files('$sfDir/region.parquet', rowid=>'true')")
+    assert(withRowId.collect().map(_.getLong(1)).sorted.toSeq == (0L until 5L).toSeq)
   }
 
   test("read_files inside a string literal is not rewritten") {
-    // Without the quote-parity guard the rewrite regex would match
-    // `read_files(' as a, '` spanning the two literals below and
-    // mangle the statement.
+    // `read_files(' as a, '` spans the two literals below: text that
+    // looks like a call inside a literal must stay data.
     val df = ReadFiles.sql(spark,
       s"select 'read_files(' as a, '/tmp/x.parquet' as b, r_regionkey " +
         s"from read_files('$sfDir/region.parquet') order by r_regionkey")
