@@ -261,14 +261,6 @@ object SparkEntry {
       out
     })
 
-  /** Force-builds the per-dir index fixtures the ann_* queries read —
-    * the production shape is an index built OFFLINE, so Bench calls
-    * this before its timed loop and the build cost never bills to
-    * whichever ann_* query happens to run first (round-10 bench drift
-    * cause: the ivfDeleteIndexDir wipe+delete+compact lifecycle ran
-    * inside the first timed ann_ivf_delete rep). Results are
-    * identical either way: the builders are deterministic and
-    * memoized per (JVM, dir). */
   /** Band index for dedup_band_incr: the persisted MinHash-LSH layout
     * built over the full documents corpus, memoized per testdata dir
     * (same offline-build stance as [[ivfIndexDir]]). */
@@ -388,6 +380,14 @@ object SparkEntry {
       out
     })
 
+  /** Force-builds the per-dir index fixtures the ann_* queries read —
+    * the production shape is an index built OFFLINE, so Bench calls
+    * this before its timed loop and the build cost never bills to
+    * whichever ann_* query happens to run first (round-10 bench drift
+    * cause: the ivfDeleteIndexDir wipe+delete+compact lifecycle ran
+    * inside the first timed ann_ivf_delete rep). Results are
+    * identical either way: the builders are deterministic and
+    * memoized per (JVM, dir). */
   private[graft] def prepareIndexFixtures(s: SparkSession, d: String): Unit = {
     ivfIndexDir(s, d)
     ivfDeleteIndexDir(s, d)

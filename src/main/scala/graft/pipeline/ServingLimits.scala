@@ -40,9 +40,7 @@ object ServingLimits {
     * called by every batch serving entry point before its driver
     * collect. Returns `batch` unchanged for call-site chaining. */
   def requireMicroBatch(op: String, what: String, batch: DataFrame): DataFrame = {
-    val cap = batch.sparkSession.conf
-      .get(MaxBatchKey, MaxBatchDefault.toString).toInt
-    require(cap >= 1, s"$MaxBatchKey must be >= 1, got $cap")
+    val cap = maxBatch(batch.sparkSession)
     // a driver-local relation (a batch already collected and re-lifted
     // — e.g. the TVF layer validated the parquet read, collected it,
     // and hands searchMany the rows as a toDF) has a known size: count
@@ -53,12 +51,7 @@ object ServingLimits {
         math.min(lr.data.size.toLong, cap.toLong + 1)
       case _ => batch.limit(cap + 1).count()
     }
-    require(n <= cap,
-      s"[BATCH_OVER_CAP] $op: the $what batch holds more than $cap rows " +
-        s"— batch serving collects the query set to the driver and is " +
-        s"micro-batch-sized by contract; raise $MaxBatchKey only if the " +
-        "driver heap is sized for it, or run the distributed operators " +
-        "directly for bulk joins")
+    requireUnderCap(op, s"the $what batch holds more than $cap rows", n <= cap)
     batch
   }
 
@@ -89,11 +82,8 @@ object ServingLimits {
   def requireCollectedBatch(spark: org.apache.spark.sql.SparkSession,
                             op: String, nQueries: Int): Unit = {
     val cap = maxBatch(spark)
-    require(nQueries <= cap,
-      s"[BATCH_OVER_CAP] $op: the collected batch holds $nQueries " +
-        s"queries (cap $cap) — batch serving is micro-batch-sized by " +
-        s"contract; raise $MaxBatchKey only if the driver heap is sized " +
-        "for it, or run the distributed operators directly for bulk joins")
+    requireUnderCap(op,
+      s"the collected batch holds $nQueries queries (cap $cap)", nQueries <= cap)
   }
 
   /** Collect a serving batch under the cap in ONE job: `limit(cap+1)`
@@ -104,16 +94,17 @@ object ServingLimits {
     * plan-build job is a scheduler round-trip). */
   def collectMicroBatch(op: String, what: String,
                         batch: DataFrame): Array[org.apache.spark.sql.Row] = {
-    val cap = batch.sparkSession.conf
-      .get(MaxBatchKey, MaxBatchDefault.toString).toInt
-    require(cap >= 1, s"$MaxBatchKey must be >= 1, got $cap")
+    val cap = maxBatch(batch.sparkSession)
     val rows = batch.limit(cap + 1).collect()
-    require(rows.length <= cap,
-      s"[BATCH_OVER_CAP] $op: the $what batch holds more than $cap rows " +
-        s"— batch serving collects the query set to the driver and is " +
-        s"micro-batch-sized by contract; raise $MaxBatchKey only if the " +
-        "driver heap is sized for it, or run the distributed operators " +
-        "directly for bulk joins")
+    requireUnderCap(op, s"the $what batch holds more than $cap rows",
+      rows.length <= cap)
     rows
   }
+
+  private def requireUnderCap(op: String, held: => String, ok: Boolean): Unit =
+    require(ok,
+      s"[BATCH_OVER_CAP] $op: $held — batch serving collects the query " +
+        "set to the driver and is micro-batch-sized by contract; raise " +
+        s"$MaxBatchKey only if the driver heap is sized for it, or run " +
+        "the distributed operators directly for bulk joins")
 }

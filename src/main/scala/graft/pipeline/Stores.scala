@@ -26,12 +26,24 @@ private[graft] object Stores {
     * serve partial rows. */
   def liveGeneration(spark: SparkSession, dir: String, base: String,
                      marker: String = "_SUCCESS"): String =
-    generations(spark, dir, base, marker)
-      .filter(_._1 > 0).lastOption.map(_._2)
-      .getOrElse {
+    liveOf(spark, dir, base, generations(spark, dir, base, marker), marker)
+      .getOrElse(s"$dir/$base")
+
+  /** [[liveGeneration]]'s choice over a [[generations]] listing the
+    * caller already holds; None when there is neither a committed
+    * generation nor a base directory (the path is not a store). */
+  def liveOf(spark: SparkSession, dir: String, base: String,
+             gens: Seq[(Int, String)],
+             marker: String = "_SUCCESS"): Option[String] =
+    gens.filter(_._1 > 0).lastOption.map(_._2).orElse {
+      val b = new Path(s"$dir/$base")
+      if (gens.isEmpty &&
+          !b.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(b)) None
+      else {
         requireNotTorn(spark, s"$dir/$base", marker)
-        s"$dir/$base"
+        Some(s"$dir/$base")
       }
+    }
 
   /** Distinguish a COPIED store (a base written file-by-file that lost
     * its commit marker — served as a convenience by the marker-free
@@ -43,8 +55,8 @@ private[graft] object Stores {
     * No-op when the marker is present (a committed write may briefly
     * coexist with a concurrent writer's staging dir; the marker is
     * the authority). */
-  def requireNotTorn(spark: SparkSession, base: String,
-                     marker: String = "_SUCCESS"): Unit = {
+  private def requireNotTorn(spark: SparkSession, base: String,
+                             marker: String): Unit = {
     val p = new Path(base)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(s"$base/$marker")) &&

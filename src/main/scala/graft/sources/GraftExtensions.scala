@@ -8,17 +8,12 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Catalyst-native registration of the reference's `read_files` table
-  * function and the corpus TVFs. With the extension installed,
-  * `SELECT ... FROM read_files('glob' [, name=>'value']...)` resolves
-  * through the analyzer like any built-in TVF: string literals are
-  * naturally inert, and the produced plan is the ordinary file-source
-  * relation (full pushdown/pruning). Every TVF resolves `connection=>`
-  * against the connections [[ReadFiles.sql]] scopes to its statement.
-  *
-  * Install via `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.sources.GraftExtensions`.
-  */
+/** A table function's analysis-time builder: literal arguments in,
+  * the resolved logical plan out. */
+trait TableFunction {
+  def build(args: Seq[Expression]): LogicalPlan
+}
+
 /** Shared positional/named argument parsing for the corpus TVFs —
   * ONE literal-extraction truth (string; int/long including the
   * parser's `UnaryMinus(Literal)` shape for negatives; decimal/double
@@ -128,13 +123,15 @@ private[graft] object TvfArgs {
     * enforced, not documented — an oversized `queries=>` file fails
     * loud naming the cap and the knob instead of OOMing the driver.
     * Enforcement rides ONE collect (limit cap+1, the two resolved
-    * columns only) and the returned frame is DRIVER-LOCAL: every
-    * downstream validation pass (ids, dims, nulls) and re-collect is
-    * then a trivial local job instead of its own parquet scan — the
-    * serving-latency shape (r14's 3-jobs-per-batch-TVF plan-build tax
-    * was measurable on q_sql_ann_many). */
+    * columns only), returned alongside a DRIVER-LOCAL frame over the
+    * same rows: every downstream validation pass (ids, dims, nulls)
+    * reads the rows or runs a trivial local job instead of its own
+    * parquet scan — the serving-latency shape (r14's
+    * 3-jobs-per-batch-TVF plan-build tax was measurable on
+    * q_sql_ann_many). */
   def batchFrame(tvf: String, df: org.apache.spark.sql.DataFrame,
-                 idCol: String, payloadCol: String): org.apache.spark.sql.DataFrame = {
+                 idCol: String, payloadCol: String)
+      : (Array[org.apache.spark.sql.Row], org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.functions.col
     val byName = df.columns.map(c => c.toLowerCase -> c).toMap
     def theOther(matched: String, missing: String): String = {
@@ -165,8 +162,8 @@ private[graft] object TvfArgs {
     }
     val rows = graft.pipeline.ServingLimits.collectMicroBatch(
       tvf, s"($idCol, $payloadCol)", shaped)
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), shaped.schema)
+    (rows, df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), shaped.schema))
   }
 
   /** The id-side contract every batch TVF shares: ids cast to long,
@@ -183,6 +180,114 @@ private[graft] object TvfArgs {
     require(dups.isEmpty,
       s"$tvf: duplicate $what(s) ${dups.mkString(", ")} in the batch " +
         s"parquet — each $what identifies one input's result rows")
+  }
+}
+
+/** The query side and the two scoring legs the retrieval TVFs share
+  * (`corpus_search`'s BM25, `corpus_ann`'s dense search, and
+  * `corpus_hybrid`, which fuses one of each): term normalization, the
+  * query-vector literal, the batch embedding guards, and each leg's
+  * layout routing are stated here once, so the TVFs cannot drift
+  * apart on any of them. */
+private[sources] object TvfRetrieval {
+  import org.apache.spark.sql.{DataFrame, Row}
+  import org.apache.spark.sql.functions.{col, size}
+
+  /** Whitespace terms, trimmed, lower-cased and de-duplicated — the
+    * same Scala normalization on the single-query and batch paths. */
+  def termsOf(q: String): Seq[String] =
+    q.trim.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct.toSeq
+
+  /** A comma-separated query-vector literal (SQL literals cannot carry
+    * arrays into a TVF argument list); `what` names the argument. */
+  def vector(tvf: String, what: String, v: String): Array[Double] = {
+    val vec =
+      try v.split(",").map(_.trim).filter(_.nonEmpty).map(_.toDouble)
+      catch { case _: NumberFormatException =>
+        throw new IllegalArgumentException(
+          s"$tvf: $what must be comma-separated numbers, got '$v'") }
+    require(vec.nonEmpty, s"$tvf: empty $what")
+    vec
+  }
+
+  /** The one dimension of a collected batch's embeddings (column `i`),
+    * None for an empty batch. Every row is checked, not just the
+    * first: parquet fixes the array ELEMENT type, not per-row array
+    * length, so a batch can mix dims — and a null embedding fails
+    * loud here instead of inside a scoring kernel. Driver-side over
+    * rows already collected, so the guard runs no job. */
+  def batchDim(tvf: String, rows: Seq[Row], i: Int): Option[Int] = {
+    require(!rows.exists(_.isNullAt(i)),
+      s"$tvf: null embedding in the batch parquet")
+    val dims = rows.map(r => r.get(i) match {
+      case v: scala.collection.Seq[_] => v.length
+      case other => throw new IllegalArgumentException(
+        s"$tvf: batch embeddings must be arrays of numbers, got " +
+          other.getClass.getSimpleName)
+    }).distinct.sorted
+    require(dims.size <= 1,
+      s"$tvf: query vectors mix dimensions ${dims.mkString(", ")}")
+    dims.headOption
+  }
+
+  /** The BM25 leg for one query's terms (Left) or a (query_id, terms)
+    * batch (Right): a text index at `path` serves from its pruned
+    * postings, a plain (doc_id, text) parquet from one corpus scan,
+    * under the statement's MaxScore knobs ([[TvfArgs.withMaxScoreConfs]]).
+    * Every index-routed call writes `[<tvf>] route=<route>` to stderr:
+    * the decision is per-thread and was just taken inside this build,
+    * so the line names this statement's route, never a neighbor's. */
+  def lexical(tvf: String, spark: SparkSession, opts: Map[String, String],
+              path: String, isIndex: Boolean, k: Int,
+              queries: Either[Seq[String], Seq[(Long, Seq[String])]]): DataFrame = {
+    import graft.pipeline.{TextAnalysis, TextIndex}
+    import spark.implicits._
+    val scored = TvfArgs.withMaxScoreConfs(tvf, spark, opts, isIndex) {
+      (queries, isIndex) match {
+        case (Left(terms), true) => TextIndex.search(spark, path, terms, k)
+        case (Left(terms), false) =>
+          TextAnalysis.bm25(spark.read.parquet(path), terms)
+            .orderBy(col("score").desc, col("doc_id")).limit(k)
+        case (Right(batch), true) =>
+          TextIndex.searchMany(spark, path, batch.toDF("query_id", "terms"), k)
+        case (Right(batch), false) =>
+          TextAnalysis.bm25Many(spark.read.parquet(path), batch, k)
+      }
+    }
+    if (isIndex) System.err.println(s"[$tvf] route=${TextIndex.lastRoute}")
+    scored
+  }
+
+  /** The dense leg over (query_id, embedding) `queries` of dimension
+    * `qDim`: an IVF index at `path` serves the adaptive two-level
+    * probe (exact over the live corpus; at most `escapeCap` extra
+    * cells when set), a plain (vec_id, embedding) parquet one
+    * brute-force pass. `qDim` is checked BEFORE any corpus scan — a
+    * mismatch would rank truncated dot products silently — and
+    * `allowedIds` (a `vec_id` frame) restricts the neighbors. */
+  def dense(tvf: String, spark: SparkSession, queries: DataFrame,
+            qDim: Option[Int], path: String, k: Int, nprobe: Int,
+            escapeCap: Option[Int] = None,
+            allowedIds: Option[DataFrame] = None): DataFrame = {
+    import graft.pipeline.Embeddings
+    def requireDim(dim: Int): Unit = qDim.foreach(qd =>
+      require(qd == dim,
+        s"$tvf: query vector has $qd dims but the vectors at $path have $dim"))
+    if (IndexLayouts.requireServable(spark, path, tvf, IndexLayouts.IvfIndex)) {
+      requireDim(Embeddings.indexDim(spark, path))
+      Embeddings.ivfTopKIndexedFor(queries, path, k, nprobe = nprobe,
+        adaptive = true, escapeCap = escapeCap.getOrElse(Int.MaxValue),
+        allowedIds = allowedIds)
+    } else {
+      require(escapeCap.isEmpty,
+        s"$tvf: escape_cap applies to the IVF index route; the " +
+          s"brute-force route over $path is already exact")
+      val corpus = spark.read.parquet(path)
+      corpus.select(size(col("embedding"))).head(1)
+        .foreach(r => requireDim(r.getInt(0)))
+      Embeddings.bruteForceTopKFor(queries,
+        allowedIds.fold(corpus)(a => corpus.join(a, Seq("vec_id"), "left_semi")), k)
+    }
   }
 }
 
@@ -205,8 +310,11 @@ private[graft] object TvfArgs {
   * NARROW chain (project/filter) over a file relation — a child that
   * already contains its own exchange (repartition from fanOut, join,
   * aggregate) keeps its planned shape, which also makes the rule a
-  * fixpoint (the inserted Repartition blocks a second insertion). */
-private[sources] object FanOutKernelScans
+  * fixpoint (the inserted Repartition blocks a second insertion).
+  * A projection whose rows reach a LIMIT through a narrow chain is
+  * left alone too: the limit reads only the first rows of the scan,
+  * and an exchange below it would read the whole scan first. */
+private[sources] case class FanOutKernelScans(spark: SparkSession)
     extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
   import org.apache.spark.sql.catalyst.plans.logical._
 
@@ -222,133 +330,50 @@ private[sources] object FanOutKernelScans
     case _ => false // joins/aggregates/repartitions keep their shape
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case p: Project
-        if hasKernel(p) && narrowScan(p.child) &&
-          p.child.stats.sizeInBytes < graft.Engine.FanOutMaxBytes =>
-      p.withNewChildren(Seq(Repartition(
-        org.apache.spark.sql.SparkSession.active
-          .sparkContext.defaultParallelism,
-        shuffle = true, p.child)))
+  override def apply(plan: LogicalPlan): LogicalPlan = fanOut(plan, limited = false)
+
+  /** Bottom-up like `transformUp`; `limited` says a LIMIT sits above
+    * `plan` with only narrow nodes in between. */
+  private def fanOut(plan: LogicalPlan, limited: Boolean): LogicalPlan = {
+    val underLimit = plan match {
+      case _: LocalLimit | _: GlobalLimit => true
+      case _: Project | _: Filter | _: SubqueryAlias => limited
+      case _ => false
+    }
+    plan.mapChildren(fanOut(_, underLimit)) match {
+      case p: Project
+          if !limited && hasKernel(p) && narrowScan(p.child) &&
+            p.child.stats.sizeInBytes < graft.Engine.FanOutMaxBytes =>
+        p.withNewChildren(Seq(Repartition(
+          spark.sparkContext.defaultParallelism, shuffle = true, p.child)))
+      case other => other
+    }
   }
 }
 
+/** Catalyst-native registration of the reference's `read_files` table
+  * function and the corpus TVFs. With the extension installed,
+  * `SELECT ... FROM read_files('glob' [, name=>'value']...)` resolves
+  * through the analyzer like any built-in TVF: string literals are
+  * naturally inert, and the produced plan is the ordinary file-source
+  * relation (full pushdown/pruning). Every TVF resolves `connection=>`
+  * against the connections [[ReadFiles.sql]] scopes to its statement.
+  *
+  * Install via `.withExtensions(new GraftExtensions)` or
+  * `spark.sql.extensions=graft.sources.GraftExtensions`.
+  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     // size-gated fan-out for kernel projections in raw SQL (see
     // FanOutKernelScans) — inert above the byte gate
-    ext.injectOptimizerRule(_ => FanOutKernelScans)
+    ext.injectOptimizerRule(FanOutKernelScans(_))
 
-    ext.injectTableFunction((
-      FunctionIdentifier("read_files"),
-      new ExpressionInfo(ReadFilesTVF.getClass.getName, "read_files"),
-      (args: Seq[Expression]) => ReadFilesTVF.build(args)))
-
-    // BM25 corpus search as a TVF: SELECT * FROM
-    // corpus_search('path', 'query terms' [, k=>10]) — the SQL surface
-    // of TextAnalysis.bm25, resolving through the analyzer like
-    // read_files so pushdown/pruning apply to the underlying scan.
-    ext.injectTableFunction((
-      FunctionIdentifier("corpus_search"),
-      new ExpressionInfo(CorpusSearchTVF.getClass.getName, "corpus_search"),
-      (args: Seq[Expression]) => CorpusSearchTVF.build(args)))
-
-    // Vector search as a TVF: SELECT * FROM corpus_ann('path',
-    // '0.1,-0.2,...' [, k=>10] [, nprobe=>10]) — the SQL surface of
-    // the ANN serving paths, completing the retrieval symmetry
-    // (corpus_search covers keywords/phrases, corpus_ann covers
-    // embeddings). Points at a plain (vec_id, embedding) parquet
-    // (exact brute-force scan) or a persisted IVF index (adaptive
-    // partition-pruned serving, same exact top-k).
-    ext.injectTableFunction((
-      FunctionIdentifier("corpus_ann"),
-      new ExpressionInfo(CorpusAnnTVF.getClass.getName, "corpus_ann"),
-      (args: Seq[Expression]) => CorpusAnnTVF.build(args)))
-
-    // Hybrid retrieval as a TVF: SELECT * FROM corpus_hybrid(
-    // 'text_path', 'vector_path', 'query terms', embedding=>'0.1,...')
-    // — BM25 + dense cosine legs fused by reciprocal rank, each leg
-    // auto-routing to its persisted index layout when pointed at one
-    // (text index / IVF index) or served corpus-tier from plain
-    // parquet. The full RAG serving stack in one SQL statement.
-    ext.injectTableFunction((
-      FunctionIdentifier("corpus_hybrid"),
-      new ExpressionInfo(CorpusHybridTVF.getClass.getName, "corpus_hybrid"),
-      (args: Seq[Expression]) => CorpusHybridTVF.build(args)))
-
-    // Fuzzy-dup detection as a TVF: SELECT * FROM
-    // corpus_dedup('path' [, batch=>'bpath'] [, threshold=>0.8]) —
-    // the SQL surface of the near-dup family, completing the
-    // maintenance symmetry (corpus_search = keywords/phrases,
-    // corpus_ann = vectors, corpus_dedup = near-duplicates). Points
-    // at a plain (doc_id, text) corpus or a persisted band index.
-    ext.injectTableFunction((
-      FunctionIdentifier("corpus_dedup"),
-      new ExpressionInfo(CorpusDedupTVF.getClass.getName, "corpus_dedup"),
-      (args: Seq[Expression]) => CorpusDedupTVF.build(args)))
-
-    // The mutable corpus of record as a TVF: SELECT * FROM
-    // read_store('path' [, as_of=>N]) — generation-resolved reads
-    // (read_files over the raw dir would see stale generations and
-    // break across merge swaps) plus SQL time travel under the
-    // store's one-grace-cycle retention.
-    ext.injectTableFunction((
-      FunctionIdentifier("read_store"),
-      new ExpressionInfo(ReadStoreTVF.getClass.getName, "read_store"),
-      (args: Seq[Expression]) => ReadStoreTVF.build(args)))
-
-    // Per-document text analysis as a TVF: SELECT * FROM
-    // corpus_quality('path' [, mode=>'quality'|'langid'|'tokens'|
-    // 'fingerprint']) — the curation-scoring face of the TVF family,
-    // closing the SQL-only story for the quality/filtering passes a
-    // training pipeline runs before search/dedup ever see the text.
-    ext.injectTableFunction((
-      FunctionIdentifier("corpus_quality"),
-      new ExpressionInfo(CorpusQualityTVF.getClass.getName, "corpus_quality"),
-      (args: Seq[Expression]) => CorpusQualityTVF.build(args)))
-
-    // Mix construction as a TVF: SELECT * FROM corpus_mix('path'
-    // [, mode=>'weights'|'resample'|'shuffle'|'budget'|'pack'|'chunk']
-    // ...) — the shard-assembly face of the family: temperature
-    // weights, deterministic resampling, permutation shuffle,
-    // token-budget slicing, sequence packing, and sliding-window
-    // chunking, all with no Scala in sight.
-    ext.injectTableFunction((
-      FunctionIdentifier("corpus_mix"),
-      new ExpressionInfo(CorpusMixTVF.getClass.getName, "corpus_mix"),
-      (args: Seq[Expression]) => CorpusMixTVF.build(args)))
-
-    // Eval-set decontamination as a TVF: SELECT * FROM
-    // corpus_decontam('train_path', 'eval_path' [, mode=>'filter'|
-    // 'report'] [, k=>N] [, group=>col]) — the two-corpus face of the
-    // family: which training docs share a word k-gram with the eval
-    // set (drop them, or report the overlap per group).
-    ext.injectTableFunction((
-      FunctionIdentifier("corpus_decontam"),
-      new ExpressionInfo(CorpusDecontamTVF.getClass.getName, "corpus_decontam"),
-      (args: Seq[Expression]) => CorpusDecontamTVF.build(args)))
-
-    // Corpus snapshot diff as a TVF: SELECT * FROM
-    // corpus_diff('old_path', 'new_path' [, group=>col]) — per-group
-    // added/removed/kept BY CONTENT between two corpus versions, the
-    // audit a pipeline owner runs before retraining.
-    ext.injectTableFunction((
-      FunctionIdentifier("corpus_diff"),
-      new ExpressionInfo(CorpusDiffTVF.getClass.getName, "corpus_diff"),
-      (args: Seq[Expression]) => CorpusDiffTVF.build(args)))
-
-    // Index health as a TVF: SELECT * FROM corpus_index_stats('path')
-    // — one unified (store, partition, n_rows, n_files, bytes,
-    // generation) snapshot for every persisted index family, so the
-    // compaction/rebuild cadences are observable from SQL alone (the
-    // reference's metrics-surface identity applied to index layouts).
-    ext.injectTableFunction((
-      FunctionIdentifier("corpus_index_stats"),
-      new ExpressionInfo(CorpusIndexStatsTVF.getClass.getName,
-        "corpus_index_stats"),
-      (args: Seq[Expression]) => CorpusIndexStatsTVF.build(args)))
+    tableFunctions.foreach { case (name, tvf) =>
+      ext.injectTableFunction((FunctionIdentifier(name),
+        new ExpressionInfo(tvf.getClass.getName, name), tvf.build _))
+    }
 
     // The pipeline's native expressions as first-class SQL scalar
     // functions — the reference's extension-registry vision
@@ -388,6 +413,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  /** Every table function the extension registers, by SQL name. */
+  private val tableFunctions: Seq[(String, TableFunction)] = Seq(
+    "read_files" -> ReadFilesTVF,
+    "corpus_search" -> CorpusSearchTVF,
+    "corpus_ann" -> CorpusAnnTVF,
+    "corpus_hybrid" -> CorpusHybridTVF,
+    "corpus_dedup" -> CorpusDedupTVF,
+    "read_store" -> ReadStoreTVF,
+    "corpus_quality" -> CorpusQualityTVF,
+    "corpus_mix" -> CorpusMixTVF,
+    "corpus_decontam" -> CorpusDecontamTVF,
+    "corpus_diff" -> CorpusDiffTVF,
+    "corpus_index_stats" -> CorpusIndexStatsTVF)
+
   private def intArg(e: Expression, fn: String): Int = e match {
     case Literal(v: Int, IntegerType) => v
     case Literal(v: Long, LongType) => v.toInt
@@ -441,10 +480,11 @@ object GraftExtensions {
   * `theta_rows=>N` deepens the threshold pass's per-term prefix (for
   * corpora whose impact ranking poorly predicts totals) — both scoped
   * to THIS statement via [[TvfArgs.withMaxScoreConfs]] (no session
-  * leakage), results exact on every route. The taken route is logged
-  * (`[corpus_search] route=...`) so deployments can observe and tune
-  * the pruned/exhaustive decision. */
-object CorpusSearchTVF {
+  * leakage), results exact on every route. Every index-routed BM25
+  * statement logs its route (`[corpus_search] route=...`, the rule
+  * [[TvfRetrieval.lexical]] applies to every BM25 leg) so deployments
+  * can observe and tune the pruned/exhaustive decision. */
+object CorpusSearchTVF extends TableFunction {
   def build(args: Seq[Expression]): LogicalPlan = {
     // options change result SEMANTICS (mode), so a typo'd key fails
     // loud inside the shared parser, not silently serving defaults
@@ -472,53 +512,35 @@ object CorpusSearchTVF {
     val spark = SparkSession.active
     val resolve = (p: String) => ReadFiles.resolve(opts.get("connection"), p)
     val resolved = resolve(path)
-    import org.apache.spark.sql.functions.{col, lit}
-    import spark.implicits._
+    import org.apache.spark.sql.functions.col
     val isIndex = IndexLayouts.requireServable(
       spark, resolved, "corpus_search", IndexLayouts.TextIdx)
-    // batch queries are collected driver-side: the batch IS
-    // driver-bounded by the serving contract (searchMany's own
-    // collect does the same), and term normalization must be the
-    // Scala trim/toLowerCase the single-query path uses
+    // batch queries are collected driver-side (driver-bounded by the
+    // serving contract) so terms normalize exactly like the single
+    // query's; an int32 query_id (pyarrow's default for small ints)
+    // casts, and a null query/id or duplicate id fails loud instead of
+    // NPE-ing in termsOf or silently merging two queries' results
     val batch: Option[Seq[(Long, String)]] = query match {
       case Some(_) => None
       case None =>
-        // defensive read, like the sibling paths: columns resolve by
-        // name (positional fallback), an int32 query_id (pyarrow's
-        // default for small ints) must not ClassCastException, and a
-        // null query/id or duplicate id must fail loud, not NPE in
-        // termsOf or silently merge two queries' results
-        val raw = TvfArgs.batchFrame("corpus_search",
+        val (_, raw) = TvfArgs.batchFrame("corpus_search",
           spark.read.parquet(resolve(opts("queries"))), "query_id", "query")
-        val rows = raw.select(col("query_id").cast("long"), col("query"))
-          .collect().map(r =>
-            (if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0)),
-              if (r.isNullAt(1)) null else r.getString(1))).toSeq
-        TvfArgs.requireIds("corpus_search", "query_id", rows.map(_._1))
-        val nulls = rows.collect { case (qid, null) => qid }
+        val rows = raw.select(col("query_id").cast("long"), col("query")).collect()
+        TvfArgs.requireIds("corpus_search", "query_id", rows.map(_.get(0)).toSeq)
+        val nulls = rows.filter(_.isNullAt(1)).map(_.getLong(0))
         require(nulls.isEmpty,
           s"corpus_search: null query for query_id(s) ${nulls.mkString(", ")}")
-        Some(rows.map { case (qid, q) => (qid.longValue(), q) })
+        Some(rows.map(r => (r.getLong(0), r.getString(1))).toSeq)
     }
-    def termsOf(q: String): Seq[String] =
-      q.trim.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct.toSeq
-    val result = TvfArgs.withMaxScoreConfs(
-        "corpus_search", spark, opts, isIndex) { (mode, batch) match {
+    val result = (mode, batch) match {
       case ("bm25", None) =>
-        val terms = termsOf(query.get)
+        val terms = TvfRetrieval.termsOf(query.get)
         require(terms.nonEmpty, "corpus_search: empty query")
-        if (isIndex) graft.pipeline.TextIndex.search(spark, resolved, terms, k)
-        else graft.pipeline.TextAnalysis.bm25(spark.read.parquet(resolved), terms)
-          .orderBy(col("score").desc, col("doc_id"))
-          .limit(k)
+        TvfRetrieval.lexical("corpus_search", spark, opts, resolved, isIndex,
+          k, Left(terms))
       case ("bm25", Some(qs)) =>
-        if (isIndex)
-          graft.pipeline.TextIndex.searchMany(spark, resolved,
-            qs.map { case (qid, q) => (qid, termsOf(q)) }
-              .toDF("query_id", "terms"), k)
-        else graft.pipeline.TextAnalysis.bm25Many(
-          spark.read.parquet(resolved),
-          qs.map { case (qid, q) => (qid, termsOf(q)) }, k)
+        TvfRetrieval.lexical("corpus_search", spark, opts, resolved, isIndex,
+          k, Right(qs.map { case (qid, q) => (qid, TvfRetrieval.termsOf(q)) }))
       // exact consecutive-phrase counts: positional postings when the
       // path is an index, direct token scan for a plain corpus
       case ("phrase", None) =>
@@ -539,13 +561,7 @@ object CorpusSearchTVF {
           spark.read.parquet(resolved), qs, k)
           .orderBy("query_id", "doc_id")
       case _ => throw new IllegalStateException("unreachable")
-    } }
-    // route diagnostics for operators tuning the knobs per deployment:
-    // the decision is per-thread and just happened inside the build,
-    // so this line names THIS statement's route (never a neighbor's)
-    if (isIndex && mode == "bm25")
-      System.err.println(
-        s"[corpus_search] route=${graft.pipeline.TextIndex.lastRoute}")
+    }
     result.queryExecution.analyzed
   }
 }
@@ -577,7 +593,7 @@ object CorpusSearchTVF {
   * two-level probe: partition-pruned to the probed cells AND still
   * exact top-k over the live corpus, so both routes return identical
   * rows and the query cost follows the query, not the data. */
-object CorpusAnnTVF {
+object CorpusAnnTVF extends TableFunction {
   def build(args: Seq[Expression]): LogicalPlan = {
     val (pos, opts) = TvfArgs.parse("corpus_ann", args,
       Set("k", "nprobe", "connection", "queries", "escape_cap", "filter"))
@@ -596,61 +612,33 @@ object CorpusAnnTVF {
     // only): unset = exact top-k; 0 = fixed-nprobe only; N = at most
     // N extra cells, most promising first — the cost ceiling for
     // radii-loose corpora (ANN_SCALE.md).
-    val escapeCap = opts.get("escape_cap").map(_.toInt).getOrElse(Int.MaxValue)
-    require(escapeCap >= 0, s"corpus_ann: escape_cap $escapeCap must be >= 0")
+    val escapeCap = opts.get("escape_cap").map(_.toInt)
+    escapeCap.foreach(c =>
+      require(c >= 0, s"corpus_ann: escape_cap $c must be >= 0"))
     val spark = SparkSession.active
     val resolve = (p: String) => ReadFiles.resolve(opts.get("connection"), p)
     val resolved = resolve(path)
-    import org.apache.spark.sql.functions.{col, size}
+    import org.apache.spark.sql.functions.col
     import spark.implicits._
     // batch mode reads (query_id, embedding) rows from a parquet; the
     // single-vector mode wraps the parsed literal as a one-row batch
-    val q: org.apache.spark.sql.DataFrame = vecStr match {
+    val (q, qDim): (org.apache.spark.sql.DataFrame, Option[Int]) = vecStr match {
       case Some(v) =>
-        val vec: Array[Double] =
-          try v.split(",").map(_.trim).filter(_.nonEmpty).map(_.toDouble)
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"corpus_ann: queryVec must be comma-separated numbers, got '$v'") }
-        require(vec.nonEmpty, "corpus_ann: empty query vector")
-        Seq((0L, vec)).toDF("vec_id", "embedding")
+        val vec = TvfRetrieval.vector("corpus_ann", "queryVec", v)
+        (Seq((0L, vec)).toDF("vec_id", "embedding"), Some(vec.length))
       case None =>
         // columns by name (positional fallback) + the shared id
-        // contract: null/duplicate query_ids fail loud here, with
-        // context, instead of an opaque NPE in getLong or two
-        // queries' neighbors merging under one id. The id pass is
-        // one column-pruned job over the micro-batch-sized query set.
-        val b = TvfArgs.batchFrame("corpus_ann",
+        // contract, checked over the collected micro-batch
+        val (rows, b) = TvfArgs.batchFrame("corpus_ann",
           spark.read.parquet(resolve(opts("queries"))), "query_id", "embedding")
         TvfArgs.requireIds("corpus_ann", "query_id",
-          b.select(col("query_id").cast("long")).collect().map(r =>
-            if (r.isNullAt(0)) null
-            else java.lang.Long.valueOf(r.getLong(0))).toSeq)
-        b
+          b.select(col("query_id").cast("long")).collect().map(_.get(0)).toSeq)
+        (b, TvfRetrieval.batchDim("corpus_ann", rows.toSeq, 1))
     }
-    // dimension guard, BEFORE any corpus scan: a mismatched query
-    // vector would zip into truncated dot products and rank garbage
-    // silently. EVERY batch row is checked, not just the first —
-    // parquet fixes the array ELEMENT type, not per-row array length,
-    // so a batch can mix dims. The check is one aggregate over the
-    // query side, which is micro-batch-sized by the serving contract.
-    val qDims: Seq[Int] = q.select(size(col(q.columns(1))).as("d"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    require(qDims.size <= 1,
-      s"corpus_ann: query vectors mix dimensions ${qDims.mkString(", ")}")
-    def requireDim(dim: Int): Unit = qDims.headOption.foreach(qd =>
-      require(qd == dim,
-        s"corpus_ann: query vector has $qd dims but the corpus at " +
-          s"$resolved has $dim"))
-    val batch = vecStr.isEmpty
-    // filter=>'path': tenant/language-scoped search — the NEIGHBOR
-    // side restricted to the ids in a one-column parquet (the SQL
-    // face of ivfTopKIndexedFor's allowedIds; extra columns rejected
-    // loud — a (vec_id, lang) file is a predicate the caller should
-    // apply, not an id list). The filter frame is distributed state
-    // (semi-joined / passed through, never collected), so no
-    // micro-batch cap applies: an allow-list legitimately scales with
-    // the tenant's corpus.
+    // filter=>'path': extra columns are rejected loud — a (vec_id,
+    // lang) file is a predicate the caller should apply, not an id
+    // list. The frame stays distributed (never collected), so no
+    // micro-batch cap applies: an allow-list scales with the corpus.
     val allowed: Option[org.apache.spark.sql.DataFrame] =
       opts.get("filter").map { fp =>
         val f = spark.read.parquet(resolve(fp))
@@ -659,28 +647,10 @@ object CorpusAnnTVF {
             s"got [${f.columns.mkString(", ")}]")
         f.select(col(f.columns.head).cast("long").as("vec_id"))
       }
-    val servesIvf = IndexLayouts.requireServable(
-      spark, resolved, "corpus_ann", IndexLayouts.IvfIndex)
-    val result =
-      if (servesIvf) {
-        requireDim(graft.pipeline.Embeddings.indexDim(spark, resolved))
-        graft.pipeline.Embeddings
-          .ivfTopKIndexedFor(q, resolved, k, nprobe = nprobe,
-            adaptive = true, escapeCap = escapeCap, allowedIds = allowed)
-      } else {
-        require(opts.get("escape_cap").isEmpty,
-          "corpus_ann: escape_cap applies to the IVF index route; the " +
-            s"brute-force route over $resolved is already exact")
-        val corpus0 = spark.read.parquet(resolved)
-        // same exactness either route: brute over the filtered corpus
-        val corpus = allowed.fold(corpus0)(a =>
-          corpus0.join(a, Seq("vec_id"), "left_semi"))
-        corpus0.select(size(col("embedding"))).head(1)
-          .foreach(r => requireDim(r.getInt(0)))
-        graft.pipeline.Embeddings.bruteForceTopKFor(q, corpus, k)
-      }
+    val result = TvfRetrieval.dense("corpus_ann", spark, q, qDim, resolved,
+      k, nprobe, escapeCap, allowed)
     val out =
-      if (batch) result.select(col("query_id"), col("neighbor_id"),
+      if (vecStr.isEmpty) result.select(col("query_id"), col("neighbor_id"),
         col("cos"), col("rank")).orderBy("query_id", "rank")
       else result.select(col("neighbor_id"), col("cos"), col("rank"))
         .orderBy("rank")
@@ -751,7 +721,7 @@ object CorpusAnnTVF {
   * scheme's design threshold (where LSH candidate recall collapses)
   * fails loud ([[graft.pipeline.TextDedup.bandIndexDesignThreshold]])
   * instead of silently missing most true pairs. */
-object CorpusDedupTVF {
+object CorpusDedupTVF extends TableFunction {
   def build(args: Seq[Expression]): LogicalPlan = {
     val (pos, opts) = TvfArgs.parse("corpus_dedup", args,
       Set("batch", "threshold", "k", "connection", "mode", "max_hamming",
@@ -871,7 +841,7 @@ object CorpusDedupTVF {
       case (Some(bpath), _) =>
         // same reading truth as the sibling batch TVFs: (doc_id,
         // text) by name, positional fallback, loud on neither
-        val batch = TvfArgs.batchFrame("corpus_dedup",
+        val (_, batch) = TvfArgs.batchFrame("corpus_dedup",
           spark.read.parquet(resolve(bpath)), "doc_id", "text")
         if (isIndex)
           graft.pipeline.TextDedup.nearDupsAgainstBandIndex(
@@ -925,7 +895,7 @@ object IndexLayouts {
   * store's one-grace-cycle retention — a pruned generation fails
   * loud (`GENERATION_PRUNED`) rather than serving a silently partial
   * snapshot. Pointing the TVF at a non-store path fails loud too. */
-object ReadStoreTVF {
+object ReadStoreTVF extends TableFunction {
   def build(args: Seq[Expression]): LogicalPlan = {
     val (pos, opts) = TvfArgs.parse("read_store", args,
       Set("as_of", "connection"))
@@ -945,31 +915,12 @@ object ReadStoreTVF {
     // live resolution, and the time-travel lookup — plan-time I/O
     // matters when the store lives on an object store
     val gens = graft.pipeline.CorpusStore.generations(spark, resolved)
-    // Stores.liveGeneration serves a base `corpus/` even without its
-    // commit marker (a store copied file-by-file loses _SUCCESS) —
-    // the live read here follows the SAME contract, so the guard
-    // accepts a marker-free base too; only time travel stays strict
-    // (committed generations only — a torn snapshot must never serve)
-    val basePath = s"$resolved/corpus"
-    val hasBase = {
-      val p = new org.apache.hadoop.fs.Path(basePath)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
-    require(gens.nonEmpty || hasBase,
+    val live = graft.pipeline.Stores.liveOf(spark, resolved, "corpus", gens)
+    require(live.isDefined,
       s"read_store: $resolved is not a corpus store layout " +
         "(no corpus generation found)")
     val result = asOf match {
-      case None =>
-        // same resolution rule as CorpusStore.read/liveGeneration:
-        // highest committed versioned generation, else the base
-        // (marker-free fallback included — but a marker-free base
-        // still holding a _temporary staging dir is a TORN write,
-        // not a copied store, and fails loud instead of serving
-        // partial rows)
-        val live = gens.filter(_._1 > 0).lastOption.map(_._2).getOrElse(basePath)
-        if (live == basePath)
-          graft.pipeline.Stores.requireNotTorn(spark, basePath)
-        spark.read.parquet(live).drop("bucket")
+      case None => spark.read.parquet(live.get).drop("bucket")
       case Some(n) =>
         graft.pipeline.CorpusStore.readAsOf(spark, resolved, n, Some(gens))
     }
@@ -980,8 +931,8 @@ object ReadStoreTVF {
 /** The corpus-input resolution every per-document TVF shares
   * (corpus_quality, corpus_mix): a plain (doc_id, text, ...) parquet
   * serves directly; a [[graft.pipeline.CorpusStore]] layout serves
-  * generation-RESOLVED under `read_store`'s exact live rule (highest
-  * committed generation, marker-free base fallback) — TVFs cannot
+  * generation-RESOLVED under the live rule `read_store` and every
+  * Scala reader share ([[graft.pipeline.Stores.liveOf]]) — TVFs cannot
   * nest, so `f(read_store(...))` is inexpressible and the store
   * resolution must live here; a persisted index layout fails loud
   * NAMING the family (one routing truth with the serving TVFs),
@@ -996,19 +947,8 @@ private[sources] object TvfCorpus {
           "(doc_id, text) corpus parquet or a corpus store"))
     // ONE listing decides store-vs-plain and the live generation
     val gens = graft.pipeline.CorpusStore.generations(spark, resolved)
-    val basePath = s"$resolved/corpus"
-    val hasBase = {
-      val p = new org.apache.hadoop.fs.Path(basePath)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
-    if (gens.nonEmpty || hasBase) {
-      val live = gens.filter(_._1 > 0).lastOption.map(_._2).getOrElse(basePath)
-      // same torn-vs-copied distinction as read_store: a marker-free
-      // base with a _temporary staging dir never serves partial rows
-      if (live == basePath)
-        graft.pipeline.Stores.requireNotTorn(spark, basePath)
-      spark.read.parquet(live).drop("bucket")
-    } else spark.read.parquet(resolved)
+    graft.pipeline.Stores.liveOf(spark, resolved, "corpus", gens)
+      .fold(spark.read.parquet(resolved))(spark.read.parquet(_).drop("bucket"))
   }
 }
 
@@ -1050,7 +990,7 @@ private[sources] object TvfCorpus {
   * expressible, so the store resolution must live here too. Pointing
   * it at an index layout fails loud naming the family (one routing
   * truth with the serving TVFs). */
-object CorpusQualityTVF {
+object CorpusQualityTVF extends TableFunction {
   def build(args: Seq[Expression]): LogicalPlan = {
     val (pos, opts) = TvfArgs.parse("corpus_quality", args,
       Set("mode", "connection", "top1", "top2", "top3", "top4",
@@ -1138,7 +1078,7 @@ object CorpusQualityTVF {
   * `path` resolves through [[TvfCorpus.docs]] — plain corpus
   * parquet, or a corpus store served generation-resolved; index
   * layouts fail loud naming the family. */
-object CorpusMixTVF {
+object CorpusMixTVF extends TableFunction {
   def build(args: Seq[Expression]): LogicalPlan = {
     val (pos, opts) = TvfArgs.parse("corpus_mix", args,
       Set("mode", "group", "budget", "seed", "tau", "max_tokens",
@@ -1239,9 +1179,11 @@ object CorpusMixTVF {
   * bit-identical across engines; omitted = both legs weight 1,
   * exactly the unweighted algebra. `maxscore`/`theta_rows` tune the
   * lexical leg's pruned route exactly like `corpus_search`'s knobs
-  * (statement-scoped, loud when the text side is a plain corpus).
+  * (statement-scoped, loud when the text side is a plain corpus), and
+  * an index-routed lexical leg logs its route under `corpus_search`'s
+  * rule (`[corpus_hybrid] route=...`, [[TvfRetrieval.lexical]]).
   * Returns (doc_id, rrf_score, n_legs) ordered score-desc. */
-object CorpusHybridTVF {
+object CorpusHybridTVF extends TableFunction {
   def build(args: Seq[Expression]): LogicalPlan = {
     val (pos, opts) = TvfArgs.parse("corpus_hybrid", args,
       Set("embedding", "queries", "k", "k_per_leg", "k0", "nprobe",
@@ -1282,97 +1224,60 @@ object CorpusHybridTVF {
     }.getOrElse(Nil)
     val spark = SparkSession.active
     val resolve = (p: String) => ReadFiles.resolve(opts.get("connection"), p)
-    import org.apache.spark.sql.functions.{col, size, explode}
+    import org.apache.spark.sql.functions.col
     import spark.implicits._
-    def termsOf(s0: String): Seq[String] =
-      s0.trim.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct.toSeq
     // resolve the query set: a single (terms, vector) pair from the
     // literals, or a (query_id, query, embedding) batch parquet — the
     // serving shape for application query batches arriving as files.
     // Batch columns resolve BY NAME (order-free); null/duplicate ids,
     // null queries, and null embeddings fail loud with context.
-    val batch: Option[(Seq[(Long, Seq[String])], org.apache.spark.sql.DataFrame)] =
-      (queryStr, opts.get("queries")) match {
-        case (Some(_), _) => None
-        case (None, Some(qp)) =>
-          // ONE cap-enforced collect (this TVF reads three named
-          // columns, so it cannot go through batchFrame's two-column
-          // normalization) — id/null validation then runs on the
-          // collected rows and the dense-leg frame is driver-local,
-          // so no further plan-build job touches the parquet
-          val raw = spark.read.parquet(resolve(qp))
-          val byName = raw.columns.map(c => c.toLowerCase -> c).toMap
-          val cols = Seq("query_id", "query", "embedding").map(n =>
-            byName.getOrElse(n, throw new IllegalArgumentException(
-              s"corpus_hybrid: batch parquet must carry (query_id, query, " +
-                s"embedding) columns; got [${raw.columns.mkString(", ")}]")))
-          val shaped = raw.select(col(cols(0)).cast("long").as("query_id"),
-            col(cols(1)).as("query"), col(cols(2)).as("embedding"))
-          val rows = graft.pipeline.ServingLimits.collectMicroBatch(
-            "corpus_hybrid", "(query_id, query, embedding)", shaped)
-          TvfArgs.requireIds("corpus_hybrid", "query_id", rows.map(r =>
-            if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))).toSeq)
-          require(!rows.exists(_.isNullAt(1)),
-            "corpus_hybrid: null query in the batch parquet")
-          require(!rows.exists(_.isNullAt(2)),
-            "corpus_hybrid: null embedding in the batch parquet")
-          val termPairs = rows
-            .map(r => (r.getLong(0), termsOf(r.getString(1)))).toSeq
-          val b = spark.createDataFrame(
-            java.util.Arrays.asList(rows: _*), shaped.schema)
-          Some((termPairs, b.select(col("query_id"), col("embedding"))))
-        case _ => throw new IllegalStateException("unreachable")
-      }
-    // single-query literals wrap into a one-row batch (query_id 0) so
-    // both shapes flow through ONE leg + fusion code path
-    val (termPairs, qVecs) = batch match {
-      case Some((tp0, qv)) => (tp0, qv)
+    // Single-query literals wrap into a one-row batch (query_id 0) so
+    // both shapes flow through ONE leg + fusion code path.
+    val (termPairs, qVecs, qDim) = queryStr match {
       case None =>
-        val embStr = opts.getOrElse("embedding",
-          throw new IllegalArgumentException(
+        // ONE cap-enforced collect (this TVF reads three named
+        // columns, so it cannot go through batchFrame's two-column
+        // normalization) — id/null validation then runs on the
+        // collected rows and the dense-leg frame is driver-local,
+        // so no further plan-build job touches the parquet
+        val raw = spark.read.parquet(resolve(opts("queries")))
+        val byName = raw.columns.map(c => c.toLowerCase -> c).toMap
+        val cols = Seq("query_id", "query", "embedding").map(n =>
+          byName.getOrElse(n, throw new IllegalArgumentException(
+            s"corpus_hybrid: batch parquet must carry (query_id, query, " +
+              s"embedding) columns; got [${raw.columns.mkString(", ")}]")))
+        val shaped = raw.select(col(cols(0)).cast("long").as("query_id"),
+          col(cols(1)).as("query"), col(cols(2)).as("embedding"))
+        val rows = graft.pipeline.ServingLimits.collectMicroBatch(
+          "corpus_hybrid", "(query_id, query, embedding)", shaped)
+        TvfArgs.requireIds("corpus_hybrid", "query_id", rows.map(_.get(0)).toSeq)
+        require(!rows.exists(_.isNullAt(1)),
+          "corpus_hybrid: null query in the batch parquet")
+        val qDim = TvfRetrieval.batchDim("corpus_hybrid", rows.toSeq, 2)
+        val b = spark.createDataFrame(
+          java.util.Arrays.asList(rows: _*), shaped.schema)
+        (rows.map(r => (r.getLong(0), TvfRetrieval.termsOf(r.getString(1)))).toSeq,
+          b.select(col("query_id"), col("embedding")), qDim)
+      case Some(query) =>
+        val vec = TvfRetrieval.vector("corpus_hybrid", "embedding",
+          opts.getOrElse("embedding", throw new IllegalArgumentException(
             "corpus_hybrid: embedding=>'v1,v2,...' is required (the dense " +
-              "leg's query vector)"))
-        val vec: Array[Double] =
-          try embStr.split(",").map(_.trim).filter(_.nonEmpty).map(_.toDouble)
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"corpus_hybrid: embedding must be comma-separated numbers, got '$embStr'") }
-        require(vec.nonEmpty, "corpus_hybrid: empty embedding")
-        val terms = termsOf(queryStr.get)
+              "leg's query vector)")))
+        val terms = TvfRetrieval.termsOf(query)
         require(terms.nonEmpty, "corpus_hybrid: empty query")
-        (Seq((0L, terms)), Seq((0L, vec)).toDF("query_id", "embedding"))
+        (Seq((0L, terms)), Seq((0L, vec)).toDF("query_id", "embedding"),
+          Some(vec.length))
     }
     require(termPairs.forall(_._2.nonEmpty),
       s"corpus_hybrid: empty query for query_id(s) " +
         termPairs.filter(_._2.isEmpty).map(_._1).mkString(", "))
-    // dimension guard, BEFORE any corpus scan — every batch row
-    // checked (parquet fixes element type, not per-row array length)
-    val qDims: Seq[Int] = qVecs.select(size(col("embedding")).as("d"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    require(qDims.size <= 1,
-      s"corpus_hybrid: query vectors mix dimensions ${qDims.mkString(", ")}")
-    def requireDim(dim: Int): Unit = qDims.headOption.foreach(qd =>
-      require(qd == dim,
-        s"corpus_hybrid: embedding has $qd dims but the vector side has $dim"))
-    // lexical leg — same routing truth as corpus_search; per-query
-    // ranks assigned over the leg's bounded top-k output
+    // lexical leg — corpus_search's routing; per-query ranks assigned
+    // over the leg's bounded top-k output
     val tp = resolve(textPath)
     val lexIndexed = IndexLayouts.requireServable(
       spark, tp, "corpus_hybrid", IndexLayouts.TextIdx)
-    // maxscore/theta_rows scope the lexical leg's route decision to
-    // this statement (set/finally-restored), same knobs as
-    // corpus_search; they fail loud when the text side is a plain
-    // corpus scan
-    val lexScored = TvfArgs.withMaxScoreConfs(
-        "corpus_hybrid", spark, opts, lexIndexed) {
-      if (lexIndexed) graft.pipeline.TextIndex.searchMany(spark, tp,
-        termPairs.toDF("query_id", "terms"), kPerLeg)
-      else graft.pipeline.TextAnalysis.bm25Many(
-        spark.read.parquet(tp), termPairs, kPerLeg)
-    }
-    if (lexIndexed && (opts.contains("maxscore") || opts.contains("theta_rows")))
-      System.err.println(
-        s"[corpus_hybrid] lexical route=${graft.pipeline.TextIndex.lastRoute}")
+    val lexScored = TvfRetrieval.lexical("corpus_hybrid", spark, opts, tp,
+      lexIndexed, kPerLeg, Right(termPairs))
     val lexW = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id")
       .orderBy(col("score").desc, col("doc_id"))
@@ -1380,27 +1285,15 @@ object CorpusHybridTVF {
       .withColumn("rank",
         org.apache.spark.sql.functions.row_number().over(lexW).cast("int"))
       .select("query_id", "doc_id", "rank")
-    // dense leg — same routing truth + dim guard as corpus_ann
-    val vp = resolve(vecPath)
-    val denIndexed = IndexLayouts.requireServable(
-      spark, vp, "corpus_hybrid", IndexLayouts.IvfIndex)
-    val den = (
-      if (denIndexed) {
-        requireDim(graft.pipeline.Embeddings.indexDim(spark, vp))
-        graft.pipeline.Embeddings.ivfTopKIndexedFor(qVecs, vp, kPerLeg,
-          nprobe = nprobe, adaptive = true)
-      } else {
-        val corpus = spark.read.parquet(vp)
-        corpus.select(size(col("embedding"))).head(1)
-          .foreach(r => requireDim(r.getInt(0)))
-        graft.pipeline.Embeddings.bruteForceTopKFor(qVecs, corpus, kPerLeg)
-      })
+    // dense leg — corpus_ann's routing and dim guard
+    val den = TvfRetrieval.dense("corpus_hybrid", spark, qVecs, qDim,
+        resolve(vecPath), kPerLeg, nprobe)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").cast("int").as("rank"))
     val fused = graft.pipeline.Retrieval.rrfFuseMany(Seq(lex, den), "doc_id",
       k0, k, weights = legWeights)
     val out =
-      if (batch.isDefined) fused
+      if (queryStr.isEmpty) fused
       else fused.drop("query_id")
         .orderBy(col("rrf_score").desc, col("doc_id"))
     out.queryExecution.analyzed
@@ -1423,7 +1316,7 @@ object CorpusHybridTVF {
   * resolve through [[TvfCorpus.docs]] (plain parquet or a corpus
   * store served generation-resolved; index layouts fail loud naming
   * the family). */
-object CorpusDecontamTVF {
+object CorpusDecontamTVF extends TableFunction {
   def build(args: Seq[Expression]): LogicalPlan = {
     val (pos, opts) = TvfArgs.parse("corpus_decontam", args,
       Set("mode", "k", "group", "connection"))
@@ -1468,7 +1361,7 @@ object CorpusDecontamTVF {
   * carries 16 bytes + group per row). Both paths resolve through
   * [[TvfCorpus.docs]] — diffing a live store generation against a
   * plain parquet snapshot works, and index layouts fail loud. */
-object CorpusDiffTVF {
+object CorpusDiffTVF extends TableFunction {
   def build(args: Seq[Expression]): LogicalPlan = {
     val (pos, opts) = TvfArgs.parse("corpus_diff", args,
       Set("group", "connection"))
@@ -1525,7 +1418,7 @@ object CorpusDiffTVF {
   * reads vector data (one pass over the live corpus, centroids
   * broadcast); drift is a quantizer property, so any non-IVF layout
   * fails loud. */
-object CorpusIndexStatsTVF {
+object CorpusIndexStatsTVF extends TableFunction {
   def build(args: Seq[Expression]): LogicalPlan = {
     val (pos, opts) = TvfArgs.parse("corpus_index_stats", args,
       Set("connection", "mode"))
@@ -1614,7 +1507,7 @@ object CorpusIndexStatsTVF {
   * for CSV, `mergeschema=>'true'` for schema-drifted parquet
   * directories (the reference's schema-drift TODO,
   * DEV_NOTES.md:151-152), `mode` for text formats and `rowid`. */
-object ReadFilesTVF {
+object ReadFilesTVF extends TableFunction {
   def build(args: Seq[Expression]): LogicalPlan = {
     val (pos, opts) = TvfArgs.parse("read_files", args, Set("connection",
       "format", "header", "inferschema", "mergeschema", "mode", "rowid"))

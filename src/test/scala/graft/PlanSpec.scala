@@ -180,6 +180,13 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     val rawReps = raw.queryExecution.optimizedPlan.collect {
       case r: Repartition => r }
     assert(rawReps.size == 1, raw.queryExecution.optimizedPlan.toString)
+    // under a LIMIT the scan is read only up to the limit: an exchange
+    // below it would read the whole scan first, so none is inserted
+    val limited = spark.sql(
+      "SELECT doc_id, shingle_hashes(text, 3) FROM documents LIMIT 5")
+    val limitedReps = limited.queryExecution.optimizedPlan.collect {
+      case r: Repartition => r }
+    assert(limitedReps.isEmpty, limited.queryExecution.optimizedPlan.toString)
     // a frame that already fans out (withHashes -> Engine.fanOut) must
     // keep exactly its own repartition: the rule's narrow-scan guard
     // stops a second exchange (also what makes the rule a fixpoint)

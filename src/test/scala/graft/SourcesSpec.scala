@@ -1701,6 +1701,26 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
       .coalesce(1).write.parquet(annDup)
     val e5 = intercept[Exception] { ann(annDup) }
     assert(e5.getMessage.contains("duplicate query_id"))
+    // a null embedding fails loud naming it, on corpus_ann as on
+    // corpus_hybrid, and a batch mixing vector lengths fails on both
+    val annNull = base + "/annnull"
+    Seq((1L, Some(Seq(0.1, 0.2))), (2L, None)).toDF("query_id", "embedding")
+      .coalesce(1).write.parquet(annNull)
+    val e6 = intercept[Exception] { ann(annNull) }
+    assert(e6.getMessage.contains("null embedding in the batch parquet"),
+      e6.getMessage)
+    val annMixed = base + "/annmix"
+    Seq((1L, Seq(0.1, 0.2)), (2L, Seq(0.1, 0.2, 0.3)))
+      .toDF("query_id", "embedding").coalesce(1).write.parquet(annMixed)
+    val e7 = intercept[Exception] { ann(annMixed) }
+    assert(e7.getMessage.contains("mix dimensions"), e7.getMessage)
+    val hybMixed = base + "/hybmix"
+    Seq((1L, "spark", Seq(0.1, 0.2)), (2L, "join", Seq(0.1, 0.2, 0.3)))
+      .toDF("query_id", "query", "embedding").coalesce(1).write.parquet(hybMixed)
+    val e8 = intercept[Exception] { spark.sql(
+      s"SELECT * FROM corpus_hybrid('$sfDir/documents.parquet', " +
+        s"'$sfDir/embeddings.parquet', queries=>'$hybMixed')").collect() }
+    assert(e8.getMessage.contains("mix dimensions"), e8.getMessage)
   }
 
   test("corpus_dedup TVF: threshold below the frozen scheme's design threshold fails loud") {

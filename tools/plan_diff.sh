@@ -1,8 +1,10 @@
 #!/usr/bin/env bash
 # Compare two PlanDump runs: the formatted plans of the same queries,
-# with expression ids (`#<n>`) and exchange ids (`plan_id=<n>`)
-# normalized — both are session counters, so they differ between any
-# two runs of the same plan. Prints a unified diff per changed query
+# with expression ids (`#<n>`), exchange ids (`plan_id=<n>`) and RDD ids
+# (`RDD[<n>]`, named by scans over checkpointed data) normalized — all
+# three are session counters, so they differ between any two runs of
+# the same plan, and RDD ids also move with the number of jobs run
+# earlier in the session. Prints a unified diff per changed query
 # and exits non-zero on any difference, including a query dumped on
 # one side only.
 #
@@ -23,7 +25,7 @@ for side in A B; do
     [ -e "$f" ] || { echo "FAIL: no PlanDump files in $src"; exit 1; }
     query="$(basename "$f" .txt)"; query="${query%_*}"
     [ ! -e "$TMP/$side/$query.txt" ] || { echo "FAIL: $src holds two dumps of $query"; exit 1; }
-    sed -E 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g' "$f" > "$TMP/$side/$query.txt"
+    sed -E 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g; s/RDD\[[0-9]+\]/RDD[N]/g' "$f" > "$TMP/$side/$query.txt"
   done
 done
 if diff -ru "$TMP/A" "$TMP/B"; then
