@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,10 +10,7 @@ import org.apache.spark.sql.functions._
   * delete taken-down ones) without ever rewriting the whole corpus.
   *
   * Layout: `dir/corpus[_v<N>]/bucket=<b>/` parquet with bucket =
-  * pmod(doc_id, buckets) — the same resolve-the-live-generation
-  * convention as the IVF corpus ([[Embeddings]] `corpus_v<N>` +
-  * `_SUCCESS`) and the band index stores, so readers need zero
-  * coordination with writers.
+  * pmod(doc_id, buckets), generation-swapped by [[Stores]].
   *
   * Scale stance of [[merge]], the point of the layout:
   *   - the CHANGE SET decides the work, not the corpus size: changed
@@ -24,11 +21,7 @@ import org.apache.spark.sql.functions._
   *   - the rewrite's anti-join keys on the change set, which is
   *     micro-batch-sized — it broadcasts, so corpus rows never
   *     shuffle ([[mergedBuckets]] is PlanSpec-pinned shuffle-free on
-  *     the corpus side);
-  *   - the swap is atomic: the new generation becomes visible only
-  *     when its `_SUCCESS` commits; the replaced generation survives
-  *     one cycle as the grace copy for readers that resolved it
-  *     pre-swap (the convention every store in this engine follows).
+  *     the corpus side).
   *
   * Precedence: deletes apply first, upserts win — a doc_id in both
   * sets ends up at its upserted text, the semantics of "the recrawl
@@ -129,15 +122,13 @@ object CorpusStore {
   /** Partial-rewrite MERGE into the live generation: upsert `upserts`
     * (doc_id, text, ... — full replacement rows), delete `deletes`
     * (doc_id). Returns (buckets rewritten, buckets carried). Work is
-    * O(touched buckets + change set): untouched bucket partitions are
-    * carried by raw file copy, touched ones are re-derived by a
-    * partition-pruned scan anti-joined against the broadcast change
-    * set. Single maintenance writer by design, like every store in
-    * this engine — callers serialize merges. */
+    * O(touched buckets + change set): the touched buckets are
+    * re-derived by a partition-pruned scan anti-joined against the
+    * broadcast change set, every other bucket carries through the
+    * [[Stores.swapGeneration]]. A merge touching no bucket still
+    * commits an all-carry generation. */
   def merge(spark: SparkSession, dir: String,
             upserts: DataFrame, deletes: DataFrame): (Int, Int) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(dir).getFileSystem(conf)
     val buckets = spark.read.parquet(s"$dir/meta").head().getAs[Int]("buckets")
     val liveDir = live(spark, dir)
     val withBucket = (df: DataFrame) => df.withColumn("bucket",
@@ -148,49 +139,19 @@ object CorpusStore {
     // that scope every read and write below to the touched buckets.
     val touched: Array[Int] = up.select("bucket").unionByName(del.select("bucket"))
       .distinct().collect().map(_.getInt(0))
-    val liveVersion =
-      if (liveDir.endsWith("/corpus")) 0
-      else liveDir.substring(liveDir.lastIndexOf("_v") + 2).toInt
-    val next = s"$dir/corpus_v${liveVersion + 1}"
-    // a torn previous merge may have left this path uncommitted (no
-    // _SUCCESS, or it would be the live generation) — its partial
-    // carry-copies and part files are garbage and must not leak into
-    // the retried generation via the append write below
-    if (fs.exists(new Path(next))) fs.delete(new Path(next), true)
-    val bucketDirs = fs.listStatus(new Path(liveDir))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-    val (rewrite, carry) = bucketDirs.partition(d =>
-      touched.contains(d.getPath.getName.stripPrefix("bucket=").toInt))
-    // carry untouched buckets first — invisible until _SUCCESS lands
-    carry.foreach { d =>
-      val dst = new Path(s"$next/${d.getPath.getName}")
-      fs.mkdirs(dst)
-      fs.listStatus(d.getPath)
-        .filter { f =>
-          val n = f.getPath.getName
-          n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-        }
-        .foreach(f => FileUtil.copy(fs, f.getPath, fs,
-          new Path(dst, f.getPath.getName), false, conf))
-    }
-    if (touched.nonEmpty) {
-      // a change set may touch a bucket the store has no partition for
-      // yet (first insert hashing there) — the pruned scan just reads
-      // empty for it and the write creates it
-      val base = spark.read.parquet(liveDir)
-        .filter(col("bucket").isin(touched.toIndexedSeq: _*))
-      mergedBuckets(base, up.select(base.columns.map(col).toIndexedSeq: _*), del)
-        .repartition(touched.length, col("bucket"))
-        .write.mode("append").partitionBy("bucket").parquet(next)
-    }
-    // commit the swap (Spark's write wrote _SUCCESS for the rewrite
-    // set; an all-carry merge needs it written explicitly)
-    if (!fs.exists(new Path(s"$next/_SUCCESS")))
-      fs.create(new Path(s"$next/_SUCCESS")).close()
-    // prune generations older than the grace copy (the replaced live)
-    (0 until liveVersion).foreach { v =>
-      val old = new Path(if (v == 0) s"$dir/corpus" else s"$dir/corpus_v$v")
-      if (fs.exists(old)) fs.delete(old, true)
+    val (rewrite, carry) =
+      Stores.partitions(spark, liveDir, "bucket=").partition(b => touched.contains(b._1))
+    Stores.swapGeneration(spark, dir, "corpus", liveDir, carry.map(_._2)) { next =>
+      if (touched.nonEmpty) {
+        // a change set may touch a bucket the store has no partition
+        // for yet (first insert hashing there) — the pruned scan just
+        // reads empty for it and the write creates it
+        val base = spark.read.parquet(liveDir)
+          .filter(col("bucket").isin(touched.toIndexedSeq: _*))
+        mergedBuckets(base, up.select(base.columns.map(col).toIndexedSeq: _*), del)
+          .repartition(touched.length, col("bucket"))
+          .write.mode("append").partitionBy("bucket").parquet(next)
+      }
     }
     (rewrite.length, carry.length)
   }

@@ -814,7 +814,7 @@ object Embeddings {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = liveIndexRoot(spark, dir)
-    val curGen = if (cur == dir) 0 else cur.substring(cur.lastIndexOf("_v") + 2).toInt
+    val curGen = if (cur == dir) 0 else Stores.generationOf(cur, "gen")
     val next = curGen + 1
     val target = s"$dir/gen_v$next"
     writeIvfIndex(emb, target, nlist, iters, pqM, pqK, pqIters)
@@ -846,17 +846,9 @@ object Embeddings {
     * Idempotent on an already-resolved root (a generation dir has no
     * `gen_v` children). */
   private[graft] def liveIndexRoot(spark: org.apache.spark.sql.SparkSession,
-                                   dir: String): String = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed =
-      if (!fs.exists(root)) Array.empty[Int]
-      else fs.listStatus(root).map(_.getPath.getName)
-        .collect { case n if n.startsWith("gen_v") => n.stripPrefix("gen_v") }
-        .collect { case n if n.nonEmpty && n.forall(_.isDigit) => n.toInt }
-        .filter(g => fs.exists(new org.apache.hadoop.fs.Path(s"$dir/gen_v$g/_INDEX_SUCCESS")))
-    if (committed.isEmpty) dir else s"$dir/gen_v${committed.max}"
-  }
+                                   dir: String): String =
+    Stores.generations(spark, dir, "gen", "_INDEX_SUCCESS")
+      .filter(_._1 > 0).lastOption.fold(dir)(_._2)
 
   /** The distinct tombstoned ids of an index, or None when no
     * tombstone file exists (the common case — the read paths add no
@@ -922,130 +914,51 @@ object Embeddings {
     *
     * Cells holding more than `maxFilesPerCell` parquet files — plus
     * every cell holding a [[deleteFromIvfIndex]] tombstoned row,
-    * whose bytes this pass physically purges — are rewritten: ONE
+    * whose bytes this pass physically purges — are rewritten in ONE
     * Spark job, `repartition(cols=cell)` so each rewritten cell lands
-    * in a single task and therefore a single output file; cells
-    * already within bound are carried into the new generation by raw
-    * file copy (no decode/encode, and on an object store a
-    * server-side copy). Consumed tombstone files are copied into the
-    * durable purged-ids ledger (`purged/` — keeps takedowns visible
-    * to [[ivfIndexIds]]/reconcile forever) and physically dropped one
-    * compaction cycle LATER, so a reader whose plan captured the
-    * tombstone listing pre-swap never hits a missing file — the same
-    * grace convention the corpus generations get. The read paths shed
-    * the anti-join once the originals age out. The copy runs FIRST, so the new
-    * `corpus_v<N+1>` becomes visible (its `_SUCCESS`, written by the
-    * Spark job's commit) only when complete. The predecessor stays on
-    * disk as the grace copy for readers that resolved it
-    * pre-compaction; older generations are pruned. Returns the number
-    * of cells compacted (0 = nothing to do, no generation written).
-    *
-    * Single-maintenance-writer by design: appends and compaction are
-    * serialized in the ingest's foreachBatch; two concurrent
-    * compactions would race on the same generation number. */
+    * in a single file, into the next `corpus_v<N>` of a
+    * [[Stores.swapGeneration]]; the tombstones it purged go through
+    * the [[Stores.Ledger]], whose `purged/` keeps takedowns visible to
+    * [[ivfIndexIds]]/reconcile. Returns the number of cells compacted
+    * (0 = nothing to do, no generation written). Serialized with
+    * appends in the ingest's foreachBatch. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                       maxFilesPerCell: Int = 4): Int = {
     require(maxFilesPerCell >= 1, s"maxFilesPerCell $maxFilesPerCell must be >= 1")
     val root = liveIndexRoot(spark, dir)
     val live = liveCorpusDir(spark, root)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val livePath = new org.apache.hadoop.fs.Path(live)
-    val fs = livePath.getFileSystem(conf)
-    def parquets(p: org.apache.hadoop.fs.Path) =
-      fs.listStatus(p).filter { s =>
-        val n = s.getPath.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
-    val cellDirs = fs.listStatus(livePath)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-    // Tombstone purge rides the same generation swap: snapshot the
-    // tombstone FILES first, then read ids from EXACTLY those files —
-    // a concurrent delete landing between a dir-level id read and a
-    // later file listing would otherwise be consumed without its rows
-    // ever entering the purge set. With the file snapshot as the
-    // single source, a racing delete is simply not consumed and
-    // survives to the next pass. Tombstoned cells (bounded collect:
+    val fs = new org.apache.hadoop.fs.Path(live)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // ids come from EXACTLY the snapshotted files, so a delete racing
+    // this pass is not consumed; tombstoned cells (bounded collect:
     // ≤ nlist ints) force into the rewrite set — a raw file copy
-    // cannot drop rows.
-    // Consumption is a two-phase, grace-deferred protocol:
-    //   pass N: copy each consumed tombstone file into the purged-ids
-    //     LEDGER ($root/purged — read by ivfIndexIds(includeTombstoned)
-    //     so a purged takedown never "goes missing" to reconcile) and
-    //     LEAVE the original in place — a reader whose plan captured
-    //     the tombstone listing pre-swap can still open it.
-    //   pass N+1: the original, now shadowed by its ledger copy for a
-    //     full maintenance cycle, is finally deleted — the same grace
-    //     convention corpus generations get.
-    val purgedDir = new org.apache.hadoop.fs.Path(s"$root/purged")
-    val ledgered: Set[String] =
-      if (fs.exists(purgedDir))
-        fs.listStatus(purgedDir).map(_.getPath.getName).toSet
-      else Set.empty
-    val (graceExpired, tombFiles) = {
-      val p = new org.apache.hadoop.fs.Path(s"$root/tombstones")
-      val all: Array[org.apache.hadoop.fs.Path] =
-        if (fs.exists(p)) fs.listStatus(p).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-        else Array.empty
-      all.partition(f => ledgered.contains(f.getName))
-    }
-    graceExpired.foreach(f => fs.delete(f, false))
-    def consumeTombstones(): Unit = if (tombFiles.nonEmpty) {
-      fs.mkdirs(purgedDir)
-      tombFiles.foreach { f =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, f, fs,
-          new org.apache.hadoop.fs.Path(purgedDir, f.getName), false, conf)
-      }
-    }
+    // cannot drop rows
+    val ledger = Stores.ledger(spark, root)
+    val tombFiles = ledger.pending()
     val tombs: Option[DataFrame] =
       if (tombFiles.isEmpty) None
-      else Some(spark.read.parquet(tombFiles.map(_.toString).toIndexedSeq: _*)
+      else Some(spark.read.parquet(tombFiles.map(_.toString): _*)
         .select("vec_id").distinct())
     val tombCells: Set[Int] = tombs match {
       case None => Set.empty
       case Some(t) => spark.read.parquet(live).join(t, Seq("vec_id"))
         .select("cell").distinct().collect().map(_.getInt(0)).toSet
     }
-    val (rewrite, within) = cellDirs.partition { d =>
-      parquets(d.getPath).length > maxFilesPerCell ||
-        tombCells.contains(d.getPath.getName.stripPrefix("cell=").toInt)
+    val (rewrite, within) = Stores.partitions(spark, live, "cell=").partition {
+      case (c, d) => Stores.parquetFiles(fs, d).length > maxFilesPerCell || tombCells(c)
     }
-    if (rewrite.isEmpty) {
-      // Nothing to rewrite: consumed tombstones match no live row
-      // (already purged, or an id never indexed — which must STILL be
-      // ledgered, or reconcile would index it later against the
-      // takedown) — ledger them; the next pass drops the originals.
-      consumeTombstones()
-      return 0
-    }
-    val liveVersion =
-      if (live.endsWith("/corpus")) 0 else live.substring(live.lastIndexOf("_v") + 2).toInt
-    val next = s"$root/corpus_v${liveVersion + 1}"
-    // carry within-bound cells first — invisible until _SUCCESS lands
-    within.foreach { d =>
-      val dst = new org.apache.hadoop.fs.Path(s"$next/${d.getPath.getName}")
-      fs.mkdirs(dst)
-      parquets(d.getPath).foreach { f =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, fs,
-          new org.apache.hadoop.fs.Path(dst, f.getPath.getName), false, conf)
+    // with nothing to rewrite the consumed tombstones match no live row
+    // (already purged, or an id never indexed — which must STILL be
+    // ledgered, or reconcile would index it later against the takedown)
+    if (rewrite.nonEmpty)
+      Stores.swapGeneration(spark, root, "corpus", live, within.map(_._2)) { next =>
+        val cells = rewrite.map(_._1)
+        val toRewrite = spark.read.parquet(live).filter(col("cell").isin(cells: _*))
+        tombs.map(t => toRewrite.join(t, Seq("vec_id"), "left_anti")).getOrElse(toRewrite)
+          .repartition(cells.length, col("cell"))
+          .write.mode("append").partitionBy("cell").parquet(next)
       }
-    }
-    val cells = rewrite.map(_.getPath.getName.stripPrefix("cell=").toInt).toIndexedSeq
-    val toRewrite = spark.read.parquet(live)
-      .filter(col("cell").isin(cells: _*))
-    tombs.map(t => toRewrite.join(t, Seq("vec_id"), "left_anti")).getOrElse(toRewrite)
-      .repartition(cells.length, col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(next)
-    // prune generations older than the grace copy (the just-replaced live)
-    (0 until liveVersion).foreach { v =>
-      val old = new org.apache.hadoop.fs.Path(
-        if (v == 0) s"$root/corpus" else s"$root/corpus_v$v")
-      if (fs.exists(old)) fs.delete(old, true)
-    }
-    // purge complete in the new generation → consume the snapshotted
-    // tombstone files into the ledger (a delete that raced in is not
-    // in the snapshot and stays pending for the next pass)
-    consumeTombstones()
+    ledger.consume(tombFiles)
     rewrite.length
   }
 

@@ -1,19 +1,37 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.SparkSession
 
-/** The engine's shared generation-store convention, as ONE mechanism
-  * instead of a copied idiom: a store lives at `dir/base` until a
-  * maintenance pass writes `dir/base_v<N>` and commits it with a
-  * marker file; readers resolve the highest COMMITTED generation and
-  * need zero coordination with writers, the replaced generation
-  * survives one cycle as the grace copy for plans that resolved it
-  * pre-swap. Used by the band index and IVF corpus stores
-  * ([[TextDedup]], [[Embeddings]]), the corpus-of-record MERGE store
-  * ([[CorpusStore]]), and the inverted text index ([[TextIndex]] —
-  * which commits with its own marker because Spark's `_SUCCESS` lands
-  * mid-build there). */
+/** The engine's persisted-store conventions, each stated once.
+  *
+  * Generation swap. A store lives at `dir/base` until a maintenance
+  * pass writes `dir/base_v<N>` and commits it with a marker file;
+  * readers resolve the highest COMMITTED generation
+  * ([[liveGeneration]]) and need zero coordination with writers.
+  * [[swapGeneration]] is the one writer: it clears an uncommitted
+  * next generation a crashed pass left, carries untouched partition
+  * directories by raw file copy, runs the caller's rewrite, commits
+  * the marker, and prunes every generation older than the replaced
+  * one, which survives one cycle as the grace copy for plans that
+  * resolved it pre-swap. Users: the corpus-of-record MERGE store
+  * ([[CorpusStore.merge]]), the inverted text index
+  * ([[TextIndex.compact]] — committed with its own marker because
+  * Spark's `_SUCCESS` lands mid-build there), the IVF corpus
+  * ([[Embeddings.compactIvfIndex]]) and the band index's two stores
+  * ([[TextDedup.compactBandIndex]]).
+  *
+  * Takedown ledger. A delete appends an id file under `tombstones/`
+  * and readers anti-join it at once. A purging pass snapshots the
+  * files from [[Ledger.pending]], removes their ids' rows, then
+  * [[Ledger.consume]]s them: each is copied into `purged/` — the
+  * durable ids ledger reconcile diffs against, so a purged takedown is
+  * never re-indexed — and the original stays one more cycle for
+  * readers whose plan listed it pre-swap; the next pass's `pending()`
+  * drops it. A delete racing a pass is not in its snapshot and waits
+  * for the next one. Users: the text, IVF and band indexes and the
+  * streaming ingest's corpus purge
+  * ([[graft.streaming.CorpusIngest.purgeCorpusTombstones]]). */
 private[graft] object Stores {
 
   /** Highest committed `dir/base_v<N>`, else `dir/base` — the base is
@@ -86,18 +104,11 @@ private[graft] object Stores {
       org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{broadcast, count, lit}
-    val root = new Path(live)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val geo = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partPrefix))
-      .map { d =>
-        val files = fs.listStatus(d.getPath).filter { f =>
-          val n = f.getPath.getName
-          n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-        }
-        (d.getPath.getName.stripPrefix(partPrefix).toInt,
-          files.length.toLong, files.map(_.getLen).sum)
-      }.toSeq.toDF(partCol, "n_files", "bytes")
+    val fs = new Path(live).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val geo = partitions(spark, live, partPrefix).map { case (n, d) =>
+      val files = parquetFiles(fs, d)
+      (n, files.length.toLong, files.map(_.getLen).sum)
+    }.toDF(partCol, "n_files", "bytes")
     spark.read.parquet(live)
       .groupBy(partCol).agg(count(lit(1)).as("n_rows"))
       .join(broadcast(geo), partCol)
@@ -126,6 +137,97 @@ private[graft] object Stores {
       else Seq.empty
     (baseGen ++ versioned).sortBy(_._1)
   }
+
+  /** The generation swap (see the object doc) of the store `dir/base`
+    * whose live generation is `live`: `write(next)` adds the rewritten
+    * partitions to `next` beside the `carry` directories, copied with
+    * their slice of each `sidecars` directory. Single maintenance
+    * writer: callers serialize their passes. */
+  def swapGeneration(spark: SparkSession, dir: String, base: String,
+                     live: String, carry: Seq[Path],
+                     marker: String = "_SUCCESS",
+                     sidecars: Seq[String] = Nil)(write: String => Unit): Unit = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def drop(p: Path): Unit = if (fs.exists(p)) fs.delete(p, true)
+    def copyDir(src: Path, dst: Path): Unit = {
+      fs.mkdirs(dst)
+      parquetFiles(fs, src).foreach(f => copy(fs, f.getPath, new Path(dst, f.getPath.getName)))
+    }
+    val liveVersion = generationOf(live, base)
+    val next = s"$dir/${base}_v${liveVersion + 1}"
+    // an uncommitted next generation is a crashed pass's garbage, not
+    // a resumable state: its part files must not leak into the retry
+    drop(new Path(next))
+    carry.foreach { part =>
+      copyDir(part, new Path(next, part.getName))
+      sidecars.map(s => s -> new Path(s"$live/$s/${part.getName}"))
+        .filter { case (_, src) => fs.exists(src) }
+        .foreach { case (s, src) => copyDir(src, new Path(s"$next/$s/${part.getName}")) }
+    }
+    write(next)
+    val committed = new Path(next, marker)
+    if (!fs.exists(committed)) fs.create(committed).close()
+    (0 until liveVersion).foreach(v =>
+      drop(new Path(if (v == 0) s"$dir/$base" else s"$dir/${base}_v$v")))
+  }
+
+  /** The `<prefix><n>` partition directories of a store generation, as
+    * (n, path). */
+  def partitions(spark: SparkSession, live: String,
+                 prefix: String): Seq[(Int, Path)] = {
+    val root = new Path(live)
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(root).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+      .map(s => s.getPath.getName.stripPrefix(prefix).toInt -> s.getPath)
+  }
+
+  /** The parquet data files directly under `p` (no markers, no hidden
+    * checksum files). */
+  def parquetFiles(fs: FileSystem, p: Path): Seq[FileStatus] =
+    fs.listStatus(p).toSeq.filter { s =>
+      val n = s.getPath.getName
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }
+
+  private def copy(fs: FileSystem, src: Path, dst: Path): Unit =
+    FileUtil.copy(fs, src, fs, dst, false, fs.getConf)
+
+  /** The takedown ledger (see the object doc) of the store at `dir`. */
+  final class Ledger private[Stores] (fs: FileSystem, tombDir: Path,
+                                      purgedDir: Path) {
+    /** Every takedown file on disk, purged or not. */
+    def tombstones: Seq[Path] = listed(tombDir)
+
+    /** The ledger copies of every consumed takedown file. */
+    def purged: Seq[Path] = listed(purgedDir)
+
+    /** Drops the originals whose ledger copy landed on an earlier pass
+      * (their grace cycle is over) and returns the takedown files this
+      * pass has still to purge. */
+    def pending(): Seq[Path] = {
+      val ledgered = purged.map(_.getName).toSet
+      val (expired, open) = tombstones.partition(f => ledgered(f.getName))
+      expired.foreach(fs.delete(_, false))
+      open
+    }
+
+    /** Ledgers `files`, a [[pending]] snapshot whose rows are purged. */
+    def consume(files: Seq[Path]): Unit = if (files.nonEmpty) {
+      fs.mkdirs(purgedDir)
+      files.foreach(f => copy(fs, f, new Path(purgedDir, f.getName)))
+    }
+
+    private def listed(p: Path): Seq[Path] =
+      if (fs.exists(p))
+        fs.listStatus(p).toSeq.map(_.getPath).filter(_.getName.endsWith(".parquet"))
+      else Nil
+  }
+
+  def ledger(spark: SparkSession, dir: String, tombs: String = "tombstones",
+             purged: String = "purged"): Ledger =
+    new Ledger(new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new Path(s"$dir/$tombs"), new Path(s"$dir/$purged"))
 
   // --- serving-path model-parameter cache ---------------------------
   //

@@ -39,9 +39,6 @@ import org.apache.spark.sql.functions._
   */
 object TextDedup {
 
-  /** Whitespace tokens of lower-cased trimmed text. */
-  def tokens(text: Column): Column = split(trim(lower(text)), "\\s+")
-
   /** Distinct word k-shingles ("w1 w2 w3") as strings, first-occurrence
     * order — the reference semantic that ShingleHashes reproduces in
     * hashed form. Served by the compiled
@@ -671,20 +668,7 @@ object TextDedup {
     ids.select(col(ids.columns.head).cast("long").as("doc_id")).distinct()
       .coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
 
-  private def bandTombstoneFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Array[org.apache.hadoop.fs.Path] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    if (fs.exists(p))
-      fs.listStatus(p).map(_.getPath).filter(_.getName.endsWith(".parquet"))
-    else Array.empty
-  }
-
-  /** Live generation of a band-index store: the highest
-    * `<name>_v<N>` directory whose `_SUCCESS` marker committed, else
-    * the base `<name>` layout — the same resolve-then-read convention
-    * as the IVF corpus generations, so compaction swaps need zero
-    * caller coordination. */
+  /** Live generation of a band-index store (`bands` or `shingles`). */
   private def liveStore(spark: org.apache.spark.sql.SparkSession,
                         dir: String, name: String): String =
     Stores.liveGeneration(spark, dir, name)
@@ -707,56 +691,29 @@ object TextDedup {
 
   /** Pay the band index's small-file debt: per-batch appends add one
     * file per touched bucket per store per trigger, so at streaming
-    * cadence file counts grow without bound. Buckets above
-    * `maxFilesPerBucket` are rewritten — one Spark job per store,
-    * `repartition(cols=bucket)` so each rewritten bucket lands in one
-    * file; within-bound buckets carry over by raw file copy — into a
-    * new `<store>_v<N+1>` generation that becomes visible only when
-    * its `_SUCCESS` commits. The replaced generation stays as the
-    * grace copy for readers that resolved it pre-swap; older
-    * generations are pruned. Returns buckets rewritten across both
-    * stores (0 = nothing to do, no generation written). Single
-    * maintenance writer by design, like [[graft.pipeline.Embeddings
-    * .compactIvfIndex]] — the ingest serializes appends and
-    * compaction inside foreachBatch. */
+    * cadence file counts grow without bound. Per store, buckets above
+    * `maxFilesPerBucket` or holding a tombstoned doc are rewritten in
+    * one Spark job, `repartition(cols=bucket)` so each lands in one
+    * file, into the next `<store>_v<N>` of a
+    * [[Stores.swapGeneration]]; the tombstones purged from both stores
+    * go through the [[Stores.Ledger]]. Returns buckets rewritten
+    * across both stores (0 = nothing to do, no generation written).
+    * Serialized with appends in the ingest's foreachBatch. */
   def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
                        dir: String, maxFilesPerBucket: Int = 4): Int = {
     require(maxFilesPerBucket >= 1,
       s"maxFilesPerBucket $maxFilesPerBucket must be >= 1")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    // Tombstone purge rides the generation swap with the same
-    // two-phase grace protocol as the IVF index: snapshot the files,
-    // purge their ids from every rewritten bucket, copy the consumed
-    // files into the purged/ ledger, and physically drop the
-    // originals one compaction cycle later — a reader whose plan
-    // captured the tombstone listing pre-swap never hits a missing
-    // file, and a delete racing this pass is simply not consumed.
-    val purgedDir = new org.apache.hadoop.fs.Path(s"$dir/purged")
-    val ledgered: Set[String] =
-      if (fs.exists(purgedDir))
-        fs.listStatus(purgedDir).map(_.getPath.getName).toSet
-      else Set.empty
-    val (graceExpired, tombFiles) =
-      bandTombstoneFiles(fs, dir).partition(f => ledgered.contains(f.getName))
-    graceExpired.foreach(f => fs.delete(f, false))
+    val ledger = Stores.ledger(spark, dir)
+    val tombFiles = ledger.pending()
     val tombs: Option[DataFrame] =
       if (tombFiles.isEmpty) None
-      else Some(spark.read.parquet(tombFiles.map(_.toString).toIndexedSeq: _*)
+      else Some(spark.read.parquet(tombFiles.map(_.toString): _*)
         .select("doc_id").distinct())
     val n = compactStore(spark, dir, "bands", maxFilesPerBucket, tombs) +
       compactStore(spark, dir, "shingles", maxFilesPerBucket, tombs)
-    // purge complete in both stores' new generations -> consume the
-    // snapshotted tombstone files into the ledger (ids matching no
-    // live row must still consume, or they would re-force rewrites
-    // forever)
-    if (tombFiles.nonEmpty) {
-      fs.mkdirs(purgedDir)
-      tombFiles.foreach { f =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, f, fs,
-          new org.apache.hadoop.fs.Path(purgedDir, f.getName), false, conf)
-      }
-    }
+    // ids matching no live row must still consume, or they would
+    // re-force rewrites forever
+    ledger.consume(tombFiles)
     n
   }
 
@@ -767,20 +724,14 @@ object TextDedup {
                    includeTombstoned: Boolean = false): DataFrame = {
     val stored = spark.read.parquet(liveStore(spark, dir, "shingles"))
       .select("doc_id").distinct()
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pending = bandTombstoneFiles(fs, dir).map(_.toString).toIndexedSeq
+    val ledger = Stores.ledger(spark, dir)
+    val pending = ledger.tombstones.map(_.toString)
     if (includeTombstoned) {
       // stored ∪ pending tombstones ∪ the purged-ids ledger: a
       // takedown stays in this set even after compaction removed its
       // rows — without the ledger, reconcile would see the id as
       // "missing" and re-index a deleted doc from the corpus of record
-      val extra = pending ++ {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/purged")
-        if (fs.exists(p)) fs.listStatus(p).map(_.getPath.toString)
-          .filter(_.endsWith(".parquet"))
-        else Array.empty[String]
-      }
+      val extra = pending ++ ledger.purged.map(_.toString)
       if (extra.isEmpty) stored
       else stored.unionByName(
         spark.read.parquet(extra: _*).select("doc_id")).distinct()
@@ -836,16 +787,8 @@ object TextDedup {
                            dir: String, name: String, maxFiles: Int,
                            tombs: Option[DataFrame]): Int = {
     val live = liveStore(spark, dir, name)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val livePath = new org.apache.hadoop.fs.Path(live)
-    val fs = livePath.getFileSystem(conf)
-    def parquets(p: org.apache.hadoop.fs.Path) =
-      fs.listStatus(p).filter { s =>
-        val n = s.getPath.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
-    val bucketDirs = fs.listStatus(livePath)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
+    val fs = new org.apache.hadoop.fs.Path(live)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // tombstoned buckets force into the rewrite set (bounded collect:
     // ≤ buckets ints) — a raw file copy cannot drop rows
     val tombBuckets: Set[Int] = tombs match {
@@ -853,36 +796,18 @@ object TextDedup {
       case Some(t) => spark.read.parquet(live).join(t, Seq("doc_id"))
         .select("bucket").distinct().collect().map(_.getInt(0)).toSet
     }
-    val (rewrite, within) = bucketDirs.partition { d =>
-      parquets(d.getPath).length > maxFiles ||
-        tombBuckets.contains(d.getPath.getName.stripPrefix("bucket=").toInt)
+    val (rewrite, within) = Stores.partitions(spark, live, "bucket=").partition {
+      case (b, d) => Stores.parquetFiles(fs, d).length > maxFiles || tombBuckets(b)
     }
-    if (rewrite.isEmpty) return 0
-    val liveVersion =
-      if (live.endsWith(s"/$name")) 0
-      else live.substring(live.lastIndexOf("_v") + 2).toInt
-    val next = s"$dir/${name}_v${liveVersion + 1}"
-    // carry within-bound buckets first — invisible until _SUCCESS lands
-    within.foreach { d =>
-      val dst = new org.apache.hadoop.fs.Path(s"$next/${d.getPath.getName}")
-      fs.mkdirs(dst)
-      parquets(d.getPath).foreach { f =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, fs,
-          new org.apache.hadoop.fs.Path(dst, f.getPath.getName), false, conf)
+    if (rewrite.nonEmpty)
+      Stores.swapGeneration(spark, dir, name, live, within.map(_._2)) { next =>
+        val bs = rewrite.map(_._1)
+        val toRewrite = spark.read.parquet(live).filter(col("bucket").isin(bs: _*))
+        tombs.map(t => toRewrite.join(t, Seq("doc_id"), "left_anti"))
+          .getOrElse(toRewrite)
+          .repartition(bs.length, col("bucket"))
+          .write.mode("append").partitionBy("bucket").parquet(next)
       }
-    }
-    val bs = rewrite.map(_.getPath.getName.stripPrefix("bucket=").toInt).toIndexedSeq
-    val toRewrite = spark.read.parquet(live).filter(col("bucket").isin(bs: _*))
-    tombs.map(t => toRewrite.join(t, Seq("doc_id"), "left_anti"))
-      .getOrElse(toRewrite)
-      .repartition(bs.length, col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(next)
-    // prune generations older than the grace copy (the replaced live)
-    (0 until liveVersion).foreach { v =>
-      val old = new org.apache.hadoop.fs.Path(
-        if (v == 0) s"$dir/$name" else s"$dir/${name}_v$v")
-      if (fs.exists(old)) fs.delete(old, true)
-    }
     rewrite.length
   }
 
@@ -914,16 +839,14 @@ object TextDedup {
       .select(col("bucket"), col("key"), col("doc_id").as("dup_of"))
     // takedowns leave immediately: tombstoned corpus ids drop at the
     // candidate stage (no tombstones -> no join in the plan at all)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tombFiles = bandTombstoneFiles(fs, dir)
+    val tombFiles = Stores.ledger(spark, dir).tombstones
     val rawCands = idx.join(bband, Seq("bucket", "key"))
       .filter(col("dup_of") =!= col("doc_id"))
       .select(col("doc_id"), col("dup_of")).distinct()
     val cands = materialize(
       if (tombFiles.isEmpty) rawCands
       else rawCands.join(
-        spark.read.parquet(tombFiles.map(_.toString).toIndexedSeq: _*)
+        spark.read.parquet(tombFiles.map(_.toString): _*)
           .select(col("doc_id").as("dup_of")).distinct(),
         Seq("dup_of"), "left_anti"),
       eager = true)
@@ -996,12 +919,10 @@ object TextDedup {
   private def liveBandRows(spark: org.apache.spark.sql.SparkSession,
                            dir: String): DataFrame = {
     val bands = spark.read.parquet(liveStore(spark, dir, "bands"))
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tombFiles = bandTombstoneFiles(fs, dir)
+    val tombFiles = Stores.ledger(spark, dir).tombstones
     if (tombFiles.isEmpty) bands
     else bands.join(
-      spark.read.parquet(tombFiles.map(_.toString).toIndexedSeq: _*)
+      spark.read.parquet(tombFiles.map(_.toString): _*)
         .select(col("doc_id")).distinct(),
       Seq("doc_id"), "left_anti")
   }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
   * engine's index triptych (IVF for vectors, band index for near-dup,
   * this for keywords), with the same store conventions throughout:
   * frozen scheme in `meta/`, bucket-partitioned stores, O(batch)
-  * appends, tombstoned takedowns, `_SUCCESS`-committed generation
-  * swaps with one-cycle grace, single maintenance writer.
+  * appends, and the [[Stores]] generation swap and takedown ledger.
   *
   * Layout:
   *   dir/meta/                  one row (buckets, block_size), frozen
@@ -272,13 +271,8 @@ object TextIndex {
       .coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
   }
 
-  private def tombstoneFiles(spark: SparkSession, dir: String): Seq[String] = {
-    val p = new Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      fs.listStatus(p).map(_.getPath.toString).filter(_.endsWith(".parquet")).toSeq
-    else Seq.empty
-  }
+  private def tombstoneFiles(spark: SparkSession, dir: String): Seq[String] =
+    Stores.ledger(spark, dir).tombstones.map(_.toString)
 
   private def statsFiles(spark: SparkSession, store: String): Seq[String] = {
     val p = new Path(s"$store/_stats")
@@ -1059,16 +1053,10 @@ object TextIndex {
           includeTombstoned: Boolean = false): DataFrame = {
     val store = liveStore(spark, dir)
     val stored = spark.read.parquet(store).select("doc_id").distinct()
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pending = tombstoneFiles(spark, dir)
+    val ledger = Stores.ledger(spark, dir)
+    val pending = ledger.tombstones.map(_.toString)
     if (includeTombstoned) {
-      val ledger = {
-        val p = new Path(s"$dir/purged")
-        if (fs.exists(p)) fs.listStatus(p).map(_.getPath.toString)
-          .filter(_.endsWith(".parquet")).toSeq
-        else Seq.empty
-      }
-      val extra = pending ++ ledger
+      val extra = pending ++ ledger.purged.map(_.toString)
       if (extra.isEmpty) stored
       else stored.unionByName(
         spark.read.parquet(extra: _*).select("doc_id")).distinct()
@@ -1109,41 +1097,23 @@ object TextIndex {
     (nMissing, orphanIds.length.toLong)
   }
 
-  /** Physical purge + small-file maintenance, the shared generation
-    * protocol ([[TextDedup.compactBandIndex]]): buckets holding
-    * tombstoned postings or exceeding `maxFilesPerBucket` rewrite into
-    * `postings_v<N+1>`; within-bound buckets carry by raw file copy;
-    * the generation becomes visible only when `_SUCCESS` commits, the
-    * replaced one stays as the grace copy, older ones prune. The new
-    * generation gets ONE exact stats row recomputed from the
+  /** Physical purge + small-file maintenance through
+    * [[Stores.swapGeneration]] (marker [[CommitMarker]]) and the
+    * [[Stores.Ledger]]: buckets holding tombstoned postings or
+    * exceeding `maxFilesPerBucket` rewrite into `postings_v<N+1>`,
+    * the others carry with their `_skips` slice. Pending tombstones
+    * alone still commit an all-carry generation, and a torn append
+    * (see [[PendingAppend]]) forces every bucket through the rewrite.
+    * The new generation gets ONE exact stats row recomputed from the
     * survivors' distinct (doc_id, len) — so (N, avgdl) snap back to
-    * exact after every compaction. Consumed tombstone files are
-    * dropped only after the swap commits; a delete racing this pass
-    * survives to the next one. Returns buckets rewritten. */
+    * exact after every compaction. Returns buckets rewritten. */
   def compact(spark: SparkSession, dir: String, maxFilesPerBucket: Int = 4): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(dir).getFileSystem(conf)
-    // two-phase tombstone consumption with the purged-ids ledger
-    // (band/IVF convention): files already ledgered on a prior pass
-    // drop now (grace expired); pending ones purge this pass and then
-    // enter the ledger — [[ids]](includeTombstoned) unions the ledger,
-    // so [[reconcile]] can never resurrect a purged takedown
-    val purgedDir = new Path(s"$dir/purged")
-    val ledgered: Set[String] =
-      if (fs.exists(purgedDir)) fs.listStatus(purgedDir).map(_.getPath.getName).toSet
-      else Set.empty
-    val (graceExpired, tombs) = tombstoneFiles(spark, dir)
-      .partition(f => ledgered.contains(new Path(f).getName))
-    graceExpired.foreach(f => fs.delete(new Path(f), false))
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val ledger = Stores.ledger(spark, dir)
+    val tombs = ledger.pending()
     val tombDf = if (tombs.isEmpty) None
-      else Some(spark.read.parquet(tombs: _*).select("doc_id").distinct())
+      else Some(spark.read.parquet(tombs.map(_.toString): _*).select("doc_id").distinct())
     val live = liveStore(spark, dir)
-    val bucketDirs = fs.listStatus(new Path(live))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-    def parquets(p: Path) = fs.listStatus(p).filter { s =>
-      val n = s.getPath.getName
-      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-    }
     val tombBuckets: Set[Int] = tombDf match {
       case None => Set.empty
       case Some(t) => spark.read.parquet(live).join(broadcast(t), Seq("doc_id"))
@@ -1154,100 +1124,66 @@ object TextIndex {
     // the rewrite leg, whose sidecar is rebuilt from the actual
     // surviving rows, so the new generation serves pruned again
     val tornAppend = hasPendingAppend(fs, live)
-    val (rewrite, carry) =
-      if (tornAppend) (bucketDirs, Array.empty[org.apache.hadoop.fs.FileStatus])
-      else bucketDirs.partition { d =>
-        parquets(d.getPath).length > maxFilesPerBucket ||
-          tombBuckets.contains(d.getPath.getName.stripPrefix("bucket=").toInt)
-      }
+    val (rewrite, carry) = Stores.partitions(spark, live, "bucket=").partition {
+      case (b, d) => tornAppend ||
+        Stores.parquetFiles(fs, d).length > maxFilesPerBucket || tombBuckets(b)
+    }
     if (rewrite.isEmpty && tombs.isEmpty) return 0
-    val liveVersion =
-      if (live.endsWith("/postings")) 0
-      else live.substring(live.lastIndexOf("_v") + 2).toInt
-    val next = s"$dir/postings_v${liveVersion + 1}"
-    // a torn previous compaction may have left this path uncommitted
-    // (no marker) — it is garbage, not a resumable state
-    if (fs.exists(new Path(next))) fs.delete(new Path(next), true)
     // skip-sidecar invariant: a generation has `_skips` iff EVERY
     // posting is covered by it — so carry/rebuild only when the live
     // generation has one (a pre-sidecar store must not gain a partial
     // sidecar; it regains pruning on the next full build)
     val hasSkips = fs.exists(new Path(s"$live/_skips"))
-    carry.foreach { d =>
-      val dst = new Path(s"$next/${d.getPath.getName}")
-      fs.mkdirs(dst)
-      parquets(d.getPath).foreach(f =>
-        FileUtil.copy(fs, f.getPath, fs,
-          new Path(dst, f.getPath.getName), false, conf))
-      val skipSrc = new Path(s"$live/_skips/${d.getPath.getName}")
-      if (hasSkips && fs.exists(skipSrc)) {
-        val skipDst = new Path(s"$next/_skips/${d.getPath.getName}")
-        fs.mkdirs(skipDst)
-        parquets(skipSrc).foreach(f =>
-          FileUtil.copy(fs, f.getPath, fs,
-            new Path(skipDst, f.getPath.getName), false, conf))
-      }
-    }
-    if (rewrite.nonEmpty) {
-      val bs = rewrite.map(_.getPath.getName.stripPrefix("bucket=").toInt).toIndexedSeq
-      val toRewrite = spark.read.parquet(live).filter(col("bucket").isin(bs: _*))
-      val survivors = tombDf
-        .map(t => toRewrite.join(broadcast(t), Seq("doc_id"), "left_anti"))
-        .getOrElse(toRewrite)
-      if (!hasSkips) {
-        survivors
-          .repartition(bs.length, col("bucket"))
-          .write.mode("append").partitionBy("bucket").parquet(next)
-      } else {
-        // re-block the survivors to clean global impact ranks (append
-        // deltas restarted blk at 0 — merged bounds stay correct but
-        // coarse; compaction is where they snap back). avgdl here is a
-        // LAYOUT hint only (bounds are per-block facts), so the
-        // postings-weighted mean is close enough and one cheap agg.
-        val blockSize = blockSizeOf(spark.read.parquet(s"$dir/meta").head())
-        val avgdl = survivors.agg(avg(col("len"))).head() match {
-          case r if r.isNullAt(0) => 1.0
-          case r => math.max(1.0, r.getDouble(0))
-        }
-        val reblocked = survivors.drop("blk")
-          .withColumn("blk", ((row_number().over(
-              org.apache.spark.sql.expressions.Window.partitionBy("term")
-                .orderBy(impactCol(avgdl).desc, col("doc_id"))) - 1)
-            / lit(blockSize)).cast("int"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          reblocked
+    Stores.swapGeneration(spark, dir, "postings", live, carry.map(_._2), CommitMarker,
+        if (hasSkips) Seq("_skips") else Nil) { next =>
+      if (rewrite.nonEmpty) {
+        val bs = rewrite.map(_._1)
+        val toRewrite = spark.read.parquet(live).filter(col("bucket").isin(bs: _*))
+        val survivors = tombDf
+          .map(t => toRewrite.join(broadcast(t), Seq("doc_id"), "left_anti"))
+          .getOrElse(toRewrite)
+        if (!hasSkips) {
+          survivors
             .repartition(bs.length, col("bucket"))
-            .sortWithinPartitions("term", "blk")
             .write.mode("append").partitionBy("bucket").parquet(next)
-          writeSkips(reblocked, next, avgdl, overwrite = false)
-        } finally { reblocked.unpersist(); () }
+        } else {
+          // re-block the survivors to clean global impact ranks (append
+          // deltas restarted blk at 0 — merged bounds stay correct but
+          // coarse; compaction is where they snap back). avgdl here is
+          // a LAYOUT hint only (bounds are per-block facts), so the
+          // postings-weighted mean is close enough and one cheap agg.
+          val blockSize = blockSizeOf(spark.read.parquet(s"$dir/meta").head())
+          val avgdl = survivors.agg(avg(col("len"))).head() match {
+            case r if r.isNullAt(0) => 1.0
+            case r => math.max(1.0, r.getDouble(0))
+          }
+          val reblocked = survivors.drop("blk")
+            .withColumn("blk", ((row_number().over(
+                org.apache.spark.sql.expressions.Window.partitionBy("term")
+                  .orderBy(impactCol(avgdl).desc, col("doc_id"))) - 1)
+              / lit(blockSize)).cast("int"))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try {
+            reblocked
+              .repartition(bs.length, col("bucket"))
+              .sortWithinPartitions("term", "blk")
+              .write.mode("append").partitionBy("bucket").parquet(next)
+            writeSkips(reblocked, next, avgdl, overwrite = false)
+          } finally { reblocked.unpersist(); () }
+        }
       }
+      // exact stats from the survivors, INSIDE the new generation and
+      // before the commit marker, so the generation becomes visible
+      // only with postings AND stats complete (Spark's own _SUCCESS
+      // from the rewrite write above is not the resolve key — see
+      // CommitMarker). survivorStats is the ONE formula the torn-window
+      // serving path also uses (their agreement is spec-pinned), and
+      // its empty-store guard keeps an all-tombstoned compact from
+      // writing a null total_len.
+      val (sNd, sTl) = survivorStats(spark.read.parquet(next))
+      writeStatsDelta(spark, sNd, sTl, next)
     }
-    // exact stats from the survivors, INSIDE the new generation; the
-    // COMMIT MARKER goes last, so the generation becomes visible only
-    // with postings AND stats complete (Spark's own _SUCCESS from the
-    // rewrite write above is not the resolve key — see CommitMarker).
-    // survivorStats is the ONE formula the torn-window serving path
-    // also uses (their agreement is spec-pinned), and its empty-store
-    // guard keeps an all-tombstoned compact from writing a null
-    // total_len.
-    val (sNd, sTl) = survivorStats(spark.read.parquet(next))
-    writeStatsDelta(spark, sNd, sTl, next)
-    fs.create(new Path(s"$next/$CommitMarker")).close()
-    (0 until liveVersion).foreach { v =>
-      val old = new Path(if (v == 0) s"$dir/postings" else s"$dir/postings_v$v")
-      if (fs.exists(old)) fs.delete(old, true)
-    }
-    // consume the snapshotted tombstones into the ledger; the files
-    // themselves drop on the NEXT pass (grace for in-flight readers)
-    if (tombs.nonEmpty) {
-      fs.mkdirs(purgedDir)
-      tombs.foreach { f =>
-        val p = new Path(f)
-        FileUtil.copy(fs, p, fs, new Path(purgedDir, p.getName), false, conf)
-      }
-    }
+    ledger.consume(tombs)
     rewrite.length
   }
 }

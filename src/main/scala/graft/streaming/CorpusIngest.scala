@@ -62,14 +62,9 @@ object CorpusIngest {
       graft.pipeline.TextIndex.delete(spark, d, ids))
   }
 
-  private def corpusTombstoneFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      outDir: String): Array[org.apache.hadoop.fs.Path] = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/_corpus_tombstones")
-    if (fs.exists(p))
-      fs.listStatus(p).map(_.getPath).filter(_.getName.endsWith(".parquet"))
-    else Array.empty
-  }
+  private def corpusLedger(spark: org.apache.spark.sql.SparkSession,
+                           outDir: String): graft.pipeline.Stores.Ledger =
+    graft.pipeline.Stores.ledger(spark, outDir, "_corpus_tombstones", "_corpus_purged")
 
   /** The landed corpus as of now: everything appended to `outDir`
     * minus tombstoned takedowns. THE canonical reader — the ingest's
@@ -79,12 +74,10 @@ object CorpusIngest {
   def landedCorpus(spark: org.apache.spark.sql.SparkSession,
                    outDir: String): DataFrame = {
     val raw = spark.read.parquet(outDir)
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tombs = corpusTombstoneFiles(fs, outDir)
+    val tombs = corpusLedger(spark, outDir).tombstones
     if (tombs.isEmpty) raw
     else raw.join(
-      broadcast(spark.read.parquet(tombs.map(_.toString).toIndexedSeq: _*)
+      broadcast(spark.read.parquet(tombs.map(_.toString): _*)
         .select("doc_id").distinct()),
       Seq("doc_id"), "left_anti")
   }
@@ -93,10 +86,9 @@ object CorpusIngest {
     * the purge half of [[takedown]], file-scoped: one doc_id-only scan
     * locates the part files containing victims, survivors of exactly
     * those files rewrite through a staged commit, untouched files are
-    * never read or written. Consumed tombstone files move to the
-    * `_corpus_purged/` ledger (so reconcile keeps refusing to
-    * resurrect the ids) with the same one-cycle grace the index
-    * stores use.
+    * never read or written. Consumed tombstones go through the
+    * [[graft.pipeline.Stores.Ledger]] (`_corpus_tombstones/` →
+    * `_corpus_purged/`), as in the index stores.
     *
     * Crash safety is ROLL-FORWARD, not atomic swap (an append-only
     * ingest dir cannot generation-swap while the stream appends to
@@ -117,8 +109,7 @@ object CorpusIngest {
   def purgeCorpusTombstones(spark: org.apache.spark.sql.SparkSession,
                             outDir: String): Int = {
     import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(outDir).getFileSystem(conf)
+    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stageRoot = new Path(s"$outDir/_purge_stage")
 
     // 1. roll forward (or collect) earlier purges
@@ -148,18 +139,11 @@ object CorpusIngest {
     if (fs.exists(stageRoot))
       fs.listStatus(stageRoot).map(_.getPath).foreach(replay)
 
-    // 2. consume ledgered (grace-expired) vs pending tombstones, as in
-    // the index stores: files already copied to the ledger on a prior
-    // pass are physically dropped now
-    val purgedDir = new Path(s"$outDir/_corpus_purged")
-    val ledgered: Set[String] =
-      if (fs.exists(purgedDir)) fs.listStatus(purgedDir).map(_.getPath.getName).toSet
-      else Set.empty
-    val (graceExpired, tombFiles) =
-      corpusTombstoneFiles(fs, outDir).partition(f => ledgered.contains(f.getName))
-    graceExpired.foreach(f => fs.delete(f, false))
+    // 2. the ledger's pending tombstones
+    val ledger = corpusLedger(spark, outDir)
+    val tombFiles = ledger.pending()
     if (tombFiles.isEmpty) return 0
-    val victims = spark.read.parquet(tombFiles.map(_.toString).toIndexedSeq: _*)
+    val victims = spark.read.parquet(tombFiles.map(_.toString): _*)
       .select("doc_id").distinct()
 
     // 3. locate touched part files — doc_id column only crosses this
@@ -190,14 +174,9 @@ object CorpusIngest {
       replay(stage)
     }
 
-    // 5. consume the tombstones into the ledger (grace: files drop on
-    // the NEXT pass); ids with no live rows must still consume or they
-    // would re-trigger scans forever
-    fs.mkdirs(purgedDir)
-    tombFiles.foreach { f =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, f, fs,
-        new Path(purgedDir, f.getName), false, conf)
-    }
+    // 5. ids with no live rows must still consume or they would
+    // re-trigger scans forever
+    ledger.consume(tombFiles)
     doomedUris.length
   }
 

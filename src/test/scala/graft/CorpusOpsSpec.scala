@@ -561,5 +561,55 @@ class CorpusOpsSpec extends AnyFunSuite with SparkFixture {
     val want = base.collect().map(r => r.getLong(0) -> r.getString(1)).toMap -
       16L - 8L ++ Map(8L -> "updated eight")
     assert(got == want, "merged content corrupted by the torn generation")
+
+    // the same crash input for every other generation-swapped store:
+    // a stale part file under the uncommitted next generation, then a
+    // compaction that purges one takedown (forcing a rewrite)
+    def plantTorn(live: String, next: String): java.io.File = {
+      val part = new java.io.File(live).listFiles()
+        .filter(f => f.isDirectory && !f.getName.startsWith("_")).minBy(_.getName)
+      val torn = new java.io.File(next, part.getName)
+      torn.mkdirs()
+      val stale = new java.io.File(torn, "part-stale-from-crash.parquet")
+      java.nio.file.Files.copy(
+        part.listFiles().filter(_.getName.endsWith(".parquet")).head.toPath, stale.toPath)
+      stale
+    }
+    def rows(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Seq[String] =
+      df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+    def checkRetry(name: String, live: String, next: String, idCol: String,
+                   cols: Seq[String])(delete: Long => Unit)(compact: => Unit): Unit = {
+      val victim = spark.read.parquet(live).select(idCol).head().getLong(0)
+      val want = rows(spark.read.parquet(live).filter(col(idCol) =!= victim), cols)
+      delete(victim)
+      val stale = plantTorn(live, next)
+      compact
+      assert(!stale.exists(), s"$name: torn garbage survived the retry")
+      assert(rows(spark.read.parquet(next), cols) == want,
+        s"$name: compacted generation corrupted by the torn generation")
+    }
+    val tmp = (p: String) => java.nio.file.Files.createTempDirectory(p).toString
+
+    val ivf = tmp("graft_ivf_torn")
+    graft.pipeline.Embeddings.writeIvfIndex(
+      Engine.table(spark, sfDir, "embeddings"), ivf, nlist = 4)
+    checkRetry("compactIvfIndex", s"$ivf/corpus", s"$ivf/corpus_v1", "vec_id",
+      Seq("vec_id", "cell", "v", "nrm", "codes"))(
+      id => graft.pipeline.Embeddings.deleteFromIvfIndex(spark, ivf, Seq(id)))(
+      graft.pipeline.Embeddings.compactIvfIndex(spark, ivf))
+
+    val band = tmp("graft_band_torn")
+    graft.pipeline.TextDedup.writeBandIndex(base, band, buckets = 4)
+    checkRetry("compactBandIndex", s"$band/bands", s"$band/bands_v1", "doc_id",
+      Seq("doc_id", "key", "bucket"))(
+      id => graft.pipeline.TextDedup.deleteFromBandIndex(Seq(id).toDF("doc_id"), band))(
+      graft.pipeline.TextDedup.compactBandIndex(spark, band))
+
+    val text = tmp("graft_text_torn")
+    graft.pipeline.TextIndex.write(base, text, buckets = 4)
+    checkRetry("TextIndex.compact", s"$text/postings", s"$text/postings_v1", "doc_id",
+      Seq("term", "doc_id", "tf", "len", "bucket"))(
+      id => graft.pipeline.TextIndex.delete(spark, text, Seq(id)))(
+      graft.pipeline.TextIndex.compact(spark, text))
   }
 }

@@ -4,9 +4,11 @@
 # (`RDD[<n>]`, named by scans over checkpointed data) normalized — all
 # three are session counters, so they differ between any two runs of
 # the same plan, and RDD ids also move with the number of jobs run
-# earlier in the session. Prints a unified diff per changed query
-# and exits non-zero on any difference, including a query dumped on
-# one side only.
+# earlier in the session. The source line in such an RDD's call site
+# (`at localCheckpoint at TextDedup.scala:<n>`) is normalized too: it
+# moves with any edit above that line. Prints a unified diff per
+# changed query and exits non-zero on any difference, including a
+# query dumped on one side only.
 #
 # Each directory holds one PlanDump run; files pair by query name, the
 # file name minus its `_<suffix>.txt` (so the suffix has no `_`):
@@ -25,7 +27,7 @@ for side in A B; do
     [ -e "$f" ] || { echo "FAIL: no PlanDump files in $src"; exit 1; }
     query="$(basename "$f" .txt)"; query="${query%_*}"
     [ ! -e "$TMP/$side/$query.txt" ] || { echo "FAIL: $src holds two dumps of $query"; exit 1; }
-    sed -E 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g; s/RDD\[[0-9]+\]/RDD[N]/g' "$f" > "$TMP/$side/$query.txt"
+    sed -E 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g; s/RDD\[[0-9]+\]/RDD[N]/g; s/\.scala:[0-9]+/.scala:N/g' "$f" > "$TMP/$side/$query.txt"
   done
 done
 if diff -ru "$TMP/A" "$TMP/B"; then
