@@ -187,7 +187,7 @@ object Engine {
     val raw =
       if (tag != null && spark.catalog.tableExists(s"graft_${tag}_$name"))
         spark.table(s"graft_${tag}_$name")
-      else spark.read.parquet(s"$dir/$name.parquet")
+      else sources.Parquet.read(spark, s"$dir/$name.parquet")
     val df =
       if (name == "events" && raw.schema("ts").dataType.typeName == "long")
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

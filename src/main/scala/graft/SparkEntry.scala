@@ -847,7 +847,7 @@ object SparkEntry {
     // (compute_value.rs:350-431, README.md:46-50): UInt8..UInt64 widen
     // to the next signed type that holds the range (u64 → decimal(20,0)),
     // FLOAT16 → float via the codegen'd HalfToFloatExpr — all through
-    // the read_files fallback (Spark's own reader rejects FLOAT16, so
+    // read_files' footer route (Spark's own reader rejects FLOAT16, so
     // this exercises sources.WidenedParquet end-to-end). The filter
     // keeps only rows past a signed boundary: a sign-extension bug
     // cannot return the oracle's row set.
@@ -862,7 +862,7 @@ object SparkEntry {
     // Aggregates over every widened type, incl. counts of rows beyond
     // each signed max (u64 > Long.MaxValue proves the decimal path).
     "q_unsigned_agg" -> ((s, _) => {
-      val df = sources.WidenedParquet.read(s, UnsignedFixture)
+      val df = sources.Parquet.read(s, UnsignedFixture)
       df.agg(
         count(lit(1)).as("n"),
         sum(col("u8").cast("long")).as("sum_u8"),
@@ -3656,7 +3656,7 @@ object SparkEntry {
     // with). Self lands at rank 1; the rest is the exact brute-force
     // top-k the ann_topk family already pins.
     "q_sql_ann" -> ((s, d) => {
-      val v = s.read.parquet(s"$d/embeddings.parquet")
+      val v = sources.Parquet.read(s, s"$d/embeddings.parquet")
         .filter(col("vec_id") === 0L).select("embedding")
         .head().getSeq[Float](0)
       val vecStr = v.map(f => f.toDouble.toString).mkString(",")
@@ -3878,7 +3878,7 @@ object SparkEntry {
     // The query vector is vec_id 7's embedding as a literal (the
     // serving shape: the application supplies the vector).
     "q_sql_hybrid" -> ((s, d) => {
-      val v = s.read.parquet(s"$d/embeddings.parquet")
+      val v = sources.Parquet.read(s, s"$d/embeddings.parquet")
         .filter(col("vec_id") === 7L).select("embedding")
         .head().getSeq[Float](0)
       val vecStr = v.map(f => f.toDouble.toString).mkString(",")
@@ -3906,7 +3906,7 @@ object SparkEntry {
     // q_sql_hybrid, contributions (w * RrfScale) div (k0 + rank) in
     // integer arithmetic so the DuckDB restatement is bit-identical.
     "q_sql_hybrid_weighted" -> ((s, d) => {
-      val v = s.read.parquet(s"$d/embeddings.parquet")
+      val v = sources.Parquet.read(s, s"$d/embeddings.parquet")
         .filter(col("vec_id") === 7L).select("embedding")
         .head().getSeq[Float](0)
       val vecStr = v.map(f => f.toDouble.toString).mkString(",")

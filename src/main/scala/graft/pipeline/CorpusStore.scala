@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.sources.Parquet
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -63,7 +64,7 @@ object CorpusStore {
 
   /** The live corpus, without the layout column. */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(live(spark, dir)).drop("bucket")
+    Parquet.read(spark, live(spark, dir)).drop("bucket")
 
   /** Generations still on disk, ascending (version, path). With the
     * one-cycle grace retention that is at most two: the replaced
@@ -96,7 +97,7 @@ object CorpusStore {
     // instead of paying a second directory scan per plan
     val gens = resolved.getOrElse(generations(spark, dir))
     gens.find(_._1 == asOf) match {
-      case Some((_, path)) => spark.read.parquet(path).drop("bucket")
+      case Some((_, path)) => Parquet.read(spark, path).drop("bucket")
       case None => throw new IllegalArgumentException(
         s"[GENERATION_PRUNED] generation $asOf of $dir is not on disk; " +
           s"available: ${gens.map(_._1).mkString(",")} (retention keeps one grace cycle)")
@@ -129,7 +130,7 @@ object CorpusStore {
     * commits an all-carry generation. */
   def merge(spark: SparkSession, dir: String,
             upserts: DataFrame, deletes: DataFrame): (Int, Int) = {
-    val buckets = spark.read.parquet(s"$dir/meta").head().getAs[Int]("buckets")
+    val buckets = Parquet.read(spark, s"$dir/meta").head().getAs[Int]("buckets")
     val liveDir = live(spark, dir)
     val withBucket = (df: DataFrame) => df.withColumn("bucket",
       pmod(col("doc_id"), lit(buckets.toLong)).cast("int"))
@@ -146,7 +147,7 @@ object CorpusStore {
         // a change set may touch a bucket the store has no partition
         // for yet (first insert hashing there) — the pruned scan just
         // reads empty for it and the write creates it
-        val base = spark.read.parquet(liveDir)
+        val base = Parquet.read(spark, liveDir)
           .filter(col("bucket").isin(touched.toIndexedSeq: _*))
         mergedBuckets(base, up.select(base.columns.map(col).toIndexedSeq: _*), del)
           .repartition(touched.length, col("bucket"))

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -619,7 +620,7 @@ object Embeddings {
     // centroid) — the data the adaptive re-probe's cell bound needs
     // (see [[ivfSearch]]). Read back from the just-written partitioned
     // corpus (narrower than re-running assignment over the input).
-    cellRadii(spark.read.parquet(s"$dir/corpus").select("cell", "v", "nrm"), cents)
+    cellRadii(Parquet.read(spark, s"$dir/corpus").select("cell", "v", "nrm"), cents)
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/cellstats")
   }
 
@@ -674,7 +675,7 @@ object Embeddings {
     val spark = newEmb.sparkSession
     val root = liveIndexRoot(spark, dir)
     val cents: Array[Array[Double]] =
-      spark.read.parquet(s"$root/centroids").orderBy("cell")
+      Parquet.read(spark, s"$root/centroids").orderBy("cell")
         .select("centroid").collect()
         .map(_.getSeq[Double](0).toArray)
     val books = readCodebooks(spark, root)
@@ -741,7 +742,7 @@ object Embeddings {
       // corpus of record (the takedown-resurrection bug).
       Seq(tombstoneIds(spark, root), purgedIds(spark, root)).flatten
         .foldLeft(
-          spark.read.parquet(liveCorpusDir(spark, root)).select("vec_id"))(
+          Parquet.read(spark, liveCorpusDir(spark, root)).select("vec_id"))(
           _.unionByName(_))
         .distinct()
     else liveRows(spark, root).select("vec_id")
@@ -874,7 +875,7 @@ object Embeddings {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-      Some(spark.read.parquet(path).select("vec_id").distinct())
+      Some(Parquet.read(spark, path).select("vec_id").distinct())
     else None
   }
 
@@ -886,7 +887,7 @@ object Embeddings {
   private def liveRows(spark: org.apache.spark.sql.SparkSession,
                        dir: String): DataFrame = {
     val root = liveIndexRoot(spark, dir)
-    val corpus = spark.read.parquet(liveCorpusDir(spark, root))
+    val corpus = Parquet.read(spark, liveCorpusDir(spark, root))
     tombstoneIds(spark, root)
       .map(t => corpus.join(t, Seq("vec_id"), "left_anti"))
       .getOrElse(corpus)
@@ -937,11 +938,11 @@ object Embeddings {
     val tombFiles = ledger.pending()
     val tombs: Option[DataFrame] =
       if (tombFiles.isEmpty) None
-      else Some(spark.read.parquet(tombFiles.map(_.toString): _*)
+      else Some(Parquet.read(spark, tombFiles.map(_.toString): _*)
         .select("vec_id").distinct())
     val tombCells: Set[Int] = tombs match {
       case None => Set.empty
-      case Some(t) => spark.read.parquet(live).join(t, Seq("vec_id"))
+      case Some(t) => Parquet.read(spark, live).join(t, Seq("vec_id"))
         .select("cell").distinct().collect().map(_.getInt(0)).toSet
     }
     val (rewrite, within) = Stores.partitions(spark, live, "cell=").partition {
@@ -953,7 +954,7 @@ object Embeddings {
     if (rewrite.nonEmpty)
       Stores.swapGeneration(spark, root, "corpus", live, within.map(_._2)) { next =>
         val cells = rewrite.map(_._1)
-        val toRewrite = spark.read.parquet(live).filter(col("cell").isin(cells: _*))
+        val toRewrite = Parquet.read(spark, live).filter(col("cell").isin(cells: _*))
         tombs.map(t => toRewrite.join(t, Seq("vec_id"), "left_anti")).getOrElse(toRewrite)
           .repartition(cells.length, col("cell"))
           .write.mode("append").partitionBy("cell").parquet(next)
@@ -1002,7 +1003,7 @@ object Embeddings {
                     dir: String): DataFrame = {
     import spark.implicits._
     val root = liveIndexRoot(spark, dir)
-    val cents = spark.read.parquet(s"$root/centroids")
+    val cents = Parquet.read(spark, s"$root/centroids")
       .select(col("cell"), transform(col("centroid"), _.cast("double")).as("cent"))
     val live = liveRows(spark, dir)
       .select(col("cell"), col("v"), col("nrm"))
@@ -1028,7 +1029,7 @@ object Embeddings {
     * codegen reference objects for the ADC expressions. */
   private def readCodebooks(spark: org.apache.spark.sql.SparkSession,
                             dir: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(s"$dir/codebooks")
+    val rows = Parquet.read(spark, s"$dir/codebooks")
       .orderBy("sub", "code").collect()
     val m = rows.iterator.map(_.getInt(0)).max + 1
     val k = rows.iterator.map(_.getInt(1)).max + 1
@@ -1046,7 +1047,7 @@ object Embeddings {
   private def cachedCentroids(spark: org.apache.spark.sql.SparkSession,
                               root: String): Array[Array[Double]] =
     cached(spark, "cents", s"$root/centroids") {
-      spark.read.parquet(s"$root/centroids").orderBy("cell")
+      Parquet.read(spark, s"$root/centroids").orderBy("cell")
         .select("centroid").collect()
         .map(_.getSeq[Double](0).toArray)
     }
@@ -1056,7 +1057,7 @@ object Embeddings {
   private def cachedRadii(spark: org.apache.spark.sql.SparkSession,
                           root: String): Map[Int, Double] =
     cached(spark, "radii", s"$root/cellstats") {
-      spark.read.parquet(s"$root/cellstats")
+      Parquet.read(spark, s"$root/cellstats")
         .groupBy("cell").agg(max("radius").as("radius")).collect()
         .map(r => r.getInt(0) -> r.getDouble(1)).toMap
     }

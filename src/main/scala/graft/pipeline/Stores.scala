@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.sources.Parquet
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -109,7 +110,7 @@ private[graft] object Stores {
       val files = parquetFiles(fs, d)
       (n, files.length.toLong, files.map(_.getLen).sum)
     }.toDF(partCol, "n_files", "bytes")
-    spark.read.parquet(live)
+    Parquet.read(spark, live)
       .groupBy(partCol).agg(count(lit(1)).as("n_rows"))
       .join(broadcast(geo), partCol)
       .select(partCol, "n_rows", "n_files", "bytes")

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.functions.NativeExpressions
+import graft.sources.Parquet
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -642,7 +643,7 @@ object TextDedup {
     * of record, which the index is a pure function of). */
   def appendToBandIndex(docs: DataFrame, dir: String): Unit = {
     val spark = docs.sparkSession
-    val m = spark.read.parquet(s"$dir/meta").head()
+    val m = Parquet.read(spark, s"$dir/meta").head()
     val (k, bands, rpb, buckets) = (m.getAs[Int]("k"), m.getAs[Int]("bands"),
       m.getAs[Int]("rows_per_band"), m.getAs[Int]("buckets"))
     val sh = withHashes(docs, k)
@@ -707,7 +708,7 @@ object TextDedup {
     val tombFiles = ledger.pending()
     val tombs: Option[DataFrame] =
       if (tombFiles.isEmpty) None
-      else Some(spark.read.parquet(tombFiles.map(_.toString): _*)
+      else Some(Parquet.read(spark, tombFiles.map(_.toString): _*)
         .select("doc_id").distinct())
     val n = compactStore(spark, dir, "bands", maxFilesPerBucket, tombs) +
       compactStore(spark, dir, "shingles", maxFilesPerBucket, tombs)
@@ -722,7 +723,7 @@ object TextDedup {
     * id-level view [[reconcileBandIndex]] diffs against. */
   def bandIndexIds(spark: org.apache.spark.sql.SparkSession, dir: String,
                    includeTombstoned: Boolean = false): DataFrame = {
-    val stored = spark.read.parquet(liveStore(spark, dir, "shingles"))
+    val stored = Parquet.read(spark, liveStore(spark, dir, "shingles"))
       .select("doc_id").distinct()
     val ledger = Stores.ledger(spark, dir)
     val pending = ledger.tombstones.map(_.toString)
@@ -734,10 +735,10 @@ object TextDedup {
       val extra = pending ++ ledger.purged.map(_.toString)
       if (extra.isEmpty) stored
       else stored.unionByName(
-        spark.read.parquet(extra: _*).select("doc_id")).distinct()
+        Parquet.read(spark, extra: _*).select("doc_id")).distinct()
     } else if (pending.isEmpty) stored
     else stored.join( // live = serving ids: pending tombstones excluded
-      spark.read.parquet(pending: _*).select("doc_id"), Seq("doc_id"), "left_anti")
+      Parquet.read(spark, pending: _*).select("doc_id"), Seq("doc_id"), "left_anti")
   }
 
   /** Targeted repair of a band index against the corpus of record —
@@ -793,7 +794,7 @@ object TextDedup {
     // ≤ buckets ints) — a raw file copy cannot drop rows
     val tombBuckets: Set[Int] = tombs match {
       case None => Set.empty
-      case Some(t) => spark.read.parquet(live).join(t, Seq("doc_id"))
+      case Some(t) => Parquet.read(spark, live).join(t, Seq("doc_id"))
         .select("bucket").distinct().collect().map(_.getInt(0)).toSet
     }
     val (rewrite, within) = Stores.partitions(spark, live, "bucket=").partition {
@@ -802,7 +803,7 @@ object TextDedup {
     if (rewrite.nonEmpty)
       Stores.swapGeneration(spark, dir, name, live, within.map(_._2)) { next =>
         val bs = rewrite.map(_._1)
-        val toRewrite = spark.read.parquet(live).filter(col("bucket").isin(bs: _*))
+        val toRewrite = Parquet.read(spark, live).filter(col("bucket").isin(bs: _*))
         tombs.map(t => toRewrite.join(t, Seq("doc_id"), "left_anti"))
           .getOrElse(toRewrite)
           .repartition(bs.length, col("bucket"))
@@ -821,7 +822,7 @@ object TextDedup {
   def nearDupsAgainstBandIndex(batch: DataFrame, dir: String,
                                threshold: Double = 0.8): DataFrame = {
     val spark = batch.sparkSession
-    val m = spark.read.parquet(s"$dir/meta").head()
+    val m = Parquet.read(spark, s"$dir/meta").head()
     val (k, bands, rpb, buckets) = (m.getAs[Int]("k"), m.getAs[Int]("bands"),
       m.getAs[Int]("rows_per_band"), m.getAs[Int]("buckets"))
     requireThresholdServable(dir, threshold, bands, rpb)
@@ -834,7 +835,7 @@ object TextDedup {
     if (hit.isEmpty)
       return bsh.limit(0).select(col("doc_id"), col("doc_id").as("dup_of"),
         lit(0.0).as("jaccard"))
-    val idx = spark.read.parquet(liveStore(spark, dir, "bands"))
+    val idx = Parquet.read(spark, liveStore(spark, dir, "bands"))
       .filter(col("bucket").isin(hit.toIndexedSeq: _*))
       .select(col("bucket"), col("key"), col("doc_id").as("dup_of"))
     // takedowns leave immediately: tombstoned corpus ids drop at the
@@ -846,7 +847,7 @@ object TextDedup {
     val cands = materialize(
       if (tombFiles.isEmpty) rawCands
       else rawCands.join(
-        spark.read.parquet(tombFiles.map(_.toString): _*)
+        Parquet.read(spark, tombFiles.map(_.toString): _*)
           .select(col("doc_id").as("dup_of")).distinct(),
         Seq("dup_of"), "left_anti"),
       eager = true)
@@ -857,7 +858,7 @@ object TextDedup {
     if (cbuckets.isEmpty)
       return bsh.limit(0).select(col("doc_id"), col("doc_id").as("dup_of"),
         lit(0.0).as("jaccard"))
-    val csh = spark.read.parquet(liveStore(spark, dir, "shingles"))
+    val csh = Parquet.read(spark, liveStore(spark, dir, "shingles"))
       .filter(col("bucket").isin(cbuckets.toIndexedSeq: _*))
       .select(col("doc_id").as("dup_of"), col("sh").as("sh_b"))
     cands.join(bsh.select(col("doc_id"), col("sh").as("sh_a")), "doc_id")
@@ -918,11 +919,11 @@ object TextDedup {
     * every index-served read path starts from. */
   private def liveBandRows(spark: org.apache.spark.sql.SparkSession,
                            dir: String): DataFrame = {
-    val bands = spark.read.parquet(liveStore(spark, dir, "bands"))
+    val bands = Parquet.read(spark, liveStore(spark, dir, "bands"))
     val tombFiles = Stores.ledger(spark, dir).tombstones
     if (tombFiles.isEmpty) bands
     else bands.join(
-      spark.read.parquet(tombFiles.map(_.toString): _*)
+      Parquet.read(spark, tombFiles.map(_.toString): _*)
         .select(col("doc_id")).distinct(),
       Seq("doc_id"), "left_anti")
   }
@@ -947,11 +948,11 @@ object TextDedup {
   def nearDupPairsInBandIndex(spark: org.apache.spark.sql.SparkSession,
                               dir: String,
                               threshold: Double = 0.8): DataFrame = {
-    val m = spark.read.parquet(s"$dir/meta").head()
+    val m = Parquet.read(spark, s"$dir/meta").head()
     requireThresholdServable(dir, threshold,
       m.getAs[Int]("bands"), m.getAs[Int]("rows_per_band"))
     pairsFromLiveRows(liveBandRows(spark, dir),
-      spark.read.parquet(liveStore(spark, dir, "shingles")), threshold)
+      Parquet.read(spark, liveStore(spark, dir, "shingles")), threshold)
   }
 
   /** Near-dup CLUSTERS of the indexed corpus, served from the
@@ -971,11 +972,11 @@ object TextDedup {
                           dir: String,
                           threshold: Double = 0.8,
                           maxIters: Int = 20): DataFrame = {
-    val m = spark.read.parquet(s"$dir/meta").head()
+    val m = Parquet.read(spark, s"$dir/meta").head()
     requireThresholdServable(dir, threshold,
       m.getAs[Int]("bands"), m.getAs[Int]("rows_per_band"))
     val live = liveBandRows(spark, dir)
-    val sh = spark.read.parquet(liveStore(spark, dir, "shingles"))
+    val sh = Parquet.read(spark, liveStore(spark, dir, "shingles"))
     clustersFromPairs(
       live.select(col("doc_id")).distinct(),
       // unsorted: label propagation is order-agnostic (see

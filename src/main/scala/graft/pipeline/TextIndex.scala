@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.sources.Parquet
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -231,7 +232,7 @@ object TextIndex {
     * route to exhaustive (exact), never to wrong results. */
   def append(docs: DataFrame, dir: String): Unit = {
     val spark = docs.sparkSession
-    val meta = spark.read.parquet(s"$dir/meta").head()
+    val meta = Parquet.read(spark, s"$dir/meta").head()
     val buckets = meta.getAs[Int]("buckets")
     val store = liveStore(spark, dir)
     val (nd, tl) = docStats(docs)
@@ -290,11 +291,11 @@ object TextIndex {
       if (hasPendingAppend(
           new Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration),
           store)) {
-        val root = spark.read.parquet(store)
+        val root = Parquet.read(spark, store)
         val survivors =
           if (tombs.isEmpty) root
           else root.join(
-            broadcast(spark.read.parquet(tombs: _*).select("doc_id").distinct()),
+            broadcast(Parquet.read(spark, tombs: _*).select("doc_id").distinct()),
             Seq("doc_id"), "left_anti")
         Some(survivorStats(survivors))
       } else None
@@ -369,7 +370,7 @@ object TextIndex {
       // appends add delta files, compaction swaps the store path — both
       // change the signature, so the cache can never serve stale totals
       Stores.cachedModel(spark, "tidx-stats", s"$store/_stats") {
-        val r = spark.read.parquet(statsFiles(spark, store): _*)
+        val r = Parquet.read(spark, statsFiles(spark, store): _*)
           .agg(sum("n_docs"), sum("total_len")).head()
         (r.getLong(0), r.getLong(1))
       }
@@ -389,8 +390,8 @@ object TextIndex {
     else {
       val gone = Stores.cachedModel(spark,
         s"tidx-tomb-stats:${tombs.sorted.mkString(",")}", s"$store/_stats") {
-        val t = spark.read.parquet(tombs: _*).select("doc_id").distinct()
-        val r = spark.read.parquet(store)
+        val t = Parquet.read(spark, tombs: _*).select("doc_id").distinct()
+        val r = Parquet.read(spark, store)
           .join(broadcast(t), Seq("doc_id"))
           .select("doc_id", "len").distinct()
           .agg(count(lit(1)), coalesce(sum("len"), lit(0L))).head()
@@ -414,7 +415,7 @@ object TextIndex {
     // per-query meta job (see Stores.cachedModel)
     val buckets: Integer = Stores.cachedModel(spark, "tidx-meta", s"$dir/meta") {
       Integer.valueOf(
-        spark.read.parquet(s"$dir/meta").head().getAs[Int]("buckets"))
+        Parquet.read(spark, s"$dir/meta").head().getAs[Int]("buckets"))
     }
     // Hash the term list to bucket literals ON THE DRIVER by evaluating
     // Spark's own XxHash64 expression locally (seed 42 = the SQL
@@ -435,13 +436,13 @@ object TextIndex {
     // ONE root read: its file index is the query's postings snapshot —
     // the pruned scan AND the torn-window stats below both derive from
     // it, so they can never see different file sets
-    val postRoot = spark.read.parquet(store)
+    val postRoot = Parquet.read(spark, store)
     val post = postRoot
       .filter(col("bucket").isin(termBuckets.toIndexedSeq: _*))
       .filter(col("term").isin(qTerms: _*))
     val tombs = tombstoneFiles(spark, dir)
     val tombDf = if (tombs.isEmpty) None
-      else Some(spark.read.parquet(tombs: _*).select("doc_id").distinct())
+      else Some(Parquet.read(spark, tombs: _*).select("doc_id").distinct())
     val antiTomb = (df: DataFrame) => tombDf
       .map(t => df.join(broadcast(t), Seq("doc_id"), "left_anti")).getOrElse(df)
     val live = antiTomb(post)
@@ -724,7 +725,7 @@ object TextIndex {
     if (pending) return exhaustive("torn-append")
     val avgdl = totalLen.toDouble / nDocs
     val allTerms = queries.flatMap(_._2).distinct
-    val skips = spark.read.parquet(s"$store/_skips")
+    val skips = Parquet.read(spark, s"$store/_skips")
       .filter(col("bucket").isin(termBuckets.toIndexedSeq: _*))
       .filter(col("term").isin(allTerms: _*))
     // per-block impact bound, the MIN of two valid upper bounds:
@@ -759,7 +760,7 @@ object TextIndex {
       if (tombs.isEmpty) 0L
       else Stores.cachedModel(spark,
         s"tidx-tomb-count:${tombs.sorted.mkString(",")}", store) {
-        Long.box(spark.read.parquet(tombs: _*).select("doc_id").distinct().count())
+        Long.box(Parquet.read(spark, tombs: _*).select("doc_id").distinct().count())
       }.longValue
     def idfOf(df: Long): Double =
       math.log(1.0 + ((nDocs - df) + 0.5) / (df + 0.5))
@@ -1052,17 +1053,17 @@ object TextIndex {
   def ids(spark: SparkSession, dir: String,
           includeTombstoned: Boolean = false): DataFrame = {
     val store = liveStore(spark, dir)
-    val stored = spark.read.parquet(store).select("doc_id").distinct()
+    val stored = Parquet.read(spark, store).select("doc_id").distinct()
     val ledger = Stores.ledger(spark, dir)
     val pending = ledger.tombstones.map(_.toString)
     if (includeTombstoned) {
       val extra = pending ++ ledger.purged.map(_.toString)
       if (extra.isEmpty) stored
       else stored.unionByName(
-        spark.read.parquet(extra: _*).select("doc_id")).distinct()
+        Parquet.read(spark, extra: _*).select("doc_id")).distinct()
     } else if (pending.isEmpty) stored
     else stored.join(
-      broadcast(spark.read.parquet(pending: _*).select("doc_id").distinct()),
+      broadcast(Parquet.read(spark, pending: _*).select("doc_id").distinct()),
       Seq("doc_id"), "left_anti")
   }
 
@@ -1112,11 +1113,11 @@ object TextIndex {
     val ledger = Stores.ledger(spark, dir)
     val tombs = ledger.pending()
     val tombDf = if (tombs.isEmpty) None
-      else Some(spark.read.parquet(tombs.map(_.toString): _*).select("doc_id").distinct())
+      else Some(Parquet.read(spark, tombs.map(_.toString): _*).select("doc_id").distinct())
     val live = liveStore(spark, dir)
     val tombBuckets: Set[Int] = tombDf match {
       case None => Set.empty
-      case Some(t) => spark.read.parquet(live).join(broadcast(t), Seq("doc_id"))
+      case Some(t) => Parquet.read(spark, live).join(broadcast(t), Seq("doc_id"))
         .select("bucket").distinct().collect().map(_.getInt(0)).toSet
     }
     // a torn append (pending marker — see [[PendingAppend]]) means the
@@ -1138,7 +1139,7 @@ object TextIndex {
         if (hasSkips) Seq("_skips") else Nil) { next =>
       if (rewrite.nonEmpty) {
         val bs = rewrite.map(_._1)
-        val toRewrite = spark.read.parquet(live).filter(col("bucket").isin(bs: _*))
+        val toRewrite = Parquet.read(spark, live).filter(col("bucket").isin(bs: _*))
         val survivors = tombDf
           .map(t => toRewrite.join(broadcast(t), Seq("doc_id"), "left_anti"))
           .getOrElse(toRewrite)
@@ -1152,7 +1153,7 @@ object TextIndex {
           // coarse; compaction is where they snap back). avgdl here is
           // a LAYOUT hint only (bounds are per-block facts), so the
           // postings-weighted mean is close enough and one cheap agg.
-          val blockSize = blockSizeOf(spark.read.parquet(s"$dir/meta").head())
+          val blockSize = blockSizeOf(Parquet.read(spark, s"$dir/meta").head())
           val avgdl = survivors.agg(avg(col("len"))).head() match {
             case r if r.isNullAt(0) => 1.0
             case r => math.max(1.0, r.getDouble(0))
@@ -1180,7 +1181,7 @@ object TextIndex {
       // serving path also uses (their agreement is spec-pinned), and
       // its empty-store guard keeps an all-tombstoned compact from
       // writing a null total_len.
-      val (sNd, sTl) = survivorStats(spark.read.parquet(next))
+      val (sNd, sTl) = survivorStats(Parquet.read(spark, next))
       writeStatsDelta(spark, sNd, sTl, next)
     }
     ledger.consume(tombs)

@@ -256,7 +256,7 @@ final class QueryServer(svc: QueryService, port: Int = 0) {
             (req \ "limit").extractOpt[Int].getOrElse(100),
             (req \ "forward").extractOpt[Boolean].getOrElse(true),
             (req \ "allow_overflow").extractOpt[Boolean].getOrElse(true))
-          val schema = r.asDataFrame.schema
+          val schema = r.schema
           val cols = schema.fieldNames
           val payload: List[JField] =
             if ((req \ "format").extractOpt[String].contains("arrow")) {

@@ -1,7 +1,8 @@
 package graft.service
 
-import graft.sources.{Connections, ReadFiles, ScriptRunner}
+import graft.sources.{Connections, Parquet, ReadFiles, ScriptRunner}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
@@ -616,7 +617,7 @@ final class QueryService(
     val totalBytes = fs.listStatus(path)
       .filter(s => s.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(dir).repartition(nFiles)
+    Parquet.read(spark, dir).repartition(nFiles)
       .write.mode("overwrite").parquet(versionDir(queryId, cur + 1))
     // prune everything older than the grace copy (the just-replaced cur)
     versions.dropRight(1).foreach { v =>
@@ -645,8 +646,10 @@ final case class ResultPage(rows: Seq[Row], next: Option[ResultCursor], prev: Op
   * `allowOverflow=false` fails a read that would cross the data
   * boundary, `true` clamps to what exists.
   *
-  * The read path launches ZERO Spark jobs (asserted in ServiceSpec):
-  * row counts come from parquet footers and pages are served by a
+  * The whole page path — schema, row counts and rows — launches ZERO
+  * Spark jobs (asserted in ServiceSpec, in process and over the TCP
+  * server): the schema and the row counts come from the parquet
+  * footers the reader opens once, and pages are served by a
   * driver-local row-group reader that skips straight to the target
   * group — the same direct row-group addressing as the reference's
   * `query_data_handler.rs:183-237`. A paged point-read through a
@@ -670,14 +673,18 @@ final class ResultReader(spark: SparkSession, dir: String) {
       .map(_.toString).sorted
   }
 
+  private lazy val footers = files.map(f => Parquet.footer(conf, new org.apache.hadoop.fs.Path(f)))
+
+  /** The result's schema from the first part-file's footer, as the
+    * Spark read of `dir` infers it; empty for a result with no
+    * part-file. */
+  lazy val schema: StructType = footers.headOption.fold(new StructType())(
+    Parquet.sparkSchema(spark, new org.apache.hadoop.fs.Path(files.head), _))
+
   /** Per-file, per-row-group row counts from footer metadata only. */
-  lazy val rowGroupRowCounts: Array[Array[Long]] = files.map { f =>
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
-    try {
-      val blocks = r.getFooter.getBlocks
-      Array.tabulate(blocks.size())(b => blocks.get(b).getRowCount)
-    } finally r.close()
+  lazy val rowGroupRowCounts: Array[Array[Long]] = footers.map { f =>
+    val blocks = f.getBlocks
+    Array.tabulate(blocks.size())(b => blocks.get(b).getRowCount)
   }
 
   /** Per-file row counts from footer metadata only. */
@@ -764,5 +771,5 @@ final class ResultReader(spark: SparkSession, dir: String) {
     ResultPage(rows.result(), next, prev)
   }
 
-  def asDataFrame: DataFrame = spark.read.parquet(dir)
+  def asDataFrame: DataFrame = spark.read.schema(schema).parquet(dir)
 }

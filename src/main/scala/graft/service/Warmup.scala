@@ -1,5 +1,6 @@
 package graft.service
 
+import graft.sources.Parquet
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -52,7 +53,7 @@ object Warmup {
         .map(i => (i, s"alpha beta gamma delta tok${i % 7} alpha beta"))
         .toDF("doc_id", "text")
       docs.coalesce(1).write.mode("overwrite").parquet(s"$dir/docs")
-      val scanned = spark.read.parquet(s"$dir/docs")
+      val scanned = Parquet.read(spark, s"$dir/docs")
       // persisted text index: build + pruned BM25 + positional phrase
       // (the lexical leg of the hybrid plan, including meta/stats
       // caches, bucket-pruned scans, decimal scoring, top-k sort)
@@ -70,7 +71,7 @@ object Warmup {
         .map(i => (i, Array.tabulate(16)(j => (1.0f + i * j % 5))))
         .toDF("vec_id", "embedding")
       emb.coalesce(1).write.mode("overwrite").parquet(s"$dir/emb")
-      val corpus = spark.read.parquet(s"$dir/emb")
+      val corpus = Parquet.read(spark, s"$dir/emb")
       graft.pipeline.Embeddings.writeIvfIndex(corpus, s"$dir/ivf", nlist = 4)
       val q = corpus.filter(col("vec_id") < 2)
         .select(col("vec_id").as("query_id"), col("embedding"))

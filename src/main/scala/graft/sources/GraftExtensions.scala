@@ -246,12 +246,12 @@ private[sources] object TvfRetrieval {
       (queries, isIndex) match {
         case (Left(terms), true) => TextIndex.search(spark, path, terms, k)
         case (Left(terms), false) =>
-          TextAnalysis.bm25(spark.read.parquet(path), terms)
+          TextAnalysis.bm25(Parquet.read(spark, path), terms)
             .orderBy(col("score").desc, col("doc_id")).limit(k)
         case (Right(batch), true) =>
           TextIndex.searchMany(spark, path, batch.toDF("query_id", "terms"), k)
         case (Right(batch), false) =>
-          TextAnalysis.bm25Many(spark.read.parquet(path), batch, k)
+          TextAnalysis.bm25Many(Parquet.read(spark, path), batch, k)
       }
     }
     if (isIndex) System.err.println(s"[$tvf] route=${TextIndex.lastRoute}")
@@ -282,7 +282,7 @@ private[sources] object TvfRetrieval {
       require(escapeCap.isEmpty,
         s"$tvf: escape_cap applies to the IVF index route; the " +
           s"brute-force route over $path is already exact")
-      val corpus = spark.read.parquet(path)
+      val corpus = Parquet.read(spark, path)
       corpus.select(size(col("embedding"))).head(1)
         .foreach(r => requireDim(r.getInt(0)))
       Embeddings.bruteForceTopKFor(queries,
@@ -524,7 +524,7 @@ object CorpusSearchTVF extends TableFunction {
       case Some(_) => None
       case None =>
         val (_, raw) = TvfArgs.batchFrame("corpus_search",
-          spark.read.parquet(resolve(opts("queries"))), "query_id", "query")
+          Parquet.read(spark, resolve(opts("queries"))), "query_id", "query")
         val rows = raw.select(col("query_id").cast("long"), col("query")).collect()
         TvfArgs.requireIds("corpus_search", "query_id", rows.map(_.get(0)).toSeq)
         val nulls = rows.filter(_.isNullAt(1)).map(_.getLong(0))
@@ -546,7 +546,7 @@ object CorpusSearchTVF extends TableFunction {
       case ("phrase", None) =>
         if (isIndex) graft.pipeline.TextIndex.searchPhrase(spark, resolved, query.get, k)
         else graft.pipeline.TextAnalysis.phraseCounts(
-          spark.read.parquet(resolved), query.get, k)
+          Parquet.read(spark, resolved), query.get, k)
       // index route: ONE pruned positional probe for the whole batch
       // (searchPhraseMany — the per-phrase verify is data, not plan,
       // so plan size stays FIXED however large the batch file is).
@@ -558,7 +558,7 @@ object CorpusSearchTVF extends TableFunction {
         if (isIndex)
           graft.pipeline.TextIndex.searchPhraseMany(spark, resolved, qs, k)
         else graft.pipeline.TextAnalysis.phraseCountsMany(
-          spark.read.parquet(resolved), qs, k)
+          Parquet.read(spark, resolved), qs, k)
           .orderBy("query_id", "doc_id")
       case _ => throw new IllegalStateException("unreachable")
     }
@@ -630,7 +630,7 @@ object CorpusAnnTVF extends TableFunction {
         // columns by name (positional fallback) + the shared id
         // contract, checked over the collected micro-batch
         val (rows, b) = TvfArgs.batchFrame("corpus_ann",
-          spark.read.parquet(resolve(opts("queries"))), "query_id", "embedding")
+          Parquet.read(spark, resolve(opts("queries"))), "query_id", "embedding")
         TvfArgs.requireIds("corpus_ann", "query_id",
           b.select(col("query_id").cast("long")).collect().map(_.get(0)).toSeq)
         (b, TvfRetrieval.batchDim("corpus_ann", rows.toSeq, 1))
@@ -641,7 +641,7 @@ object CorpusAnnTVF extends TableFunction {
     // micro-batch cap applies: an allow-list scales with the corpus.
     val allowed: Option[org.apache.spark.sql.DataFrame] =
       opts.get("filter").map { fp =>
-        val f = spark.read.parquet(resolve(fp))
+        val f = Parquet.read(spark, resolve(fp))
         require(f.columns.length == 1,
           s"corpus_ann: filter parquet must carry exactly one id column, " +
             s"got [${f.columns.mkString(", ")}]")
@@ -792,7 +792,7 @@ object CorpusDedupTVF extends TableFunction {
           s"corpus (simhashes are computed, not stored), got " +
           s"${fam.map(_.label).getOrElse("")} at $resolved")
       return graft.pipeline.TextDedup.simhashPairs(
-          spark.read.parquet(resolved), kOpt.getOrElse(3), threshold,
+          Parquet.read(spark, resolved), kOpt.getOrElse(3), threshold,
           maxHammingOpt.getOrElse(16), bandBitsOpt.getOrElse(8))
         .queryExecution.analyzed
     }
@@ -807,7 +807,7 @@ object CorpusDedupTVF extends TableFunction {
           s"(doc_id, payload), got ${fam.map(_.label).getOrElse("")} at $resolved")
       val maxH = maxHammingOpt.getOrElse(6)
       val bandBits = bandBitsOpt.getOrElse(graft.pipeline.Multimodal.BandBitsAuto)
-      val media = spark.read.parquet(resolved)
+      val media = Parquet.read(spark, resolved)
       val cols = media.columns.toSet
       require(cols.contains("doc_id") && cols.contains("payload"),
         s"corpus_dedup: mode=>'media' needs (doc_id, payload) columns " +
@@ -821,7 +821,7 @@ object CorpusDedupTVF extends TableFunction {
     // an index's gram scheme is frozen at build time: a conflicting
     // k must fail loud, not silently serve different grams
     if (isIndex) kOpt.foreach { k =>
-      val metaK = spark.read.parquet(s"$resolved/meta").head().getAs[Int]("k")
+      val metaK = Parquet.read(spark, s"$resolved/meta").head().getAs[Int]("k")
       require(k == metaK, s"corpus_dedup: k $k conflicts with the index's " +
         s"frozen shingle width $metaK at $resolved")
     }
@@ -831,23 +831,23 @@ object CorpusDedupTVF extends TableFunction {
           graft.pipeline.TextDedup.clustersInBandIndex(
             spark, resolved, threshold)
         else graft.pipeline.TextDedup.nearDupClusters(
-          spark.read.parquet(resolved), kOpt.getOrElse(3), threshold)
+          Parquet.read(spark, resolved), kOpt.getOrElse(3), threshold)
       case (None, _) =>
         if (isIndex)
           graft.pipeline.TextDedup.nearDupPairsInBandIndex(
             spark, resolved, threshold)
         else graft.pipeline.TextDedup.ngramJaccardPairs(
-          spark.read.parquet(resolved), kOpt.getOrElse(3), threshold)
+          Parquet.read(spark, resolved), kOpt.getOrElse(3), threshold)
       case (Some(bpath), _) =>
         // same reading truth as the sibling batch TVFs: (doc_id,
         // text) by name, positional fallback, loud on neither
         val (_, batch) = TvfArgs.batchFrame("corpus_dedup",
-          spark.read.parquet(resolve(bpath)), "doc_id", "text")
+          Parquet.read(spark, resolve(bpath)), "doc_id", "text")
         if (isIndex)
           graft.pipeline.TextDedup.nearDupsAgainstBandIndex(
             batch, resolved, threshold)
         else graft.pipeline.TextDedup.crossSetNearDupPairs(
-          batch, spark.read.parquet(resolved), kOpt.getOrElse(3), threshold)
+          batch, Parquet.read(spark, resolved), kOpt.getOrElse(3), threshold)
     }
     result.queryExecution.analyzed
   }
@@ -920,7 +920,7 @@ object ReadStoreTVF extends TableFunction {
       s"read_store: $resolved is not a corpus store layout " +
         "(no corpus generation found)")
     val result = asOf match {
-      case None => spark.read.parquet(live.get).drop("bucket")
+      case None => Parquet.read(spark, live.get).drop("bucket")
       case Some(n) =>
         graft.pipeline.CorpusStore.readAsOf(spark, resolved, n, Some(gens))
     }
@@ -948,7 +948,7 @@ private[sources] object TvfCorpus {
     // ONE listing decides store-vs-plain and the live generation
     val gens = graft.pipeline.CorpusStore.generations(spark, resolved)
     graft.pipeline.Stores.liveOf(spark, resolved, "corpus", gens)
-      .fold(spark.read.parquet(resolved))(spark.read.parquet(_).drop("bucket"))
+      .fold(Parquet.read(spark, resolved))(Parquet.read(spark, _).drop("bucket"))
   }
 }
 
@@ -1240,7 +1240,7 @@ object CorpusHybridTVF extends TableFunction {
         // normalization) — id/null validation then runs on the
         // collected rows and the dense-leg frame is driver-local,
         // so no further plan-build job touches the parquet
-        val raw = spark.read.parquet(resolve(opts("queries")))
+        val raw = Parquet.read(spark, resolve(opts("queries")))
         val byName = raw.columns.map(c => c.toLowerCase -> c).toMap
         val cols = Seq("query_id", "query", "embedding").map(n =>
           byName.getOrElse(n, throw new IllegalArgumentException(
@@ -1486,7 +1486,7 @@ object CorpusIndexStatsTVF extends TableFunction {
               nFiles += 1; bytes += f.getLen
             }
           }
-          spark.read.parquet(path).agg(count(lit(1)).as("n_rows"))
+          Parquet.read(spark, path).agg(count(lit(1)).as("n_rows"))
             .select(lit("corpus").as("store"), lit(g).as("partition"),
               col("n_rows"), lit(nFiles).as("n_files"), lit(bytes).as("bytes"),
               lit(live).as("generation"))
@@ -1531,19 +1531,12 @@ object ReadFilesTVF extends TableFunction {
         .csv(path)
       case "json" => spark.read.option("mode", parseMode).json(path)
       case "orc" => spark.read.orc(path)
-      case _ =>
-        // Stock reader first (inference, mergeSchema, nested types
-        // all Spark's own); fall back to the widened ingestion path
-        // only when the footer carries a type Spark rejects (FLOAT16 —
-        // see WidenedParquet).
-        try spark.read
-          .option("mergeSchema", opts.getOrElse("mergeschema", "false"))
-          .parquet(path)
-        catch {
-          case e: Throwable if Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-              .exists(t => Option(t.getMessage).exists(_.contains("PARQUET_TYPE_ILLEGAL"))) =>
-            WidenedParquet.read(spark, path)
-        }
+      // schema-drifted directories: Spark's inference merges every footer
+      case _ if opts.get("mergeschema").exists(_.toBoolean) =>
+        spark.read.option("mergeSchema", "true").parquet(path)
+      // footer route: one footer read on the driver, no analysis job;
+      // a FLOAT16 footer goes straight to WidenedParquet
+      case _ => Parquet.read(spark, path)
     }
     // rowid=>'true': STABLE record identity per row — the reference
     // assigns record ids during the scan (read_files_task.rs:156-289);

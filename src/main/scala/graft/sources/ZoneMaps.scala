@@ -2,9 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.BlockMetaData
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
@@ -213,20 +211,16 @@ object ZoneMaps {
                         cols: IndexedSeq[String], types: IndexedSeq[DataType],
                         size: Long, mtime: Long): Option[Row] =
     try {
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(file), conf))
-      try {
-        val footer = reader.getFooter
-        val msg = footer.getFileMetaData.getSchema
-        val blocks = footer.getBlocks.asScala.toSeq
-        val nRows = blocks.map(_.getRowCount).sum
-        val perCol = cols.indices.map(i =>
-          footerMinMax(msg, blocks, cols(i), types(i)))
-        if (perCol.exists(_.isEmpty)) None
-        else Some(Row.fromSeq(
-          file +: perCol.flatMap { case Some((mn, mx)) => Seq(mn, mx) } ++:
-            Seq(nRows, size, mtime)))
-      } finally reader.close()
+      val footer = Parquet.footer(conf, new Path(file))
+      val msg = footer.getFileMetaData.getSchema
+      val blocks = footer.getBlocks.asScala.toSeq
+      val nRows = blocks.map(_.getRowCount).sum
+      val perCol = cols.indices.map(i =>
+        footerMinMax(msg, blocks, cols(i), types(i)))
+      if (perCol.exists(_.isEmpty)) None
+      else Some(Row.fromSeq(
+        file +: perCol.flatMap { case Some((mn, mx)) => Seq(mn, mx) } ++:
+          Seq(nRows, size, mtime)))
     } catch { case NonFatal(_) => None } // data-pass fallback surfaces real errors
 
   /** FOOTER-ONLY stats build over exactly `files`: a distributed pass
@@ -279,7 +273,7 @@ object ZoneMaps {
     val withFallback =
       if (fallback.isEmpty) footer
       else footer.unionByName(
-        statsFor(spark.read.parquet(fallback.sorted: _*), cols)
+        statsFor(Parquet.read(spark, fallback.sorted: _*), cols)
           .select(footer.schema.fieldNames.map(col).toIndexedSeq: _*))
     val covered = withFallback.select("file").collect()
       .map(r => norm(r.getString(0))).toSet
@@ -323,7 +317,7 @@ object ZoneMaps {
     * inherits the store's Last-Modified granularity. */
   private def listLive(spark: SparkSession,
                        tableDir: String): Map[String, (Long, Long)] = {
-    val files = spark.read.parquet(tableDir).inputFiles
+    val files = Parquet.read(spark, tableDir).inputFiles
     val conf = spark.sparkContext.hadoopConfiguration
     files.groupBy(f => new Path(f).getParent).toSeq.flatMap {
       case (parent, inDir) =>
@@ -346,7 +340,7 @@ object ZoneMaps {
   def write(spark: SparkSession, tableDir: String, manifestDir: String,
             cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "zone map needs at least one column")
-    val schema = spark.read.parquet(tableDir).schema
+    val schema = Parquet.schema(spark, tableDir)
     buildStats(spark, listLive(spark, tableDir).toSeq.sortBy(_._1), cols, schema)
       .coalesce(1)
       .write.mode("overwrite").parquet(manifestDir)
@@ -368,7 +362,7 @@ object ZoneMaps {
     // update() reconciles OUT-OF-BAND table changes by contract —
     // drop cached query plans/data for the path before re-listing
     spark.catalog.refreshByPath(tableDir)
-    val existing = spark.read.parquet(manifestDir)
+    val existing = Parquet.read(spark, manifestDir)
     requireSigSchema(existing.schema, manifestDir)
     val cols: Seq[String] = existing.schema.fieldNames.toSeq
       .collect { case n if n.startsWith("min_") => n.stripPrefix("min_") }
@@ -386,7 +380,7 @@ object ZoneMaps {
           existing.schema)
       else
         buildStats(spark, fresh.toSeq.sortBy(_._1), cols,
-            spark.read.parquet(tableDir).schema)
+            Parquet.schema(spark, tableDir))
           .select(existing.schema.fieldNames.map(col).toIndexedSeq: _*)
     // `existing` is already collected to driver rows, and newStats
     // reads only table files — the manifest dir is not an input of
@@ -415,7 +409,7 @@ object ZoneMaps {
   def prunedFiles(spark: SparkSession, tableDir: String, manifestDir: String,
                   c: String, lo: Any, hi: Any,
                   verifyCoverage: Boolean = true): (Seq[String], Int) = {
-    val manifest = spark.read.parquet(manifestDir)
+    val manifest = Parquet.read(spark, manifestDir)
     if (verifyCoverage) requireSigSchema(manifest.schema, manifestDir)
     // the fast path reads only (file, keep), so a pre-signature
     // manifest keeps serving until its next rebuild
@@ -459,8 +453,8 @@ object ZoneMaps {
     val base =
       if (files.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          spark.read.parquet(tableDir).schema)
-      else spark.read.parquet(files: _*)
+          Parquet.schema(spark, tableDir))
+      else Parquet.read(spark, files: _*)
     base.filter(col(c).between(lit(lo), lit(hi)))
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.pipeline.TextAnalysis
+import graft.sources.Parquet
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -73,11 +74,11 @@ object CorpusIngest {
     * not at purge time. No tombstones → no join in the plan at all. */
   def landedCorpus(spark: org.apache.spark.sql.SparkSession,
                    outDir: String): DataFrame = {
-    val raw = spark.read.parquet(outDir)
+    val raw = Parquet.read(spark, outDir)
     val tombs = corpusLedger(spark, outDir).tombstones
     if (tombs.isEmpty) raw
     else raw.join(
-      broadcast(spark.read.parquet(tombs.map(_.toString): _*)
+      broadcast(Parquet.read(spark, tombs.map(_.toString): _*)
         .select("doc_id").distinct()),
       Seq("doc_id"), "left_anti")
   }
@@ -143,14 +144,14 @@ object CorpusIngest {
     val ledger = corpusLedger(spark, outDir)
     val tombFiles = ledger.pending()
     if (tombFiles.isEmpty) return 0
-    val victims = spark.read.parquet(tombFiles.map(_.toString): _*)
+    val victims = Parquet.read(spark, tombFiles.map(_.toString): _*)
       .select("doc_id").distinct()
 
     // 3. locate touched part files — doc_id column only crosses this
     // scan. A corpus whose every file was already purged has no data
     // files to read: nothing to locate, tombstones just consume.
     val doomedUris: Array[String] =
-      try spark.read.parquet(outDir)
+      try Parquet.read(spark, outDir)
         .select(col("doc_id"), input_file_name().as("f"))
         .join(broadcast(victims), "doc_id")
         .select("f").distinct().collect().map(_.getString(0))
@@ -165,7 +166,7 @@ object CorpusIngest {
       val out = fs.create(new Path(stage, "doomed.txt"))
       try out.write((doomedNames.mkString("\n") + "\n").getBytes("UTF-8"))
       finally out.close()
-      val survivors = spark.read.parquet(doomedUris.toIndexedSeq: _*)
+      val survivors = Parquet.read(spark, doomedUris.toIndexedSeq: _*)
         .join(broadcast(victims), Seq("doc_id"), "left_anti")
       // Spark writes stage/part-*.parquet + its own _SUCCESS marker —
       // exactly the commit record replay() rolls forward from

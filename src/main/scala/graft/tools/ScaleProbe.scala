@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.Engine
 import graft.service.{MetricsCollector, QueryMetrics}
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -101,7 +102,7 @@ object ScaleProbe {
     }
 
     def docsAt(k: Int, mode: Replicas.Text = Replicas.Salted): DataFrame =
-      spark.read.parquet(s"${docsDir(k, mode)}/documents.parquet")
+      Parquet.read(spark, s"${docsDir(k, mode)}/documents.parquet")
 
     /** The k× jittered `embeddings` under `subdir`, with ids offset by
       * `offsetFrom`'s stride (embeddings' own, or the documents' when
@@ -500,7 +501,7 @@ object ScaleProbe {
     var oodRecall: Seq[(Int, String, Double, Double, Long)] = Seq.empty
     val cells = scales.map { k =>
       val dir = p.embeddingsAt(k, "ann", ("embeddings", "vec_id"))
-      val corpus = spark.read.parquet(s"$dir/embeddings.parquet")
+      val corpus = Parquet.read(spark, s"$dir/embeddings.parquet")
       val n = corpus.count()
       // production sizing (RUNBOOK §4): nlist ~ sqrt(N); nprobe fixed
       // so probed rows ~ nprobe * N/nlist = nprobe * sqrt(N)
@@ -687,7 +688,7 @@ object ScaleProbe {
         .select((col("vec_id") + 5000000L).as("query_id"),
           col("query"), col("embedding"))
     }
-    val batch = spark.read.parquet(batchPath)
+    val batch = Parquet.read(spark, batchPath)
     p.keep = Seq(batch)
     val nBatch = batch.count()
 
@@ -722,7 +723,7 @@ object ScaleProbe {
     val cells = scales.map { k =>
       val dir = dirs(k)
       val docs = p.docsAt(k).select("doc_id", "text")
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Parquet.read(spark, s"$dir/embeddings.parquet")
       val n = emb.count()
       val nlist = math.max(16, math.round(math.sqrt(n.toDouble)).toInt)
       val tIdx = s"$dir/text_idx"
@@ -796,8 +797,8 @@ object ScaleProbe {
           col("rank").cast("int").as("rank"))
         .write.mode("overwrite").parquet(s"$dir/leg_den")
       val fuse = p.cell(graft.pipeline.Retrieval.rrfFuseMany(
-        Seq(spark.read.parquet(s"$dir/leg_lex"),
-          spark.read.parquet(s"$dir/leg_den")), "doc_id", 60, 10).count())
+        Seq(Parquet.read(spark, s"$dir/leg_lex"),
+          Parquet.read(spark, s"$dir/leg_den")), "doc_id", 60, 10).count())
       assert(fuse.value > 0)
       def sh(r: Measured[_]): Long = r.m.shuffleReadRecords
       println(f"[hybrid-scale] x$k%-3d lex=${lex.sec}%6.2fs/${sh(lex)}%d ($lexRoute) " +

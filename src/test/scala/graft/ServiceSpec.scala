@@ -129,30 +129,57 @@ class ServiceSpec extends AnyFunSuite with SparkFixture {
     val viaSpark = r.asDataFrame.collect()
       .map(x => (x.getLong(0), String.valueOf(x.get(1)), x.getString(2), x.getDouble(3)))
       .toSet
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    Thread.sleep(1500) // drain queued events from the result write —
-    // a pre-registration job event dispatched late would be miscounted
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (viaPages, jobs, _) = jobsDuring {
+      val fresh = svc.reader(id)
+      assert(fresh.schema.fieldNames.toSeq ==
+        Seq("o_orderkey", "o_orderdate", "o_orderstatus", "o_totalprice"))
       val rows = Seq.newBuilder[org.apache.spark.sql.Row]
       var cursor = Option(ResultCursor(0, 0))
       while (cursor.isDefined) {
-        val p = r.read(cursor.get, 13)
+        val p = fresh.read(cursor.get, 13)
         rows ++= p.rows
         cursor = p.next
       }
-      val viaPages = rows.result()
+      rows.result()
         .map(x => (x.getLong(0), String.valueOf(x.get(1)), x.getString(2), x.getDouble(3)))
-      assert(viaPages.size == viaSpark.size)
-      assert(viaPages.toSet == viaSpark)
-      Thread.sleep(1000) // listener bus is async; let any job event land
-      assert(jobs.get == 0, s"paged read path launched ${jobs.get} Spark job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(viaPages.size == viaSpark.size)
+    assert(viaPages.toSet == viaSpark)
+    assert(jobs == 0, s"paged read path launched $jobs Spark job(s)")
+  }
+
+  test("get_query_data over TCP serves JSON and Arrow pages with zero Spark jobs") {
+    val id = svc.runQuery(
+      s"select o_orderkey, o_orderdate, o_totalprice " +
+        s"from read_files('$sfDir/orders.parquet') where o_orderkey < 100")
+    assert(svc.awaitComplete(id) == QueryStatus.Complete)
+    val server = new graft.service.QueryServer(svc)
+    val sock = new java.net.Socket("127.0.0.1", server.boundPort)
+    try {
+      val out = new java.io.PrintWriter(sock.getOutputStream, true)
+      val in = new java.io.BufferedReader(new java.io.InputStreamReader(sock.getInputStream))
+      def page(format: String): String = {
+        out.println(s"""{"type":"get_query_data","query_id":"$id","limit":10$format}""")
+        in.readLine()
+      }
+      val ((json, arrow), jobs, _) = jobsDuring((page(""), page(""","format":"arrow"""")))
+      assert(json.contains("get_query_data_resp") && json.contains("\"rows\""), json)
+      assert(json.contains("\"columns\":[\"o_orderkey\",\"o_orderdate\",\"o_totalprice\"]"))
+      assert(arrow.contains("get_query_data_resp") && arrow.contains("\"arrow_ipc\""), arrow)
+      assert(jobs == 0, s"get_query_data launched $jobs Spark job(s)")
+    } finally { sock.close(); server.close() }
+  }
+
+  test("ResultReader.schema and the footer route equal Spark's inferred result schema") {
+    val id = svc.runQuery(
+      s"select o_orderkey, o_orderdate, o_orderstatus, o_totalprice, " +
+        s"cast(o_totalprice as decimal(12,2)) as price " +
+        s"from read_files('$sfDir/orders.parquet') where o_orderkey < 100")
+    assert(svc.awaitComplete(id) == QueryStatus.Complete)
+    val dir = svc.resultDir(id)
+    val inferred = spark.read.parquet(dir).schema
+    assert(svc.reader(id).schema == inferred)
+    assert(graft.sources.Parquet.schema(spark, dir) == inferred)
   }
 
   test("TCP query protocol: run_query, status poll, paged data over a real socket") {

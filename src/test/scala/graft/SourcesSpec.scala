@@ -232,6 +232,68 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
     assert(rows.map(_.getLong(0)).toSet == (0L until 70L).toSet)
   }
 
+  test("read_files on FLOAT16 parquet starts no analysis job and no failed job") {
+    val path = getClass.getResource("/unsigned.parquet").getPath
+    val (df, jobs, failed) = jobsDuring(ReadFiles.sql(spark,
+      s"select id, f16 from read_files('$path') where u8 > 127"))
+    assert(jobs == 0, s"analysis started $jobs Spark job(s)")
+    assert(failed == 0, s"$failed analysis job(s) failed")
+    assert(df.schema("f16").dataType.simpleString == "float")
+  }
+
+  test("read_files on plain parquet starts no analysis job") {
+    val (df, jobs, _) = jobsDuring(ReadFiles.sql(spark,
+      s"select l_orderkey, l_quantity from read_files('$sfDir/lineitem.parquet') " +
+        "where l_orderkey < 3"))
+    assert(jobs == 0, s"analysis started $jobs Spark job(s)")
+    assert(df.columns.toSeq == Seq("l_orderkey", "l_quantity"))
+  }
+
+  test("footer schema equals Spark's inferred schema: tables, bucketed stores, tombstones") {
+    import graft.sources.Parquet
+    def same(paths: String*): Unit =
+      assert(Parquet.schema(spark, paths: _*) == spark.read.parquet(paths: _*).schema,
+        paths.mkString(", "))
+    Engine.tableNames.foreach(t => same(s"$sfDir/$t.parquet"))
+
+    val dir = java.nio.file.Files.createTempDirectory("graft_footer").toString
+    graft.pipeline.TextIndex.write(
+      Engine.table(spark, sfDir, "documents").select("doc_id", "text"), dir, buckets = 4)
+    graft.pipeline.TextIndex.delete(spark, dir, Seq(1L))
+    graft.pipeline.TextIndex.delete(spark, dir, Seq(2L, 3L))
+    val store = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.startsWith("postings")).max
+    val postings = Parquet.schema(spark, s"$dir/$store")
+    assert(postings.fieldNames.last == "bucket", "partition column not appended")
+    same(s"$dir/$store")
+    same(s"$dir/$store/_skips")
+    val tombs = new java.io.File(s"$dir/tombstones").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted.toSeq
+    assert(tombs.size == 2)
+    same(tombs: _*)
+    same(tombs.reverse: _*)
+  }
+
+  test("no spark.read.parquet outside the footer route") {
+    // Schema inference starts a Spark job; graft.sources.Parquet.read is
+    // the one route from a parquet path to a DataFrame. The only other
+    // inferring read is read_files' explicit mergeschema=>'true' branch.
+    val inferring = """\.read(\s*\.option\([^)]*\))*\s*\.parquet\(""".r
+    def scan(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scan)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val offenders = scan(new java.io.File("src/main/scala"))
+      .filterNot(_.getName == "Parquet.scala")
+      .flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        inferring.findAllMatchIn(src)
+          .filterNot(_.matched.contains("\"mergeSchema\", \"true\""))
+          .map(m => s"${f.getPath}:${src.take(m.start).count(_ == '\n') + 1}")
+      }
+    assert(offenders.isEmpty,
+      s"read parquet through graft.sources.Parquet.read: ${offenders.mkString(", ")}")
+  }
+
   test("HalfToFloat decodes every IEEE binary16 class") {
     import graft.functions.NativeExpressions.HalfToFloat.toFloat
     assert(toFloat(0x0000) == 0.0f && (1.0f / toFloat(0x0000)).isPosInfinity)

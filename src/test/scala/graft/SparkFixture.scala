@@ -19,4 +19,26 @@ trait SparkFixture { self: Suite =>
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** `body`'s value with the Spark jobs started while it ran, and how
+    * many of those failed. The listener bus is drained on both sides,
+    * so earlier jobs' late events are not miscounted. */
+  def jobsDuring[T](body: => T): (T, Int, Int) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val failed = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobResult != JobSucceeded) failed.incrementAndGet()
+    }
+    org.apache.spark.sql.graftbridge.ListenerBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(sc)
+      (out, started.get, failed.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
