@@ -27,84 +27,107 @@ object SparkEntry {
   private def dsum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     sum(c.cast("decimal(18,4)")).cast("double")
 
-  /** Persisted IVF index per testdata dir, built lazily once per JVM
-    * (the production shape: index built offline, queries read the
-    * partitioned layout). Deterministic — same corpus trains the same
-    * quantizer — so build-now vs build-earlier is observationally
-    * identical. Keyed by the source dir; like the quantizer cache,
-    * rewriting the same path in-place in one long-lived session would
-    * serve a stale index (clear the tmp dir in that case). */
-  private val ivfIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val annQueryDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // ---- index and batch fixtures -------------------------------------
+
+  /** This JVM's fixture root: a fresh temp directory, removed when the
+    * JVM exits, unless [[keepFixturesAt]] named another. Concurrent
+    * JVMs over one testdata dir (Verify, PlanDump, Bench, tests) each
+    * build into their own root, so none ever reads or deletes
+    * another's fixtures. */
+  private var root: java.io.File = _
+  private[graft] def fixtureRoot: java.io.File = synchronized {
+    if (root == null) {
+      val tmp = java.nio.file.Files.createTempDirectory("graft_fixtures").toFile
+      sys.addShutdownHook(org.apache.hadoop.fs.FileUtil.fullyDelete(tmp))
+      root = tmp
+    }
+    root
+  }
+
+  /** Root this JVM's fixtures at `dir` and keep them after exit,
+    * deleting whatever an earlier run left there. For Verify: DuckDB
+    * runs the drift oracle after the JVM is gone, and it reads the IVF
+    * fixture through `__IVFDIR__` ([[oracleSql]]). Call it before any
+    * fixture is built. */
+  private[graft] def keepFixturesAt(dir: String): Unit = synchronized {
+    require(fixtureMemo.isEmpty, s"fixtures already built under $root")
+    val f = new java.io.File(dir).getAbsoluteFile
+    org.apache.hadoop.fs.FileUtil.fullyDelete(f)
+    f.mkdirs()
+    root = f
+  }
+
+  /** A persisted fixture some queries read, built once per testdata
+    * dir by `build(session, sfDir, outDir)` into `<root>/<tag>_<sf>`.
+    * The builders are deterministic, so build-now and build-earlier
+    * serve identically. A `perSession` fixture is built once per
+    * (session, dir) instead: its state lives in the session catalog. */
+  private final class Fixture(tag: String, perSession: Boolean,
+                              build: (SparkSession, String, String) => Unit) {
+    def path(sfDir: String): String =
+      new java.io.File(fixtureRoot, s"${tag}_${Engine.catalogTag(sfDir)}").getAbsolutePath
+    def apply(s: SparkSession, d: String): String = {
+      val key = if (perSession) s"$tag@${System.identityHashCode(s)}" else tag
+      fixtureMemo.computeIfAbsent((key, d), _ => {
+        val out = path(d)
+        // a failed build leaves nothing behind for its retry to trip on
+        try build(s, d, out) catch { case e: Throwable =>
+          org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(out)); throw e }
+        out
+      })
+    }
+  }
+  /** (tag, sfDir) → the fixture's built directory; a per-session
+    * fixture's tag also names the session. */
+  private val fixtureMemo = new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val fixtures = scala.collection.mutable.ArrayBuffer.empty[Fixture]
+  private def fixture(tag: String, perSession: Boolean = false)(
+      build: (SparkSession, String, String) => Unit): Fixture = {
+    val f = new Fixture(tag, perSession, build)
+    fixtures += f
+    f
+  }
 
   /** External-query batch fixture for q_sql_ann_many: the first 10
     * embeddings re-keyed into a disjoint query-id space (the serving
     * shape — fresh application vectors arriving as a parquet batch). */
-  private def annQueriesDir(s: SparkSession, d: String): String =
-    annQueryDirs.computeIfAbsent(d, dir => {
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_annq_" + Integer.toHexString(dir.hashCode))
-      if (f.exists()) org.apache.hadoop.fs.FileUtil.fullyDelete(f)
-      Engine.table(s, dir, "embeddings").filter(col("vec_id") < 10)
-        .select((col("vec_id") + 999000L).as("query_id"), col("embedding"))
-        .coalesce(1).write.parquet(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
+  private val annQueriesDir = fixture("annq") { (s, d, out) =>
+    Engine.table(s, d, "embeddings").filter(col("vec_id") < 10)
+      .select((col("vec_id") + 999000L).as("query_id"), col("embedding"))
+      .coalesce(1).write.parquet(out)
+  }
   /** Allow-list fixture for q_sql_ann_filtered: the vec_id%3==0 ids
     * as a one-column parquet — the arriving-files shape of a
     * tenant/language scope (the same predicate ann_ivf_filtered
     * derives in-query, so the oracle never reads the fixture). */
-  private val annFilterDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def annFilterDir(s: SparkSession, d: String): String =
-    annFilterDirs.computeIfAbsent(d, dir => {
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_annf_" + Integer.toHexString(dir.hashCode))
-      if (f.exists()) org.apache.hadoop.fs.FileUtil.fullyDelete(f)
-      Engine.table(s, dir, "embeddings").filter(col("vec_id") % 3 === 0)
-        .select("vec_id").coalesce(1).write.parquet(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
-
-  private val searchQueryDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val phraseQueryDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val annFilterDir = fixture("annf") { (s, d, out) =>
+    Engine.table(s, d, "embeddings").filter(col("vec_id") % 3 === 0)
+      .select("vec_id").coalesce(1).write.parquet(out)
+  }
 
   /** External-query batch fixtures for q_sql_search_many /
     * q_sql_phrase_many: (query_id, query) parquets — the serving
     * shape for application query batches arriving as files. Contents
     * are fixed so the DuckDB oracles can restate them as VALUES. */
-  private def queryBatchDir(map: java.util.concurrent.ConcurrentHashMap[String, String],
-                            tag: String, s: SparkSession, d: String,
-                            rows: Seq[(Long, String)]): String =
-    map.computeIfAbsent(d, dir => {
+  private def queryBatch(tag: String, rows: Seq[(Long, String)]): Fixture =
+    fixture(tag) { (s, _, out) =>
       import s.implicits._
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_${tag}_" + Integer.toHexString(dir.hashCode))
-      if (f.exists()) org.apache.hadoop.fs.FileUtil.fullyDelete(f)
-      rows.toDF("query_id", "query").coalesce(1).write.parquet(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
-  private def searchQueriesDir(s: SparkSession, d: String): String =
-    queryBatchDir(searchQueryDirs, "searchq", s, d, Seq(
-      1L -> "spark join", 2L -> "window hash scan", 3L -> "zzz_absent_term"))
-  private def phraseQueriesDir(s: SparkSession, d: String): String =
-    queryBatchDir(phraseQueryDirs, "phraseq", s, d, Seq(
-      1L -> "table scan", 2L -> "hash join", 3L -> "zzz absent"))
+      rows.toDF("query_id", "query").coalesce(1).write.parquet(out)
+    }
+  private val searchQueriesDir = queryBatch("searchq", Seq(
+    1L -> "spark join", 2L -> "window hash scan", 3L -> "zzz_absent_term"))
+  private val phraseQueriesDir = queryBatch("phraseq", Seq(
+    1L -> "table scan", 2L -> "hash join", 3L -> "zzz absent"))
 
   /** Batch fixture for q_sql_neardup_batch: the SAME re-labeled batch
     * dedup_band_incr probes (doc_id%11, +500000) written as a parquet —
     * the TVF's batch argument is a path, the arriving-files serving
     * shape. */
-  private val dedupBatchDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def dedupBatchDir(s: SparkSession, d: String): String =
-    dedupBatchDirs.computeIfAbsent(d, dir => {
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_dedupb_" + Integer.toHexString(dir.hashCode))
-      if (f.exists()) org.apache.hadoop.fs.FileUtil.fullyDelete(f)
-      Engine.table(s, dir, "documents").filter(col("doc_id") % 11 === 0)
-        .select((col("doc_id") + 500000).as("doc_id"), col("text"))
-        .coalesce(1).write.parquet(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
+  private val dedupBatchDir = fixture("dedupb") { (s, d, out) =>
+    Engine.table(s, d, "documents").filter(col("doc_id") % 11 === 0)
+      .select((col("doc_id") + 500000).as("doc_id"), col("text"))
+      .coalesce(1).write.parquet(out)
+  }
 
   /** Two-corpus fixtures for the corpus_decontam TVF: the SAME
     * doc_id%10 train/eval split q_decontam derives in-query, written
@@ -112,19 +135,13 @@ object SparkEntry {
     * arriving-files shape: the eval set usually isn't a column
     * predicate on the training corpus). Train keeps lang so the
     * report mode can group. */
-  private val decontamDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def decontamFixtureDir(s: SparkSession, d: String): String =
-    decontamDirs.computeIfAbsent(d, dir => {
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_decontam_" + Integer.toHexString(dir.hashCode))
-      if (f.exists()) org.apache.hadoop.fs.FileUtil.fullyDelete(f)
-      val docs = Engine.table(s, dir, "documents")
-      docs.filter(col("doc_id") % 10 =!= 0).select("doc_id", "text", "lang")
-        .coalesce(1).write.parquet(s"${f.getAbsolutePath}/train")
-      docs.filter(col("doc_id") % 10 === 0).select("doc_id", "text")
-        .coalesce(1).write.parquet(s"${f.getAbsolutePath}/eval")
-      f.getAbsolutePath
-    })
+  private val decontamFixtureDir = fixture("decontam") { (s, d, out) =>
+    val docs = Engine.table(s, d, "documents")
+    docs.filter(col("doc_id") % 10 =!= 0).select("doc_id", "text", "lang")
+      .coalesce(1).write.parquet(s"$out/train")
+    docs.filter(col("doc_id") % 10 === 0).select("doc_id", "text")
+      .coalesce(1).write.parquet(s"$out/eval")
+  }
 
   /** Batch fixture for q_sql_hybrid_many: (query_id, query, embedding)
     * rows — the serving shape for hybrid query batches arriving as
@@ -132,78 +149,51 @@ object SparkEntry {
     * VALUES; embeddings are the stored vectors of vec_id 1..3 (so the
     * oracle reads them from the embeddings table). query_id 3's term
     * is absent from the corpus — its fusion must be dense-leg-only. */
-  private val hybridQueryDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def hybridQueriesDir(s: SparkSession, d: String): String =
-    hybridQueryDirs.computeIfAbsent(d, dir => {
-      import s.implicits._
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_hybridq_" + Integer.toHexString(dir.hashCode))
-      if (f.exists()) org.apache.hadoop.fs.FileUtil.fullyDelete(f)
-      val texts = Seq(1L -> "spark join", 2L -> "window hash scan",
-        3L -> "zzz_absent_term").toDF("query_id", "query")
-      val vecs = Engine.table(s, dir, "embeddings")
-        .filter(col("vec_id").isin(1L, 2L, 3L))
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      texts.join(vecs, "query_id")
-        .coalesce(1).write.parquet(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
+  private val hybridQueriesDir = fixture("hybridq") { (s, d, out) =>
+    import s.implicits._
+    val texts = Seq(1L -> "spark join", 2L -> "window hash scan",
+      3L -> "zzz_absent_term").toDF("query_id", "query")
+    val vecs = Engine.table(s, d, "embeddings")
+      .filter(col("vec_id").isin(1L, 2L, 3L))
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    texts.join(vecs, "query_id").coalesce(1).write.parquet(out)
+  }
 
   /** Synthetic-PII corpus fixture for the corpus_quality TVF's redact
     * mode: the SAME deterministic doc_id-derived PII q_pii_redact
     * appends in-query, materialized as the fixture's `text` column —
     * so the redaction is exercised on text that actually contains
     * PII and the q_pii_redact oracle body pins both surfaces. */
-  private val piiDocsDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def piiDocsDir(s: SparkSession, d: String): String =
-    piiDocsDirs.computeIfAbsent(d, dir => {
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_piidocs_" + Integer.toHexString(dir.hashCode))
-      if (f.exists()) org.apache.hadoop.fs.FileUtil.fullyDelete(f)
-      Engine.table(s, dir, "documents")
-        .select(col("doc_id"),
-          concat(col("text"),
-            lit(" contact user"), col("doc_id"), lit("@mail.example.com or +1-555-"),
-            lpad(pmod(col("doc_id") * 7, lit(10000)).cast("string"), 4, "0"),
-            lit(" from 10."), pmod(col("doc_id"), lit(256)).cast("string"), lit(".0.1")).as("text"))
-        .coalesce(1).write.parquet(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
+  private val piiDocsDir = fixture("piidocs") { (s, d, out) =>
+    Engine.table(s, d, "documents")
+      .select(col("doc_id"),
+        concat(col("text"),
+          lit(" contact user"), col("doc_id"), lit("@mail.example.com or +1-555-"),
+          lpad(pmod(col("doc_id") * 7, lit(10000)).cast("string"), 4, "0"),
+          lit(" from 10."), pmod(col("doc_id"), lit(256)).cast("string"), lit(".0.1")).as("text"))
+      .coalesce(1).write.parquet(out)
+  }
 
   /** "New snapshot" fixture for the corpus_diff TVF: the SAME derived
     * corpus q_corpus_diff builds in-query (every 13th doc dropped,
     * every 7th rewritten), written as a parquet — so the expected
     * per-source added/removed/kept counts are exact by construction
     * and ONE DuckDB body oracles both surfaces. */
-  private val diffNewDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def diffNewDir(s: SparkSession, d: String): String =
-    diffNewDirs.computeIfAbsent(d, dir => {
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_diffnew_" + Integer.toHexString(dir.hashCode))
-      if (f.exists()) org.apache.hadoop.fs.FileUtil.fullyDelete(f)
-      Engine.table(s, dir, "documents").filter(col("doc_id") % 13 =!= 0)
-        .select(col("source"),
-          when(col("doc_id") % 7 === 0, concat(col("text"), lit(" rev2")))
-            .otherwise(col("text")).as("text"))
-        .coalesce(1).write.parquet(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
+  private val diffNewDir = fixture("diffnew") { (s, d, out) =>
+    Engine.table(s, d, "documents").filter(col("doc_id") % 13 =!= 0)
+      .select(col("source"),
+        when(col("doc_id") % 7 === 0, concat(col("text"), lit(" rev2")))
+          .otherwise(col("text")).as("text"))
+      .coalesce(1).write.parquet(out)
+  }
 
-  /** The deterministic tmpdir path of the shared IVF fixture for
-    * `sfDir` — ONE derivation serving both the builder below and the
-    * drift oracle's direct DuckDB read (oracleSql), so a naming-scheme
-    * change can never desynchronize the two into reading different
-    * directories. */
-  private def ivfIndexPath(sfDir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_ivf_" + Integer.toHexString(sfDir.hashCode)).getAbsolutePath
-
-  private def ivfIndexDir(s: SparkSession, d: String): String =
-    ivfIndexDirs.computeIfAbsent(d, dir => {
-      val out = ivfIndexPath(dir)
-      pipeline.Embeddings.writeIvfIndex(Engine.table(s, dir, "embeddings"), out)
-      out
-    })
+  /** Persisted IVF index (the production shape: index built offline,
+    * queries read the partitioned layout). Deterministic — same corpus
+    * trains the same quantizer. The drift oracle reads it directly
+    * through `ivfIndexDir.path` ([[oracleSql]]). */
+  private val ivfIndexDir = fixture("ivf") { (s, d, out) =>
+    pipeline.Embeddings.writeIvfIndex(Engine.table(s, d, "embeddings"), out)
+  }
 
   /** Media parquet fixture for q_sql_media_dedup: the documents table
     * through [[pipeline.Multimodal.asMediaTable]] (payload = UTF-8
@@ -213,22 +203,16 @@ object SparkEntry {
     * so without planted dups the dedup truth would be vacuously
     * empty). The perturbation is SQL-restatable, so the DuckDB oracle
     * rebuilds the identical corpus. */
-  private val mediaDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def mediaTableDir(s: SparkSession, d: String): String =
-    mediaDirs.computeIfAbsent(d, dir => {
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_media_" + Integer.toHexString(dir.hashCode))
-      if (f.exists()) org.apache.hadoop.fs.FileUtil.fullyDelete(f)
-      val docs = Engine.table(s, dir, "documents")
-      val dups = docs.filter(col("doc_id") % 17 === 0)
-        .select((col("doc_id") + 700000).as("doc_id"),
-          concat(lit("x"), expr("substring(text, 2)")).as("text"),
-          col("source"))
-      pipeline.Multimodal.asMediaTable(
-          docs.select("doc_id", "text", "source").unionByName(dups))
-        .write.parquet(f.getAbsolutePath)
-      f.getAbsolutePath
-    })
+  private val mediaTableDir = fixture("media") { (s, d, out) =>
+    val docs = Engine.table(s, d, "documents")
+    val dups = docs.filter(col("doc_id") % 17 === 0)
+      .select((col("doc_id") + 700000).as("doc_id"),
+        concat(lit("x"), expr("substring(text, 2)")).as("text"),
+        col("source"))
+    pipeline.Multimodal.asMediaTable(
+        docs.select("doc_id", "text", "source").unionByName(dups))
+      .write.parquet(out)
+  }
 
   /** Ids deleted by the ann_ivf_delete lifecycle query: one query
     * vector (3 < 10) and two corpus vectors — fixed so the DuckDB
@@ -242,94 +226,59 @@ object SparkEntry {
     * corpus deletes physically purged by compaction, then a query
     * delete live as a tombstone, so the read path crosses both the
     * purge and the anti-join. */
-  private val ivfDeleteDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfDeleteIndexDir(s: SparkSession, d: String): String =
-    ivfDeleteDirs.computeIfAbsent(d, dir => {
-      val outFile = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_del_" + Integer.toHexString(dir.hashCode))
-      val out = outFile.getAbsolutePath
-      // Wipe any previous JVM run's layout: unlike the plain shared
-      // index (overwrite-only), this one accretes compaction
-      // generations and tombstones, and liveCorpusDir would prefer a
-      // STALE committed corpus_v1 over a freshly rewritten corpus.
-      if (outFile.exists())
-        org.apache.hadoop.fs.FileUtil.fullyDelete(outFile)
-      pipeline.Embeddings.writeIvfIndex(Engine.table(s, dir, "embeddings"), out)
-      pipeline.Embeddings.deleteFromIvfIndex(s, out, IvfDeletedIds.tail)
-      pipeline.Embeddings.compactIvfIndex(s, out, maxFilesPerCell = 4)
-      pipeline.Embeddings.deleteFromIvfIndex(s, out, IvfDeletedIds.take(1))
-      out
-    })
+  private val ivfDeleteIndexDir = fixture("ivf_del") { (s, d, out) =>
+    pipeline.Embeddings.writeIvfIndex(Engine.table(s, d, "embeddings"), out)
+    pipeline.Embeddings.deleteFromIvfIndex(s, out, IvfDeletedIds.tail)
+    pipeline.Embeddings.compactIvfIndex(s, out, maxFilesPerCell = 4)
+    pipeline.Embeddings.deleteFromIvfIndex(s, out, IvfDeletedIds.take(1))
+  }
 
   /** Band index for dedup_band_incr: the persisted MinHash-LSH layout
-    * built over the full documents corpus, memoized per testdata dir
-    * (same offline-build stance as [[ivfIndexDir]]). */
-  private val bandIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def bandIndexDir(s: SparkSession, d: String): String =
-    bandIndexDirs.computeIfAbsent(d, dir => {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_band_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-      pipeline.TextDedup.writeBandIndex(
-        Engine.table(s, dir, "documents").select(col("doc_id"), col("text")), out)
-      out
-    })
+    * built over the full documents corpus (same offline-build stance
+    * as [[ivfIndexDir]]). */
+  private val bandIndexDir = fixture("band") { (s, d, out) =>
+    pipeline.TextDedup.writeBandIndex(
+      Engine.table(s, d, "documents").select(col("doc_id"), col("text")), out)
+  }
 
   /** Bucketed orders/lineitem pair for q_bucketed_join — the
     * write-once layout investment that makes every later join on the
-    * order key exchange-free. Keyed by (session, dir): the bucket
-    * spec lives in the session catalog, so a fresh session must
-    * re-register even if the files survive. */
-  private val bucketedDirs = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private def bucketedPair(s: SparkSession, d: String): (String, String) =
-    bucketedDirs.computeIfAbsent(
-      Integer.toHexString(System.identityHashCode(s)) + ":" + d, _ => {
-        val suffix = "_" + Integer.toHexString(d.hashCode)
-        val base = new java.io.File(sys.props("java.io.tmpdir"),
-          "graft_bkt" + suffix).getAbsolutePath
-        sources.Bucketing.coLocatedOrdersLineitem(s, d, base, nBuckets = 8, suffix)
-      })
+    * order key exchange-free. Per session: the bucket spec lives in
+    * the session catalog, so a fresh session must re-register even if
+    * the files survive. */
+  private def bucketSuffix(d: String): String = "_" + Engine.catalogTag(d)
+  private val bucketedDir = fixture("bkt", perSession = true) { (s, d, out) =>
+    sources.Bucketing.coLocatedOrdersLineitem(s, d, out, nBuckets = 8, bucketSuffix(d))
+  }
+  private def bucketedPair(s: SparkSession, d: String): (String, String) = {
+    bucketedDir(s, d)
+    (s"orders_bkt${bucketSuffix(d)}", s"lineitem_bkt${bucketSuffix(d)}")
+  }
 
   /** Mutable corpus store for q_corpus_merge: base generation from
     * `documents`, then ONE deterministic merge (recrawl updates +
-    * fresh inserts + takedown deletes) applied before first read.
-    * Wiped per JVM like [[ivfDeleteIndexDir]] — the store accretes
-    * generations, and a previous run's committed corpus_v1 would
-    * otherwise shadow a fresh base. */
-  private val corpusStoreDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def corpusStoreDir(s: SparkSession, d: String): String =
-    corpusStoreDirs.computeIfAbsent(d, dir => {
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_cstore_" + Integer.toHexString(dir.hashCode))
-      if (f.exists()) org.apache.hadoop.fs.FileUtil.fullyDelete(f)
-      val out = f.getAbsolutePath
-      val docs = Engine.table(s, dir, "documents").select(col("doc_id"), col("text"))
-      pipeline.CorpusStore.write(docs, out, buckets = 16)
-      val up = docs.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id"), concat(lit("UPDATED "), col("text")).as("text"))
-        .unionByName(docs.filter(col("doc_id") % 103 === 0)
-          .select((col("doc_id") + 10000000L).as("doc_id"),
-            concat(lit("NEW "), col("text")).as("text")))
-      val del = docs.filter(col("doc_id") % 101 === 0).select("doc_id")
-      pipeline.CorpusStore.merge(s, out, up, del)
-      out
-    })
+    * fresh inserts + takedown deletes) applied before first read. */
+  private val corpusStoreDir = fixture("cstore") { (s, d, out) =>
+    val docs = Engine.table(s, d, "documents").select(col("doc_id"), col("text"))
+    pipeline.CorpusStore.write(docs, out, buckets = 16)
+    val up = docs.filter(col("doc_id") % 97 === 0)
+      .select(col("doc_id"), concat(lit("UPDATED "), col("text")).as("text"))
+      .unionByName(docs.filter(col("doc_id") % 103 === 0)
+        .select((col("doc_id") + 10000000L).as("doc_id"),
+          concat(lit("NEW "), col("text")).as("text")))
+    val del = docs.filter(col("doc_id") % 101 === 0).select("doc_id")
+    pipeline.CorpusStore.merge(s, out, up, del)
+  }
 
   /** Inverted text index for q_bm25_indexed: built over half the
     * documents and APPENDED the other half, so the oracled query
     * exercises the incremental path — build + append must serve
     * identically to the corpus-scan BM25 over the full table. */
-  private val textIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def textIndexDir(s: SparkSession, d: String): String =
-    textIndexDirs.computeIfAbsent(d, dir => {
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_tidx_" + Integer.toHexString(dir.hashCode))
-      if (f.exists()) org.apache.hadoop.fs.FileUtil.fullyDelete(f)
-      val out = f.getAbsolutePath
-      val docs = Engine.table(s, dir, "documents").select(col("doc_id"), col("text"))
-      pipeline.TextIndex.write(docs.filter(col("doc_id") % 2 === 0), out)
-      pipeline.TextIndex.append(docs.filter(col("doc_id") % 2 === 1), out)
-      out
-    })
+  private val textIndexDir = fixture("tidx") { (s, d, out) =>
+    val docs = Engine.table(s, d, "documents").select(col("doc_id"), col("text"))
+    pipeline.TextIndex.write(docs.filter(col("doc_id") % 2 === 0), out)
+    pipeline.TextIndex.append(docs.filter(col("doc_id") % 2 === 1), out)
+  }
 
   /** Fine-blocked text index for q_bm25_maxscore: blockSize 4 spreads
     * the fixture corpus's common terms across many impact blocks, so
@@ -338,18 +287,11 @@ object SparkEntry {
     * exhaustive would fail loud, not pass vacuously). Build half +
     * append half like the main text fixture, so block-0 is a merged
     * multi-delta block. */
-  private val maxScoreIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def maxScoreIndexDir(s: SparkSession, d: String): String =
-    maxScoreIndexDirs.computeIfAbsent(d, dir => {
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_tidxms_" + Integer.toHexString(dir.hashCode))
-      if (f.exists()) org.apache.hadoop.fs.FileUtil.fullyDelete(f)
-      val out = f.getAbsolutePath
-      val docs = Engine.table(s, dir, "documents").select(col("doc_id"), col("text"))
-      pipeline.TextIndex.write(docs.filter(col("doc_id") % 2 === 0), out, blockSize = 4)
-      pipeline.TextIndex.append(docs.filter(col("doc_id") % 2 === 1), out)
-      out
-    })
+  private val maxScoreIndexDir = fixture("tidxms") { (s, d, out) =>
+    val docs = Engine.table(s, d, "documents").select(col("doc_id"), col("text"))
+    pipeline.TextIndex.write(docs.filter(col("doc_id") % 2 === 0), out, blockSize = 4)
+    pipeline.TextIndex.append(docs.filter(col("doc_id") % 2 === 1), out)
+  }
 
   /** Zone-map fixture for q_zonemap: a 16-file range-partitioned copy
     * of lineitem (the multi-file layout the single-file testdata
@@ -357,80 +299,41 @@ object SparkEntry {
     * its min/max manifest on l_shipdate. The copy holds the exact
     * same rows, so the DuckDB oracle runs the interval filter on the
     * original table. */
-  private val zoneMapDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def zoneMapDir(s: SparkSession, d: String): String =
-    zoneMapDirs.computeIfAbsent(d, dir => {
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_zmap_" + Integer.toHexString(dir.hashCode))
-      if (f.exists()) org.apache.hadoop.fs.FileUtil.fullyDelete(f)
-      val out = f.getAbsolutePath
-      val li = Engine.table(s, dir, "lineitem")
-        .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice", "l_shipdate")
-      // built in two steps so the ORACLED read exercises the
-      // incremental maintenance path, not just the full build: base
-      // files + manifest, then appended files reconciled by update()
-      li.filter(col("l_orderkey") % 2 === 0)
-        .repartitionByRange(8, col("l_shipdate"))
-        .write.mode("overwrite").parquet(s"$out/table")
-      sources.ZoneMaps.write(s, s"$out/table", s"$out/manifest", Seq("l_shipdate"))
-      li.filter(col("l_orderkey") % 2 === 1)
-        .repartitionByRange(8, col("l_shipdate"))
-        .write.mode("append").parquet(s"$out/table")
-      sources.ZoneMaps.update(s, s"$out/table", s"$out/manifest")
-      out
-    })
-
-  /** Force-builds the per-dir index fixtures the ann_* queries read —
-    * the production shape is an index built OFFLINE, so Bench calls
-    * this before its timed loop and the build cost never bills to
-    * whichever ann_* query happens to run first (round-10 bench drift
-    * cause: the ivfDeleteIndexDir wipe+delete+compact lifecycle ran
-    * inside the first timed ann_ivf_delete rep). Results are
-    * identical either way: the builders are deterministic and
-    * memoized per (JVM, dir). */
-  private[graft] def prepareIndexFixtures(s: SparkSession, d: String): Unit = {
-    ivfIndexDir(s, d)
-    ivfDeleteIndexDir(s, d)
-    bandIndexDir(s, d)
-    bucketedPair(s, d)
-    corpusStoreDir(s, d)
-    textIndexDir(s, d)
-    maxScoreIndexDir(s, d)
-    zoneMapDir(s, d)
-    dedupBatchDir(s, d)
-    // the external-query batch parquets too: tiny writes, but each is
-    // a Spark job, and lazily building them inside the first timed
-    // q_sql_*_many rep billed fixture cost onto the query (the r13
-    // bench regression's suite-pollution vector)
-    annQueriesDir(s, d)
-    searchQueriesDir(s, d)
-    phraseQueriesDir(s, d)
-    decontamFixtureDir(s, d)
-    diffNewDir(s, d)
-    piiDocsDir(s, d)
-    hybridQueriesDir(s, d)
-    mediaTableDir(s, d)
-    ()
+  private val zoneMapDir = fixture("zmap") { (s, d, out) =>
+    val li = Engine.table(s, d, "lineitem")
+      .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice", "l_shipdate")
+    // built in two steps so the ORACLED read exercises the
+    // incremental maintenance path, not just the full build: base
+    // files + manifest, then appended files reconciled by update()
+    li.filter(col("l_orderkey") % 2 === 0)
+      .repartitionByRange(8, col("l_shipdate"))
+      .write.mode("overwrite").parquet(s"$out/table")
+    sources.ZoneMaps.write(s, s"$out/table", s"$out/manifest", Seq("l_shipdate"))
+    li.filter(col("l_orderkey") % 2 === 1)
+      .repartitionByRange(8, col("l_shipdate"))
+      .write.mode("append").parquet(s"$out/table")
+    sources.ZoneMaps.update(s, s"$out/table", s"$out/manifest")
   }
 
-  /** Forget (and delete) every per-JVM index fixture, so the next
+  /** Builds every registered fixture for `d` — the production shape is
+    * an index built OFFLINE, so Bench, PlanDump and QueryProfile call
+    * this before they time or plan anything, and no build (a Spark job
+    * or several) bills to whichever query first reads a fixture.
+    * Results are identical either way: the builders are deterministic
+    * and memoized. */
+  private[graft] def prepareIndexFixtures(s: SparkSession, d: String): Unit =
+    fixtures.foreach(_(s, d))
+
+  /** Forget and delete every fixture built so far, so the next
     * [[prepareIndexFixtures]] re-runs each build/append/delete/compact
     * lifecycle from scratch. Used by [[ClusterCheck]]: the multi-JVM
     * validation must exercise the index WRITE paths under
     * `local-cluster`, not just read layouts a `local[n]` session built
     * earlier in the same process. */
   private[graft] def resetFixtureMemo(): Unit = {
-    Seq(ivfIndexDirs, ivfDeleteDirs, bandIndexDirs, corpusStoreDirs,
-        textIndexDirs, maxScoreIndexDirs, zoneMapDirs, annQueryDirs,
-        searchQueryDirs, phraseQueryDirs, dedupBatchDirs,
-        decontamDirs, diffNewDirs, piiDocsDirs, hybridQueryDirs).foreach { m =>
-      m.values().forEach(d =>
-        org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(d)))
-      m.clear()
-    }
-    // bucketed tables: files are replaced via DROP TABLE + Overwrite on
-    // rebuild, and the catalog entry dies with the session — just forget
-    bucketedDirs.clear()
+    fixtureMemo.values().forEach(d =>
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(d)))
+    fixtureMemo.clear()
   }
 
   /** Committed unsigned/float16 parquet fixture (generated by
@@ -3923,9 +3826,11 @@ object SparkEntry {
     // idempotent, no catalog state), then re-read what was written.
     // The oracle computes the same projection directly, so the hash
     // gate proves the persisted parquet round-trips the exact doubles.
+    // The directory sits under this JVM's fixture root, so concurrent
+    // runs never overwrite each other's copy.
     "q_sql_writeback" -> ((s, d) => {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_writeback_" + Integer.toHexString(d.hashCode)).getAbsolutePath
+      val out = new java.io.File(fixtureRoot,
+        "writeback_" + Engine.catalogTag(d)).getAbsolutePath
       s.sql(s"INSERT OVERWRITE DIRECTORY '$out' USING parquet " +
         s"SELECT doc_id, quality FROM corpus_quality('$d/documents.parquet') " +
         "WHERE quality >= 0.12")
@@ -4936,11 +4841,10 @@ object SparkEntry {
   @volatile var oracleSfDir: String = "/root/testdata/sf0.01"
 
   def oracleSql: Map[String, String] = {
-    // the shared IVF index the drift oracle reads directly: the SAME
-    // path derivation ivfIndexDir builds for the current verify sfDir
-    // (persisted on disk, so DuckDB sees it after the Verify run that
-    // built it)
-    val ivfDir = ivfIndexPath(oracleSfDir)
+    // the shared IVF index the drift oracle reads directly: the path
+    // ivfIndexDir builds for the verify sfDir, under the fixture root
+    // Verify keeps after exit (keepFixturesAt)
+    val ivfDir = ivfIndexDir.path(oracleSfDir)
     (parityOracles ++ aggOracles ++ joinOracles ++ ext2Oracles ++ ext3Oracles ++
       pipelineOracles ++ ext6Oracles ++ analyticsOracles)
       .map { case (k, v) =>

@@ -6,6 +6,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     SparkEntry.oracleSfDir = sfDir // path-referencing oracles (q_rowid)
+    // the drift oracle reads the IVF fixture after this JVM exits, so
+    // the fixtures stay on disk: beside outDir, whose every
+    // subdirectory is a query result
+    SparkEntry.keepFixturesAt(new java.io.File(outDir).getAbsolutePath + ".fixtures")
     // Optional 3rd arg: comma-separated query-name subset (local iteration aid).
     val only = args.drop(2).headOption.map(_.split(",").toSet)
     val spark = Engine.session("graft-verify", Engine.envCpus(4))

@@ -84,6 +84,25 @@ class FixtureCanarySpec extends AnyFunSuite with SparkFixture {
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
   }
 
+  test("fixture registry: prepare builds every fixture and reset deletes every one") {
+    // Bench, PlanDump and QueryProfile time and plan after
+    // prepareIndexFixtures, so no query may build a fixture lazily;
+    // ClusterCheck rebuilds every fixture after resetFixtureMemo, so
+    // none may survive it. The two queries are the only readers of
+    // the allow-list and media fixtures.
+    def onDisk: Set[String] =
+      Option(SparkEntry.fixtureRoot.listFiles).toSet.flatten.map(_.getName)
+    SparkEntry.prepareIndexFixtures(spark, sfDir)
+    val prepared = onDisk
+    assert(prepared.nonEmpty, "prepareIndexFixtures built nothing")
+    Seq("q_sql_ann_filtered", "q_sql_media_dedup")
+      .foreach(SparkEntry.queries(_)(spark, sfDir))
+    assert(onDisk == prepared,
+      s"built after prepareIndexFixtures: ${(onDisk -- prepared).toSeq.sorted}")
+    SparkEntry.resetFixtureMemo()
+    assert(onDisk.isEmpty, s"left on disk after resetFixtureMemo: ${onDisk.toSeq.sorted}")
+  }
+
   test("cluster gate covers every SparkEntry query (cluster_check.json cannot drift)") {
     // The multi-JVM validation (graft.ClusterCheck) is only a gate if
     // it tracks the surface: a new query without a cluster_check row

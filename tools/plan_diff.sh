@@ -6,9 +6,17 @@
 # the same plan, and RDD ids also move with the number of jobs run
 # earlier in the session. The source line in such an RDD's call site
 # (`at localCheckpoint at TextDedup.scala:<n>`) is normalized too: it
-# moves with any edit above that line. Prints a unified diff per
-# changed query and exits non-zero on any difference, including a
-# query dumped on one side only.
+# moves with any edit above that line. Three more names differ between
+# any two JVMs and are normalized as well: lambda class names
+# (`Lambda$<n>/0x<addr>`), identity hashes in object strings
+# (`[[D@<hex>`) and the write UUIDs in part-file names. So are fixture
+# names: a fixture directory, whether under a per-JVM root
+# (`<tmp>/graft_fixtures<n>/<tag>_<sf>`) or at the older fixed path
+# (`/tmp/graft_<tag>_<hex>`), becomes `FIXTURE/<tag>`, and the bucketed
+# fixture tables (`orders_bkt_<hex>`, `lineitem_bkt_<hex>`) lose their
+# testdata-dir suffix. Prints a unified diff per changed query and
+# exits non-zero on any difference, including a query dumped on one
+# side only.
 #
 # Each directory holds one PlanDump run; files pair by query name, the
 # file name minus its `_<suffix>.txt` (so the suffix has no `_`):
@@ -27,7 +35,10 @@ for side in A B; do
     [ -e "$f" ] || { echo "FAIL: no PlanDump files in $src"; exit 1; }
     query="$(basename "$f" .txt)"; query="${query%_*}"
     [ ! -e "$TMP/$side/$query.txt" ] || { echo "FAIL: $src holds two dumps of $query"; exit 1; }
-    sed -E 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g; s/RDD\[[0-9]+\]/RDD[N]/g; s/\.scala:[0-9]+/.scala:N/g' "$f" > "$TMP/$side/$query.txt"
+    sed -E -e 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g; s/RDD\[[0-9]+\]/RDD[N]/g; s/\.scala:[0-9]+/.scala:N/g' \
+      -e 's/Lambda\$[0-9]+\/0x[0-9a-f]+/Lambda$N/g; s/@[0-9a-f]{5,8}\b/@H/g; s/[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}/UUID/g' "$f" \
+      | sed -E "s#[^][ ,()']*/graft_fixtures[0-9]*/([a-z_]+)_[0-9a-f]{8}#FIXTURE/\\1#g; s#[^][ ,()']*/graft_([a-z_]+)_[0-9a-f]+\\b#FIXTURE/\\1#g; s#\\b(orders|lineitem)_bkt_[0-9a-f]+\\b#\\1_bkt#g" \
+      > "$TMP/$side/$query.txt"
   done
 done
 if diff -ru "$TMP/A" "$TMP/B"; then

@@ -42,9 +42,11 @@ for sf in 0.001 0.01; do
   rm -rf "$out"
   SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify /root/testdata/sf$sf $out" \
     > "/tmp/closeout_verify_$sf.log" 2>&1
-  python3 tools/check_oracle.py "$out" "/root/testdata/sf$sf" | tail -1
-  python3 tools/check_oracle.py "$out" "/root/testdata/sf$sf" | tail -1 \
-    | grep -q " 0 fail" || { echo "FAIL: oracle mismatch at sf$sf"; exit 1; }
+  log="/tmp/closeout_oracle_$sf.log"
+  python3 tools/check_oracle.py "$out" "/root/testdata/sf$sf" > "$log" && rc=0 || rc=$?
+  tail -1 "$log"
+  [ "$rc" = 0 ] && tail -1 "$log" | grep -q " 0 fail" \
+    || { echo "FAIL: oracle mismatch at sf$sf (see $log)"; exit 1; }
 done
 
 echo "== [2/7] sbt test"
