@@ -186,20 +186,10 @@ object Bench {
       System.err.println(f"[bench] deep warmup $ws%.1fs (untimed)")
     }
     // Index fixtures build OUTSIDE the timed region (the production
-    // shape: indexes are built offline; the bench times the QUERIES).
-    // Skipped when an ONLY-run selects no index-reading query.
-    val indexQueries = Set("ann_ivf", "ann_ivf_serve", "ann_ivf_delete", "ann_ivf_filtered",
-      "ann_ivfpq", "ann_ivfpq_exact", "ann_ivf_recall", "dedup_band_incr",
-      "q_bucketed_join", "q_corpus_merge", "q_bm25_indexed", "q_bm25_maxscore",
-      "q_phrase_search",
-      "q_zonemap", "q_store_timetravel", "q_search_many", "q_hybrid_indexed",
-      "q_sql_phrase", "q_sql_search", "q_sql_ann", "q_sql_ann_many",
-      "q_sql_search_many", "q_sql_phrase_many", "q_sql_neardup_index",
-      "q_sql_neardup_batch", "q_sql_store", "q_sql_timetravel",
-      "q_sql_hybrid", "q_sql_hybrid_many", "q_sql_hybrid_weighted",
-      "q_sql_ann_filtered", "q_sql_index_drift", "q_sql_media_dedup")
-    if (only.forall(o => o.exists(indexQueries.contains)))
-      SparkEntry.prepareIndexFixtures(spark, sfDir)
+    // shape: indexes are built offline; the bench times the QUERIES),
+    // every run, ONLY-runs included: the registry knows every fixture,
+    // not which queries read which.
+    SparkEntry.prepareIndexFixtures(spark, sfDir)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>

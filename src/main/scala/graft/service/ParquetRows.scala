@@ -12,7 +12,10 @@ import org.apache.spark.sql.Row
   * parquet reader would produce for the same file: java.sql.Date for
   * DATE, java.sql.Timestamp for TIMESTAMP(micros), BigDecimal for
   * int-backed decimals, String for UTF8 binary. Nested
-  * list/map/struct results fall back to `ResultReader.asDataFrame`. */
+  * list/map/struct and INT96 columns are not served: in process, read
+  * such a result through `ResultReader.asDataFrame`; over TCP there is
+  * no fallback, and `get_query_data` answers with an error line whose
+  * message names the column. */
 object ParquetRows {
 
   def toRow(g: Group, schema: MessageType): Row = {
@@ -77,7 +80,7 @@ object ParquetRows {
         }
         case INT96 =>
           throw new UnsupportedOperationException(
-            "INT96 timestamps are not served by the paged reader; use asDataFrame")
+            s"INT96 column '${p.getName}' is not served by the paged reader; use asDataFrame")
       }
     case _: GroupType =>
       throw new UnsupportedOperationException(

@@ -49,7 +49,13 @@ import java.nio.charset.StandardCharsets
   * replies Identify::Worker{id}): the server records the
   * connection_id for the socket's lifetime and answers with its
   * worker_id. Bare requests without a prior identify are still
-  * served — the handshake is protocol parity, not an auth gate. */
+  * served — the handshake is protocol parity, not an auth gate.
+  *
+  * Accepted sockets are TCP_NODELAY: a response line leaves in
+  * several writes (the writer's encoder flushes every 8 KB, and a
+  * 500-row page is tens of KB), and with Nagle on, the last write
+  * waits for the client's delayed ACK — about 40 ms on Linux, more
+  * than the page itself costs. */
 final class QueryServer(svc: QueryService, port: Int = 0) {
 
   private val server = new ServerSocket(port)
@@ -108,6 +114,7 @@ final class QueryServer(svc: QueryService, port: Int = 0) {
   def close(): Unit = { running = false; server.close() }
 
   private def serve(sock: Socket): Unit = {
+    sock.setTcpNoDelay(true)
     val in = new BufferedReader(new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
     val out = new PrintWriter(sock.getOutputStream, true, StandardCharsets.UTF_8)
     var connId: Option[String] = None

@@ -649,9 +649,11 @@ final case class ResultPage(rows: Seq[Row], next: Option[ResultCursor], prev: Op
   * The whole page path — schema, row counts and rows — launches ZERO
   * Spark jobs (asserted in ServiceSpec, in process and over the TCP
   * server): the schema and the row counts come from the parquet
-  * footers the reader opens once, and pages are served by a
-  * driver-local row-group reader that skips straight to the target
-  * group — the same direct row-group addressing as the reference's
+  * footers the reader reads once, on first use, and pages are served
+  * by a driver-local row-group reader that opens each part file on
+  * that footer, skips straight to the target group, and skips the
+  * rows before the cursor without materializing them — the same
+  * direct row-group addressing as the reference's
   * `query_data_handler.rs:183-237`. A paged point-read through a
   * distributed scan would cost a full job per page; a 100-TB result
   * set is paged by footer arithmetic exactly like a 100-row one. */
@@ -661,19 +663,21 @@ final class ResultReader(spark: SparkSession, dir: String) {
 
   private val conf = spark.sessionState.newHadoopConf()
 
-  /** part-files sorted by name = write order (Spark task order).
-    * A missing directory (query cancelled/failed before any commit)
-    * reads as an empty result, not an exception. */
-  lazy val files: Array[String] = {
+  /** Part-file statuses sorted by name = write order (Spark task
+    * order). A missing directory (query cancelled/failed before any
+    * commit) reads as an empty result, not an exception. */
+  private lazy val statuses: Array[org.apache.hadoop.fs.FileStatus] = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(conf)
     if (!fs.exists(path)) Array.empty
-    else fs.listStatus(path).map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
-      .map(_.toString).sorted
+    else fs.listStatus(path)
+      .filter(st => st.getPath.getName.endsWith(".parquet") && !st.getPath.getName.startsWith("_"))
+      .sortBy(_.getPath.toString)
   }
 
-  private lazy val footers = files.map(f => Parquet.footer(conf, new org.apache.hadoop.fs.Path(f)))
+  lazy val files: Array[String] = statuses.map(_.getPath.toString)
+
+  private lazy val footers = statuses.map(st => Parquet.footer(conf, st.getPath))
 
   /** The result's schema from the first part-file's footer, as the
     * Spark read of `dir` infers it; empty for a result with no
@@ -710,15 +714,18 @@ final class ResultReader(spark: SparkSession, dir: String) {
     ResultCursor(i, g)
   }
 
-  /** Slice [start, start+n) of one parquet file in row order: skip
-    * whole row groups by footer row counts, materialize only the
-    * groups the page touches. */
-  private def slice(file: String, start: Long, n: Long): Seq[Row] = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file), conf))
+  /** Slice [start, start+n) of one part file in row order, opened on
+    * the footer already held: skip whole row groups by footer row
+    * counts, and in the first group the page touches, skip the rows
+    * before `start` without materializing them. */
+  private def slice(fileIdx: Int, start: Long, n: Long): Seq[Row] = {
+    val footer = footers(fileIdx)
+    val in = HadoopInputFile.fromStatus(statuses(fileIdx), conf)
+    val reader = ParquetFileReader.open(in, footer,
+      org.apache.parquet.HadoopReadOptions.builder(conf).build(), in.newStream())
     try {
-      val footer = reader.getFooter
       val schema = footer.getFileMetaData.getSchema
+      val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
       val out = Seq.newBuilder[Row]
       var toSkip = start
       var remaining = n
@@ -730,16 +737,14 @@ final class ResultReader(spark: SparkSession, dir: String) {
           toSkip -= groupRows
           reader.skipNextRowGroup() // footer bookkeeping only, no page IO
         } else {
-          val pages = reader.readNextRowGroup()
-          val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
-          val rr = io.getRecordReader(pages,
-            new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(schema))
+          val take = math.min(groupRows - toSkip, remaining)
+          // PagedRecordFilter counts rows from 1
+          val rr = io.getRecordReader(reader.readNextRowGroup(),
+            new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(schema),
+            org.apache.parquet.filter.PagedRecordFilter.page(toSkip + 1, take))
           var i = 0L
-          while (i < groupRows && remaining > 0) {
-            val g = rr.read()
-            if (i >= toSkip) { out += ParquetRows.toRow(g, schema); remaining -= 1 }
-            i += 1
-          }
+          while (i < take) { out += ParquetRows.toRow(rr.read(), schema); i += 1 }
+          remaining -= take
           toSkip = 0
         }
         b += 1
@@ -763,7 +768,7 @@ final class ResultReader(spark: SparkSession, dir: String) {
     while (remaining > 0) {
       val c = toCursor(g)
       val inFile = math.min(remaining, fileRowCounts(c.fileIdx) - c.rowIdx)
-      rows ++= slice(files(c.fileIdx), c.rowIdx, inFile)
+      rows ++= slice(c.fileIdx, c.rowIdx, inFile)
       g += inFile; remaining -= inFile
     }
     val next = if (start + n < totalRows) Some(toCursor(start + n)) else None

@@ -182,6 +182,127 @@ class ServiceSpec extends AnyFunSuite with SparkFixture {
     assert(graft.sources.Parquet.schema(spark, dir) == inferred)
   }
 
+  test("paged reads equal the Spark read across row-group and file boundaries") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft_pages").toString + "/result"
+    // two part files of several small row groups each; the string and
+    // nullable columns make every skipped row decode real values
+    spark.range(0, 6000, 1, 2)
+      .select(col("id"), (col("id") * 7 % 1000).cast("string").as("s"),
+        when(col("id") % 3 =!= 0, (col("id") % 97).cast("int")).as("maybe"),
+        (col("id") / 8.0).as("d"),
+        date_add(lit("2020-01-01").cast("date"), (col("id") % 400).cast("int")).as("day"))
+      .write.option("parquet.block.size", 8192).parquet(dir)
+    val r = new graft.service.ResultReader(spark, dir)
+    val groups = r.rowGroupRowCounts
+    assert(r.files.length == 2 && groups.forall(_.length >= 3),
+      groups.map(_.mkString(",")).mkString(" | "))
+    // each part file read by Spark, concatenated in the reader's file order
+    val expected = r.files.toSeq.flatMap(f => spark.read.parquet(f).collect().toSeq)
+    val total = r.totalRows
+    assert(expected.size == total)
+    val fileStart = r.fileRowCounts.scanLeft(0L)(_ + _)
+    def cursor(g: Long): ResultCursor = {
+      val f = r.files.indices.lastIndexWhere(fileStart(_) <= g)
+      ResultCursor(f, g - fileStart(f))
+    }
+    // rows [from, until) of the expected answer, with a short failure message
+    def same(got: Seq[org.apache.spark.sql.Row], from: Long, until: Long, what: String): Unit = {
+      val want = expected.slice(from.toInt, until.toInt)
+      if (got != want) fail(s"$what: ${got.size} rows, want ${want.size}; first difference at " +
+        got.indices.find(i => i >= want.size || got(i) != want(i)).getOrElse(got.size))
+    }
+    def check(start: Long, limit: Int, forward: Boolean = true): Unit = {
+      val (from, until) =
+        if (forward) (start, math.min(start + limit, total))
+        else (math.max(0L, start - limit), start)
+      same(r.read(cursor(start), limit, forward).rows, from, until,
+        s"page at $start, limit $limit, forward $forward")
+    }
+    val groupStarts = for (f <- groups.indices; k <- groups(f).indices)
+      yield (fileStart(f) + groups(f).take(k).sum, groups(f)(k))
+    for ((b, n) <- groupStarts) {
+      check(b, n.toInt)                  // exactly one row group
+      check(b, 1)
+      check(b + n / 2, n.toInt)          // mid-group to mid-next-group
+      if (b > 0) {
+        check(b - 37, 37)                // ends on the boundary
+        check(b - 1, 2)                  // straddles it
+        check(b, 37, forward = false)    // backward, ending on it
+        check(b + 5, 11, forward = false)
+      }
+    }
+    check(fileStart(1) - 250, 500)       // across the file boundary
+    check(total, 500, forward = false)
+    // every group after the first, addressed by the wire cursor
+    for (f <- groups.indices; k <- 1 until groups(f).length) {
+      val g = fileStart(f) + groups(f).take(k).sum + 5
+      same(r.read(r.cursorOf(f, k, 5), 40).rows, g, math.min(g + 40, total), s"cursorOf($f, $k, 5)")
+    }
+    // whole walks, forward on `next` and backward on `prev`
+    def walk(from: ResultCursor, limit: Int, forward: Boolean): Seq[org.apache.spark.sql.Row] = {
+      val pages = Seq.newBuilder[Seq[org.apache.spark.sql.Row]]
+      var c = Option(from)
+      while (c.isDefined) {
+        val p = r.read(c.get, limit, forward)
+        pages += p.rows
+        c = if (forward) p.next else p.prev
+      }
+      (if (forward) pages.result() else pages.result().reverse).flatten
+    }
+    same(walk(ResultCursor(0, 0), 333, forward = true), 0, total, "forward walk")
+    same(walk(cursor(total), 211, forward = false), 0, total, "backward walk")
+  }
+
+  test("get_query_data: 500-row JSON pages round-trip under the delayed-ACK floor") {
+    val id = svc.runQuery(
+      s"select * from read_files('$sfDir/lineitem.parquet')")
+    assert(svc.awaitComplete(id) == QueryStatus.Complete)
+    assert(svc.reader(id).totalRows >= 5000)
+    val server = new graft.service.QueryServer(svc)
+    val sock = new java.net.Socket("127.0.0.1", server.boundPort)
+    try {
+      // the client's own request writes are not under test
+      sock.setTcpNoDelay(true)
+      val out = new java.io.PrintWriter(sock.getOutputStream, true)
+      val in = new java.io.BufferedReader(new java.io.InputStreamReader(sock.getInputStream))
+      val rtts = (0 until 10).map { k =>
+        val t0 = System.nanoTime()
+        out.println(s"""{"type":"get_query_data","query_id":"$id","row_idx":${k * 500},"limit":500}""")
+        val line = in.readLine()
+        val ms = (System.nanoTime() - t0) / 1e6
+        assert(line.contains("get_query_data_resp"), line.take(300))
+        // a line of several writer flushes: the shape Nagle delays
+        assert(line.length > 16384, s"page line of ${line.length} chars")
+        ms
+      }.sorted
+      val median = (rtts(4) + rtts(5)) / 2
+      // Linux delays an ACK up to 40 ms; a page waiting on one is a stall
+      assert(median < 40.0,
+        f"median page round trip $median%.1f ms (${rtts.map(t => f"$t%.1f").mkString(", ")})")
+    } finally { sock.close(); server.close() }
+  }
+
+  test("get_query_data answers a nested-column result with an error naming the column") {
+    val id = svc.runQuery(
+      s"select r_regionkey, named_struct('k', r_regionkey, 'n', r_name) as region_pair " +
+        s"from read_files('$sfDir/region.parquet')")
+    assert(svc.awaitComplete(id) == QueryStatus.Complete)
+    val server = new graft.service.QueryServer(svc)
+    val sock = new java.net.Socket("127.0.0.1", server.boundPort)
+    try {
+      val out = new java.io.PrintWriter(sock.getOutputStream, true)
+      val in = new java.io.BufferedReader(new java.io.InputStreamReader(sock.getInputStream))
+      // over the wire there is no asDataFrame fallback: the page is an error
+      val (resp, jobs, _) = jobsDuring {
+        out.println(s"""{"type":"get_query_data","query_id":"$id","limit":10}""")
+        in.readLine()
+      }
+      assert(resp.contains("\"type\":\"error\"") && resp.contains("'region_pair'"), resp)
+      assert(jobs == 0, s"get_query_data launched $jobs Spark job(s)")
+    } finally { sock.close(); server.close() }
+  }
+
   test("TCP query protocol: run_query, status poll, paged data over a real socket") {
     val server = new graft.service.QueryServer(svc)
     try {
