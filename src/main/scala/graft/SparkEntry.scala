@@ -3776,8 +3776,9 @@ object SparkEntry {
 
     // Hybrid retrieval through the SQL surface: BM25 leg from the
     // persisted text index, dense leg from the IVF index (adaptive =
-    // exact), integer RRF fusion — the same legs and algebra as
-    // q_hybrid_indexed, so the duckHybridSql body pins both surfaces.
+    // exact), integer RRF fusion — the TVF runs q_hybrid_indexed's
+    // composition (topRanks + rrfFuse), so the duckHybridSql body pins
+    // both surfaces.
     // The query vector is vec_id 7's embedding as a literal (the
     // serving shape: the application supplies the vector).
     "q_sql_hybrid" -> ((s, d) => {

@@ -1139,13 +1139,16 @@ object Embeddings {
   /** Per-query top-k ranking of a (query_id, neighbor_id, cos)
     * candidate frame — the shared tail of every indexed read path
     * (ties break on the lower neighbor id, same as [[ivfTopK]]). */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    rankedTopK(scored, k).orderBy("query_id", "rank")
+
+  /** [[rankTopK]]'s rows without its output order. */
+  private def rankedTopK(scored: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "cos", "rank")
-      .orderBy("query_id", "rank")
   }
 
   /** Shared probe → prune → exact-score → top-k core of the indexed
@@ -1231,8 +1234,13 @@ object Embeddings {
     // something the driver already had the bytes for, and measurably
     // tripled serving latency. The CORPUS passes (the part that is
     // actually 100 TB) are unchanged: one pruned scan per pass.
-    val top1: Array[(Long, Long, Double, Long)] = rankTopK(scored, k).collect()
+    // Collected UNSORTED and ordered here: rankTopK's trailing
+    // orderBy is a range sort (a sampling job plus an exchange) over
+    // rows the driver groups anyway; sorting ≤ queries × k tuples in
+    // memory gives localTop1 the same (query_id, rank) row order.
+    val top1: Array[(Long, Long, Double, Long)] = rankedTopK(scored, k).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+      .sortBy(t => (t._1, t._4))
     // Bounded driver state: ≤ nlist (cell, radius) rows, signature-cached.
     val radMap: Map[Int, Double] = cachedRadii(spark, root)
     // The exploded query × probed-cell frame, driver-side — the SAME

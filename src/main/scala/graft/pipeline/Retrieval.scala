@@ -33,9 +33,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * the already-gated retrieval operators. [[topRanks]] cuts a scored
   * corpus to (id, rank) with `orderBy(...).limit(k)` — Spark plans
   * TakeOrderedAndProject (per-partition top-k + driver merge), never
-  * a global sort — and only then assigns ranks with a window over the
-  * k survivors (single-partition by design: its input is k rows, not
-  * the corpus). */
+  * a global sort — and only then numbers the k survivors in one
+  * ungrouped aggregate (its input is k rows in one partition, not the
+  * corpus). */
 object Retrieval {
 
   /** Contribution of rank r is `RrfScale div (k0 + r)` — large enough
@@ -46,14 +46,26 @@ object Retrieval {
 
   /** Cut a scored frame to its deterministic top-k as (idCol, rank)
     * with rank 1..k — ties in `score` broken by ascending id. The cut
-    * is TakeOrderedAndProject (no global sort); the rank window runs
-    * over the k survivors only. */
+    * is TakeOrderedAndProject (no global sort, one output partition).
+    * The k survivors are numbered by sorting them into one array in an
+    * ungrouped aggregate and exploding it with positions: no exchange,
+    * no job, and none of the "No Partition Defined for Window
+    * operation!" WARN an unpartitioned rank window logs per call. The
+    * comparator is the cut's own order: score desc (nulls last, NaN
+    * highest as in Spark's ordering), then id asc. */
   def topRanks(scored: DataFrame, score: Column, idCol: String, k: Int): DataFrame = {
     val top = scored.orderBy(score.desc, col(idCol)).limit(k)
-    top
-      .withColumn("rank",
-        row_number().over(Window.orderBy(score.desc, col(idCol))).cast("int"))
-      .select(col(idCol), col("rank"))
+    def before(l: Column, r: Column): Column = {
+      val (ls, rs) = (l("s"), r("s"))
+      when(ls.isNull =!= rs.isNull, when(ls.isNull, 1).otherwise(-1))
+        .when(ls > rs, -1).when(ls < rs, 1)
+        .otherwise(when(l("id") < r("id"), -1).when(l("id") > r("id"), 1)
+          .otherwise(0))
+    }
+    top.agg(array_sort(collect_list(struct(score.as("s"), col(idCol).as("id"))),
+        before _).as("ranked"))
+      .select(posexplode(col("ranked")))
+      .select(col("col.id").as(idCol), (col("pos") + 1).cast("int").as("rank"))
   }
 
   /** Per-leg integer weights for weighted fusion: `weights(i)` scales

@@ -1182,7 +1182,23 @@ object CorpusMixTVF extends TableFunction {
   * (statement-scoped, loud when the text side is a plain corpus), and
   * an index-routed lexical leg logs its route under `corpus_search`'s
   * rule (`[corpus_hybrid] route=...`, [[TvfRetrieval.lexical]]).
-  * Returns (doc_id, rrf_score, n_legs) ordered score-desc. */
+  * Returns (doc_id, rrf_score, n_legs) ordered score-desc.
+  *
+  * Two compositions, one per query shape, over the same legs:
+  *   - one query (positional terms + `embedding=>`): `q_hybrid_indexed`'s
+  *     composition — corpus_search's own leg cut and ranked by
+  *     [[graft.pipeline.Retrieval.topRanks]], the dense leg, fused by
+  *     [[graft.pipeline.Retrieval.rrfFuse]]. Nothing is partitioned by
+  *     query_id and nothing range-sorts: every ranked frame is at most
+  *     k rows in one partition, so no exchange beyond the fusion
+  *     aggregate's costs a scheduling round trip;
+  *   - a batch (`queries=>'path'`, one (query_id, query, embedding)
+  *     parquet): the batch lexical leg ranked by a window per
+  *     query_id, the dense leg over every query, fused by
+  *     [[graft.pipeline.Retrieval.rrfFuseMany]]; the rows carry
+  *     query_id first.
+  * SourcesSpec pins that a batch row set equals the single-query TVF
+  * per query, on plain and index layouts, weighted and not. */
 object CorpusHybridTVF extends TableFunction {
   def build(args: Seq[Expression]): LogicalPlan = {
     val (pos, opts) = TvfArgs.parse("corpus_hybrid", args,
@@ -1213,8 +1229,8 @@ object CorpusHybridTVF extends TableFunction {
     // weights=>'2,1' — integer per-leg fusion weights in (lexical,
     // dense) order; count/positivity/overflow bounds (>= 1, <=
     // Retrieval.MaxLegWeight so w*RrfScale stays in int64) live in
-    // rrfFuseMany's legWeights (ONE weighting truth with the Scala
-    // surface), which fires at TVF plan build
+    // rrfFuse/rrfFuseMany's legWeights (ONE weighting truth with the
+    // Scala surface), which fires at TVF plan build
     val legWeights: Seq[Long] = opts.get("weights").map { ws =>
       try ws.split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
       catch { case _: NumberFormatException =>
@@ -1226,19 +1242,42 @@ object CorpusHybridTVF extends TableFunction {
     val resolve = (p: String) => ReadFiles.resolve(opts.get("connection"), p)
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    // resolve the query set: a single (terms, vector) pair from the
-    // literals, or a (query_id, query, embedding) batch parquet — the
-    // serving shape for application query batches arriving as files.
-    // Batch columns resolve BY NAME (order-free); null/duplicate ids,
-    // null queries, and null embeddings fail loud with context.
-    // Single-query literals wrap into a one-row batch (query_id 0) so
-    // both shapes flow through ONE leg + fusion code path.
-    val (termPairs, qVecs, qDim) = queryStr match {
+    val tp = resolve(textPath)
+    lazy val lexIndexed = IndexLayouts.requireServable(
+      spark, tp, "corpus_hybrid", IndexLayouts.TextIdx)
+    // dense leg — corpus_ann's routing and dim guard
+    def dense(qVecs: org.apache.spark.sql.DataFrame, qDim: Option[Int]) =
+      TvfRetrieval.dense("corpus_hybrid", spark, qVecs, qDim,
+          resolve(vecPath), kPerLeg, nprobe)
+        .select(col("query_id"), col("neighbor_id").as("doc_id"),
+          col("rank").cast("int").as("rank"))
+    val fused = queryStr match {
+      case Some(query) =>
+        val vec = TvfRetrieval.vector("corpus_hybrid", "embedding",
+          opts.getOrElse("embedding", throw new IllegalArgumentException(
+            "corpus_hybrid: embedding=>'v1,v2,...' is required (the dense " +
+              "leg's query vector)")))
+        val terms = TvfRetrieval.termsOf(query)
+        require(terms.nonEmpty, "corpus_hybrid: empty query")
+        // one query: corpus_search's own leg (its top k_per_leg),
+        // ranked by topRanks — no query_id window, no range sort
+        val lex = graft.pipeline.Retrieval.topRanks(
+          TvfRetrieval.lexical("corpus_hybrid", spark, opts, tp, lexIndexed,
+            kPerLeg, Left(terms)),
+          col("score"), "doc_id", kPerLeg)
+        val den = dense(Seq((0L, vec)).toDF("query_id", "embedding"),
+          Some(vec.length)).drop("query_id")
+        graft.pipeline.Retrieval.rrfFuse(Seq(lex, den), "doc_id", k0, k,
+          weights = legWeights)
       case None =>
-        // ONE cap-enforced collect (this TVF reads three named
-        // columns, so it cannot go through batchFrame's two-column
-        // normalization) — id/null validation then runs on the
-        // collected rows and the dense-leg frame is driver-local,
+        // a (query_id, query, embedding) batch parquet — the serving
+        // shape for application query batches arriving as files.
+        // Batch columns resolve BY NAME (order-free); null/duplicate
+        // ids, null queries, and null embeddings fail loud with
+        // context. ONE cap-enforced collect (this TVF reads three
+        // named columns, so it cannot go through batchFrame's
+        // two-column normalization) — id/null validation then runs on
+        // the collected rows and the dense-leg frame is driver-local,
         // so no further plan-build job touches the parquet
         val raw = Parquet.read(spark, resolve(opts("queries")))
         val byName = raw.columns.map(c => c.toLowerCase -> c).toMap
@@ -1254,49 +1293,29 @@ object CorpusHybridTVF extends TableFunction {
         require(!rows.exists(_.isNullAt(1)),
           "corpus_hybrid: null query in the batch parquet")
         val qDim = TvfRetrieval.batchDim("corpus_hybrid", rows.toSeq, 2)
-        val b = spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), shaped.schema)
-        (rows.map(r => (r.getLong(0), TvfRetrieval.termsOf(r.getString(1)))).toSeq,
-          b.select(col("query_id"), col("embedding")), qDim)
-      case Some(query) =>
-        val vec = TvfRetrieval.vector("corpus_hybrid", "embedding",
-          opts.getOrElse("embedding", throw new IllegalArgumentException(
-            "corpus_hybrid: embedding=>'v1,v2,...' is required (the dense " +
-              "leg's query vector)")))
-        val terms = TvfRetrieval.termsOf(query)
-        require(terms.nonEmpty, "corpus_hybrid: empty query")
-        (Seq((0L, terms)), Seq((0L, vec)).toDF("query_id", "embedding"),
-          Some(vec.length))
+        val qVecs = spark.createDataFrame(
+            java.util.Arrays.asList(rows: _*), shaped.schema)
+          .select(col("query_id"), col("embedding"))
+        val termPairs =
+          rows.map(r => (r.getLong(0), TvfRetrieval.termsOf(r.getString(1)))).toSeq
+        require(termPairs.forall(_._2.nonEmpty),
+          s"corpus_hybrid: empty query for query_id(s) " +
+            termPairs.filter(_._2.isEmpty).map(_._1).mkString(", "))
+        // lexical leg — corpus_search's routing; per-query ranks
+        // assigned over the leg's bounded top-k output
+        val lexScored = TvfRetrieval.lexical("corpus_hybrid", spark, opts, tp,
+          lexIndexed, kPerLeg, Right(termPairs))
+        val lexW = org.apache.spark.sql.expressions.Window
+          .partitionBy("query_id")
+          .orderBy(col("score").desc, col("doc_id"))
+        val lex = lexScored.select(col("query_id"), col("doc_id"), col("score"))
+          .withColumn("rank",
+            org.apache.spark.sql.functions.row_number().over(lexW).cast("int"))
+          .select("query_id", "doc_id", "rank")
+        graft.pipeline.Retrieval.rrfFuseMany(Seq(lex, dense(qVecs, qDim)),
+          "doc_id", k0, k, weights = legWeights)
     }
-    require(termPairs.forall(_._2.nonEmpty),
-      s"corpus_hybrid: empty query for query_id(s) " +
-        termPairs.filter(_._2.isEmpty).map(_._1).mkString(", "))
-    // lexical leg — corpus_search's routing; per-query ranks assigned
-    // over the leg's bounded top-k output
-    val tp = resolve(textPath)
-    val lexIndexed = IndexLayouts.requireServable(
-      spark, tp, "corpus_hybrid", IndexLayouts.TextIdx)
-    val lexScored = TvfRetrieval.lexical("corpus_hybrid", spark, opts, tp,
-      lexIndexed, kPerLeg, Right(termPairs))
-    val lexW = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("score").desc, col("doc_id"))
-    val lex = lexScored.select(col("query_id"), col("doc_id"), col("score"))
-      .withColumn("rank",
-        org.apache.spark.sql.functions.row_number().over(lexW).cast("int"))
-      .select("query_id", "doc_id", "rank")
-    // dense leg — corpus_ann's routing and dim guard
-    val den = TvfRetrieval.dense("corpus_hybrid", spark, qVecs, qDim,
-        resolve(vecPath), kPerLeg, nprobe)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"),
-        col("rank").cast("int").as("rank"))
-    val fused = graft.pipeline.Retrieval.rrfFuseMany(Seq(lex, den), "doc_id",
-      k0, k, weights = legWeights)
-    val out =
-      if (queryStr.isEmpty) fused
-      else fused.drop("query_id")
-        .orderBy(col("rrf_score").desc, col("doc_id"))
-    out.queryExecution.analyzed
+    fused.queryExecution.analyzed
   }
 }
 

@@ -10,6 +10,11 @@ import java.util.concurrent.atomic.LongAdder
   * the "where does the wall-clock actually go" companion to PlanDump
   * (initial plans hide AQE stage reuse; this measures what executed).
   *
+  * Each rep reports the query's BUILD (the `SparkEntry` builder,
+  * which runs the TVF builders' analysis-time jobs) apart from its
+  * EXECUTION (the noop write): wall and jobs per phase, and each job
+  * line names its phase.
+  *
   * Usage: runMain graft.tools.QueryProfile q1[,q2,...] [--reorder]
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_PROF_REPS
   * (default 2 — reports the LAST rep, so JIT/first-use costs are
@@ -48,6 +53,8 @@ object QueryProfile {
     val stageName = new ConcurrentHashMap[Int, String]()
     val jobStages = new ConcurrentHashMap[Int, Seq[Int]]()
     val jobWall = new ConcurrentHashMap[Int, (Long, Long, String)]()
+    val jobPhase = new ConcurrentHashMap[Int, String]()
+    val phaseKey = "graft.profile.phase"
     @volatile var collecting = false
     val listener = new SparkListener {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = if (collecting) {
@@ -68,6 +75,8 @@ object QueryProfile {
         if (collecting) stageName.put(s.stageInfo.stageId, s.stageInfo.name.take(60))
       override def onJobStart(j: SparkListenerJobStart): Unit = if (collecting) {
         jobStages.put(j.jobId, j.stageIds.map(_.toInt))
+        jobPhase.put(j.jobId, Option(j.properties)
+          .flatMap(p => Option(p.getProperty(phaseKey))).getOrElse("?"))
         jobWall.put(j.jobId, (j.time, -1L,
           Option(j.properties).flatMap(p =>
             Option(p.getProperty("spark.job.description"))).getOrElse("")))
@@ -90,17 +99,26 @@ object QueryProfile {
       var rep = 0
       while (rep < reps) {
         stageAcc.clear(); stageName.clear(); jobStages.clear(); jobWall.clear()
+        jobPhase.clear()
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
         System.gc()
         collecting = rep == reps - 1
+        val sc = spark.sparkContext
         val t0 = System.nanoTime()
+        sc.setLocalProperty(phaseKey, "build")
         val df = fn(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
+        val t1 = System.nanoTime()
+        sc.setLocalProperty(phaseKey, "exec")
+        try df.write.format("noop").mode("overwrite").save()
+        finally sc.setLocalProperty(phaseKey, null)
+        val t2 = System.nanoTime()
         if (collecting) {
-          org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
-          println(f"%n=== $name$tag rep$rep wall ${wall}%.3f s ===")
+          org.apache.spark.sql.graftbridge.ListenerBridge.drain(sc)
+          def jobsIn(phase: String) = jobPhase.values().toArray.count(_ == phase)
+          println(f"%n=== $name$tag rep$rep wall ${(t2 - t0) / 1e9}%.3f s " +
+            f"(build ${(t1 - t0) / 1e9}%.3f s, ${jobsIn("build")} jobs; " +
+            f"exec ${(t2 - t1) / 1e9}%.3f s, ${jobsIn("exec")} jobs) ===")
           if (reorder.isDefined) {
             println("optimized-plan leaves in join order:")
             df.queryExecution.optimizedPlan.collectLeaves().zipWithIndex.foreach {
@@ -113,7 +131,8 @@ object QueryProfile {
             val sids = jobStages.getOrDefault(jid, Seq.empty)
             val accs = sids.flatMap(s => Option(stageAcc.get(s)))
             def sum(f: Acc => LongAdder) = accs.map(a => f(a).sum()).sum
-            println(f"job $jid%3d wall ${if (te > 0) (te - ts) / 1e3 else -1.0}%7.3f s " +
+            println(f"job $jid%3d ${jobPhase.getOrDefault(jid, "?")}%-5s " +
+              f"wall ${if (te > 0) (te - ts) / 1e3 else -1.0}%7.3f s " +
               f"tasks ${sum(_.tasks)}%4d taskTime ${sum(_.taskTimeMs) / 1e3}%8.2f s " +
               f"gc ${sum(_.gcTimeMs) / 1e3}%6.2f s " +
               f"in ${sum(_.inputB) / 1e6}%9.1f MB shufR ${sum(_.shuffleReadB) / 1e6}%8.1f MB " +

@@ -1228,4 +1228,43 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(!dedupPlan.toString.contains("documents.parquet"),
       "corpus parquet leaked into the index-served plan")
   }
+
+  test("corpus_hybrid, one query over index layouts: no range-sort exchange, no query_id window") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.functions.col
+    val base = java.nio.file.Files.createTempDirectory("graft_plan_hybrid").toString
+    val emb = Engine.table(spark, sfDir, "embeddings")
+    graft.pipeline.TextIndex.write(
+      Engine.table(spark, sfDir, "documents").select("doc_id", "text"),
+      s"$base/text", buckets = 8)
+    graft.pipeline.Embeddings.writeIvfIndex(emb, s"$base/ivf", nlist = 8)
+    val vec = emb.filter(col("vec_id") === 7L).select("embedding")
+      .head().getSeq[Float](0).map(_.toDouble).mkString(",")
+    // every cell probed, as in the serving benchmark's hybrid statement
+    def hybrid() = spark.sql(
+      s"SELECT * FROM corpus_hybrid('$base/text', '$base/ivf', " +
+        s"'spark hash window', embedding=>'$vec', k=>15, k_per_leg=>20, nprobe=>8)")
+    hybrid().collect() // first use reads and caches the index metadata
+    val (df, analysisJobs, _) = jobsDuring(hybrid())
+    val (rows, execJobs, _) = jobsDuring(df.collect())
+    info(s"Spark jobs, warm: $analysisJobs at analysis, $execJobs at execution")
+    assert(rows.nonEmpty)
+    // the executed (AQE final) plan, query stages included: every
+    // ranked frame is at most k rows in one partition, so a range sort
+    // or a window partitioned by query_id is a scheduling round trip
+    // the data does not need
+    val p = df.queryExecution.executedPlan
+    assert(p.toString.contains("isFinalPlan=true"), p.toString)
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val rangeSorts = aqe.collect(p) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(rangeSorts.isEmpty, s"range-sort exchange in a one-query hybrid:\n$p")
+    val perQuery = aqe.collect(p) {
+      case w: WindowExec if w.partitionSpec.exists(_.references.exists(_.name == "query_id")) => w
+    }
+    assert(perQuery.isEmpty, s"query_id window in a one-query hybrid:\n$p")
+  }
 }

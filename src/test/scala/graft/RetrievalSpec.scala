@@ -86,6 +86,34 @@ class RetrievalSpec extends AnyFunSuite with SparkFixture {
     assert(plan.contains("TakeOrderedAndProject"), plan)
   }
 
+  test("topRanks numbers ties, NaN and null scores in the cut's order, with no window and no extra job") {
+    val scored = spark.range(0, 400, 1, 4).select(col("id").as("doc_id"),
+      when(col("id") % 11 === 0, lit(null).cast("double"))
+        .when(col("id") % 13 === 0, lit(Double.NaN))
+        .otherwise((col("id") % 3).cast("double")).as("score"))
+    def cut(k: Int) = scored.orderBy(col("score").desc, col("doc_id")).limit(k)
+    for (k <- Seq(1, 5, 40, 400)) {
+      val got = Retrieval.topRanks(scored, col("score"), "doc_id", k)
+      val (rows, jobs, _) = jobsDuring(got.collect())
+      val (want, cutJobs, _) = jobsDuring(cut(k).select("doc_id").collect())
+      assert(rows.map(r => (r.getLong(0), r.getInt(1))).toSeq ==
+        want.map(_.getLong(0)).zipWithIndex.map { case (id, i) => (id, i + 1) }.toSeq,
+        s"k=$k")
+      // numbering costs no job over the cut itself (k = 400 covers the
+      // whole frame, so Spark drops the limit and the cut is a global
+      // sort either way)
+      if (k < 400)
+        assert(jobs <= cutJobs, s"k=$k: ranking added jobs ($jobs vs the cut's $cutJobs)")
+      val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      assert(aqe.collect(got.queryExecution.executedPlan) {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w
+      }.isEmpty, got.queryExecution.executedPlan.toString)
+    }
+    // an empty leg ranks nothing
+    assert(Retrieval.topRanks(scored.filter(col("doc_id") < 0), col("score"),
+      "doc_id", 5).collect().isEmpty)
+  }
+
   test("hybridSearch equals an independent in-memory fusion") {
     val terms = Seq("spark", "hash", "window")
     val kPerLeg = 20

@@ -1270,6 +1270,57 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
     assert(e5.getMessage.contains("(query_id, query, embedding)"), e5.getMessage)
   }
 
+  test("corpus_hybrid TVF over index layouts: one query equals rrfFuse(topRanks(search), ivf); a batch equals its singles") {
+    import graft.pipeline.{Embeddings, Retrieval, TextIndex}
+    import spark.implicits._
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val base = java.nio.file.Files.createTempDirectory("graft_tvf_hyb_layouts").toString
+    val (text, ivf) = (s"$base/text", s"$base/ivf")
+    TextIndex.write(Engine.table(spark, sfDir, "documents").select("doc_id", "text"),
+      text, buckets = 8)
+    Embeddings.writeIvfIndex(emb, ivf, nlist = 8)
+    def vecOf(id: Long): Seq[Float] =
+      emb.filter(col("vec_id") === id).select("embedding").head().getSeq[Float](0)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.mkString("|")).toSeq
+    // one query per shape: several terms, a query whose term misses the
+    // index (a dense-only fusion)
+    val queries = Seq(7L -> "spark hash window", 1L -> "spark join",
+      2L -> "zzz_absent_term")
+    queries.toDF("query_id", "query")
+      .join(emb.select(col("vec_id").as("query_id"), col("embedding")), "query_id")
+      .coalesce(1).write.parquet(s"$base/q")
+    def single(q: String, id: Long, opts: String) = spark.sql(
+      s"SELECT * FROM corpus_hybrid('$text', '$ivf', '$q', " +
+        s"embedding=>'${vecOf(id).map(_.toDouble).mkString(",")}', k=>10$opts)")
+    val fused = Seq(Seq.empty[Long], Seq(2L, 1L)).map { weights =>
+      val opts = if (weights.isEmpty) "" else s", weights=>'${weights.mkString(",")}'"
+      // the single-query TVF is the Scala surface's composition
+      // (q_hybrid_indexed's), rows and order
+      val (id, q) = queries.head
+      val lex = Retrieval.topRanks(TextIndex.search(spark, text, q.split(" ").toSeq, 20),
+        col("score"), "doc_id", 20)
+      val den = Embeddings.ivfTopKIndexedFor(
+          Seq(id -> vecOf(id)).toDF("qid", "embedding"), ivf, 20, nprobe = 5,
+          adaptive = true)
+        .select(col("neighbor_id").as("doc_id"), col("rank").cast("int").as("rank"))
+      val got = rows(single(q, id, opts))
+      assert(got == rows(Retrieval.rrfFuse(Seq(lex, den), "doc_id", 60, 10, weights)),
+        s"single-query TVF diverged from rrfFuse(topRanks(search), ivf), weights $weights")
+      // the batch route equals the single-query TVF per query
+      val gotMany = rows(spark.sql(s"SELECT * FROM corpus_hybrid('$text', '$ivf', " +
+        s"queries=>'$base/q', k=>10$opts)")).sorted
+      val wantMany = queries.flatMap { case (id, q) =>
+        rows(single(q, id, opts)).map(r => s"$id|$r") }.sorted
+      assert(gotMany == wantMany,
+        s"index-route batch diverged from per-query singles, weights $weights")
+      got
+    }
+    assert(fused(0) != fused(1),
+      "weights=>'2,1' must change the fused cut (vacuous fixture otherwise)")
+  }
+
   test("serving micro-batch cap is ENFORCED before driver collects, on every batch TVF") {
     import spark.implicits._
     import graft.pipeline.ServingLimits

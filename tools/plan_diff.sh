@@ -6,7 +6,10 @@
 # the same plan, and RDD ids also move with the number of jobs run
 # earlier in the session. The source line in such an RDD's call site
 # (`at localCheckpoint at TextDedup.scala:<n>`) is normalized too: it
-# moves with any edit above that line. Three more names differ between
+# moves with any edit above that line. Lambda variable names
+# (`lambda x_<n>`) are normalized too: Spark numbers them from one
+# JVM-wide counter, so a lambda built by any earlier query or fixture
+# renames every later one. Three more names differ between
 # any two JVMs and are normalized as well: lambda class names
 # (`Lambda$<n>/0x<addr>`), identity hashes in object strings
 # (`[[D@<hex>`) and the write UUIDs in part-file names. So are fixture
@@ -35,7 +38,7 @@ for side in A B; do
     [ -e "$f" ] || { echo "FAIL: no PlanDump files in $src"; exit 1; }
     query="$(basename "$f" .txt)"; query="${query%_*}"
     [ ! -e "$TMP/$side/$query.txt" ] || { echo "FAIL: $src holds two dumps of $query"; exit 1; }
-    sed -E -e 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g; s/RDD\[[0-9]+\]/RDD[N]/g; s/\.scala:[0-9]+/.scala:N/g' \
+    sed -E -e 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g; s/(lambda [a-z]+)_[0-9]+/\1_N/g; s/RDD\[[0-9]+\]/RDD[N]/g; s/\.scala:[0-9]+/.scala:N/g' \
       -e 's/Lambda\$[0-9]+\/0x[0-9a-f]+/Lambda$N/g; s/@[0-9a-f]{5,8}\b/@H/g; s/[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}/UUID/g' "$f" \
       | sed -E "s#[^][ ,()']*/graft_fixtures[0-9]*/([a-z_]+)_[0-9a-f]{8}#FIXTURE/\\1#g; s#[^][ ,()']*/graft_([a-z_]+)_[0-9a-f]+\\b#FIXTURE/\\1#g; s#\\b(orders|lineitem)_bkt_[0-9a-f]+\\b#\\1_bkt#g" \
       > "$TMP/$side/$query.txt"
