@@ -116,12 +116,7 @@ object Embeddings {
     val scored = v.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosSim(dot(col("qv"), col("v")), col("qnrm"), col("nrm")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
-      .orderBy("query_id", "rank")
+    rankTopK(scored, k)
   }
 
   /** Exact top-k for EXTERNAL query vectors over a plain (vec_id,
@@ -310,12 +305,7 @@ object Embeddings {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosSim(dot(col("qv"), col("v")), col("qnrm"), col("nrm")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
-      .orderBy("query_id", "rank")
+    rankTopK(scored, k)
   }
 
   /** IVF-candidate near-duplicate pairs: same emitted semantics as
@@ -455,12 +445,7 @@ object Embeddings {
     val scored = corpus.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosSim(dot(col("qv"), col("vhat")), col("qnrm"), norm(col("vhat"))).as("cos_adc"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos_adc").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topk)
-      .select("query_id", "neighbor_id", "cos_adc", "rank")
-      .orderBy("query_id", "rank")
+    rankTopK(scored, topk, "cos_adc")
   }
 
   /** The production PQ read path: ADC over the compressed corpus
@@ -495,12 +480,7 @@ object Embeddings {
       .join(broadcast(cand.join(qv, "query_id")), "neighbor_id")
       .select(col("query_id"), col("neighbor_id"),
         cosSim(dot(col("qv"), col("v")), col("qnrm"), col("nrm")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
-      .orderBy("query_id", "rank")
+    rankTopK(scored, k)
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023: drop
@@ -589,7 +569,11 @@ object Embeddings {
     * the initial batch, assign everything against the frozen model).
     * It is also what makes [[appendToIvfIndex]] exactly equivalent to
     * a fresh build: append = assignment against frozen parameters, so
-    * base-build + append ≡ full build trained on the base. */
+    * base-build + append ≡ full build trained on the base.
+    *
+    * A build into a directory that already holds an index replaces it
+    * whole: [[Stores.reset]] first deletes its compaction and rebuild
+    * generations and its takedown ledger. */
   def writeIvfIndex(emb: DataFrame, dir: String,
                     nlist: Int = 16, iters: Int = 3,
                     pqM: Int = 16, pqK: Int = 64, pqIters: Int = 10,
@@ -600,6 +584,7 @@ object Embeddings {
     val books = pqCodebooks(t.select(col("vec_id"), col("v")), pqM, pqK, pqIters)
     val spark = emb.sparkSession
     import spark.implicits._
+    Stores.reset(spark, dir, IvfStores :+ "gen")
     cents.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }
       .toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
@@ -691,40 +676,29 @@ object Embeddings {
   }
 
   /** Logical deletes for a [[writeIvfIndex]] layout — the
-    * takedown / right-to-erasure path a training-data index needs.
-    * Writes the ids as a tombstone file under `dir/tombstones/`;
-    * cost is O(batch) like [[appendToIvfIndex]] — no corpus file is
-    * touched. Both read paths ([[ivfTopKIndexed]],
-    * [[ivfPqTopKIndexed]]) anti-join the tombstone set, so a deleted
-    * vector stops appearing as a neighbor AND as a query immediately;
-    * the bytes are physically purged by the next [[compactIvfIndex]],
-    * which rewrites every cell holding a tombstoned row and moves the
-    * consumed tombstone's ids into the durable purged-ids ledger —
-    * so the takedown survives compaction for reconciliation purposes
-    * ([[ivfIndexIds]]) and is never silently re-appended from the
-    * corpus of record. (Reference analog: the materialization-cleanup
-    * debt its DEV_NOTES.md:117-122 names for its own artifacts.)
+    * takedown / right-to-erasure path a training-data index needs:
+    * the ids go to the live root's [[Stores.Ledger]], O(batch) like
+    * [[appendToIvfIndex]] — no corpus file is touched. Both read paths
+    * ([[ivfTopKIndexed]], [[ivfPqTopKIndexed]]) exclude a deleted
+    * vector as a neighbor AND as a query immediately; the next
+    * [[compactIvfIndex]] purges its bytes. (Reference analog: the
+    * materialization-cleanup debt its DEV_NOTES.md:117-122 names for
+    * its own artifacts.)
     *
     * Same single-maintenance-writer discipline as append/compact:
     * deletes are serialized with compaction by the caller (the
     * ingest's foreachBatch), not locked here. */
-  def deleteFromIvfIndex(ids: DataFrame, dir: String): Unit = {
-    val root = liveIndexRoot(ids.sparkSession, dir)
-    ids.select(col(ids.columns.head).cast("long").as("vec_id"))
-      .coalesce(1).write.mode("append").parquet(s"$root/tombstones")
-  }
+  def deleteFromIvfIndex(ids: DataFrame, dir: String): Unit =
+    ivfLedger(ids.sparkSession, liveIndexRoot(ids.sparkSession, dir)).write(ids)
 
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    deleteFromIvfIndex(ids.toDF("vec_id"), dir)
-  }
+                         dir: String, ids: Seq[Long]): Unit =
+    ivfLedger(spark, liveIndexRoot(spark, dir)).write(ids)
 
   /** The vector ids of an index — by default the LIVE ids (tombstones
     * excluded), which is what queries see; `includeTombstoned = true`
-    * adds ids that are deleted but not yet purged, which is what
-    * RECONCILIATION must diff against (a tombstoned id is not
-    * "missing" — re-appending it would resurrect a takedown). This is
+    * adds the deleted ones, pending or purged, which is what
+    * reconciliation diffs against ([[Stores.Ledger.ids]]). This is
     * the id-level surface to reconcile against when embeddings are
     * expensive to recompute: diff doc ids against it, then embed ONLY
     * the missing docs ([[graft.streaming.CorpusIngest.ingest]]'s
@@ -733,19 +707,7 @@ object Embeddings {
   def ivfIndexIds(spark: org.apache.spark.sql.SparkSession, dir: String,
                   includeTombstoned: Boolean = false): DataFrame = {
     val root = liveIndexRoot(spark, dir)
-    if (includeTombstoned)
-      // live ∪ pending tombstones ∪ the PURGED-ids ledger: a takedown
-      // stays in this set even after compaction physically removed its
-      // rows and consumed its tombstone — without the ledger, the
-      // reconcile cadence would see the id as "missing" the moment
-      // compaction ran and silently re-embed a deleted vector from the
-      // corpus of record (the takedown-resurrection bug).
-      Seq(tombstoneIds(spark, root), purgedIds(spark, root)).flatten
-        .foldLeft(
-          Parquet.read(spark, liveCorpusDir(spark, root)).select("vec_id"))(
-          _.unionByName(_))
-        .distinct()
-    else liveRows(spark, root).select("vec_id")
+    ivfLedger(spark, root).ids(Parquet.read(spark, liveCorpusDir(spark, root)), includeTombstoned)
   }
 
   /** Reconcile a [[writeIvfIndex]] layout against the corpus of
@@ -757,38 +719,26 @@ object Embeddings {
     * non-transactional window ([[graft.streaming.CorpusIngest.ingest]]:
     * a crash between the corpus append and the index append loses that
     * batch's index rows; the reverse order would strand orphans) and
-    * for any other drift between the two stores. Both diffs are
-    * id-only anti-joins — 8 bytes per row crosses the exchanges,
-    * column pruning keeps vectors out until the append actually needs
-    * them — and the repairs reuse the incremental machinery
-    * ([[appendToIvfIndex]] / [[deleteFromIvfIndex]]), so
-    * reconciliation is O(drift), not O(index), plus the id scans.
-    * "Missing" is judged against ALL index ids including tombstoned
-    * AND already-purged ones (the compaction-consumed ledger — without
-    * it a takedown would "go missing" the moment compaction purged its
-    * rows and be silently re-appended here): a takedown whose doc
-    * still sits in the corpus of record
-    * stays deleted — reconciliation repairs DRIFT, it does not
-    * overrule deletes (remove the doc from the corpus of record to
-    * make erasure permanent end-to-end). Idempotent: a second run
-    * returns (0, 0). Same single-maintenance-writer discipline as
-    * append/compact. */
-  def reconcileIvfIndex(emb: DataFrame, dir: String): (Long, Long) = {
-    val spark = emb.sparkSession
-    val allIds = ivfIndexIds(spark, dir, includeTombstoned = true)
-    val liveIds = ivfIndexIds(spark, dir)
-    val corpusIds = emb.select("vec_id")
-    val missing = emb.join(allIds, Seq("vec_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nMissing = missing.count()
-    if (nMissing > 0) appendToIvfIndex(missing, dir)
-    missing.unpersist(blocking = false)
-    val orphaned = liveIds.join(corpusIds, Seq("vec_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nOrphaned = orphaned.count()
-    if (nOrphaned > 0) deleteFromIvfIndex(orphaned, dir)
-    orphaned.unpersist(blocking = false)
-    (nMissing, nOrphaned)
+    * for any other drift between the two stores. The diff is
+    * [[Stores.Ledger.reconcile]]'s: id-only anti-joins, O(drift)
+    * repairs through [[appendToIvfIndex]] and the ledger, and a
+    * takedown whose doc still sits in the corpus of record stays
+    * deleted — reconciliation repairs DRIFT, it does not overrule
+    * deletes (remove the doc from the corpus of record to make erasure
+    * permanent end-to-end). Same single-maintenance-writer discipline
+    * as append/compact. */
+  def reconcileIvfIndex(emb: DataFrame, dir: String): (Long, Long) =
+    reconcileIvf(emb, "vec_id", dir)(identity)
+
+  /** [[reconcileIvfIndex]] against a corpus of record keyed by `key`
+    * that holds no vectors yet: `vectors` embeds only the missing rows
+    * (the ingest's reconcile cadence). */
+  private[graft] def reconcileIvf(record: DataFrame, key: String, dir: String)
+                                 (vectors: DataFrame => DataFrame): (Long, Long) = {
+    val spark = record.sparkSession
+    val root = liveIndexRoot(spark, dir)
+    ivfLedger(spark, root).reconcile(record, Parquet.read(spark, liveCorpusDir(spark, root)), key)(
+      missing => appendToIvfIndex(vectors(missing), dir))
   }
 
   /** Full retrain + atomic swap — the "periodic full rebuild" the
@@ -823,16 +773,7 @@ object Embeddings {
     // prune generations older than the grace copy (the just-replaced
     // live); generation 0 is the base layout's own subdirectories
     (0 until curGen).foreach { g =>
-      if (g == 0)
-        fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-          .map(_.getPath)
-          .filter { p =>
-            val n = p.getName
-            n == "centroids" || n == "codebooks" || n == "tombstones" ||
-              n == "cellstats" || n == "purged" ||
-              n == "corpus" || n.startsWith("corpus_v")
-          }
-          .foreach(p => fs.delete(p, true))
+      if (g == 0) Stores.reset(spark, dir, IvfStores)
       else {
         val old = new org.apache.hadoop.fs.Path(s"$dir/gen_v$g")
         if (fs.exists(old)) fs.delete(old, true)
@@ -851,33 +792,17 @@ object Embeddings {
     Stores.generations(spark, dir, "gen", "_INDEX_SUCCESS")
       .filter(_._1 > 0).lastOption.fold(dir)(_._2)
 
-  /** The distinct tombstoned ids of an index, or None when no
-    * tombstone file exists (the common case — the read paths add no
-    * join at all then). */
-  private def tombstoneIds(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): Option[DataFrame] =
-    idDirIds(spark, s"$dir/tombstones")
+  /** The base layout's stores, each `dir/<store>[_v<N>]`; a fresh
+    * build resets them ([[Stores.reset]]) with the `gen_v<G>`
+    * generations, a rebuild's prune without. */
+  private val IvfStores = Seq("centroids", "codebooks", "cellstats", "corpus")
 
-  /** The purged-ids ledger: every id whose tombstone a
-    * [[compactIvfIndex]] pass has consumed. Append-only within an
-    * index generation (a [[rebuildIvfIndex]] starts a fresh root, so
-    * the ledger — like tombstones — deliberately does not carry over:
-    * the corpus of record is authoritative for a rebuild). Read ONLY
-    * by [[ivfIndexIds]]`(includeTombstoned = true)` — the hot query
-    * paths never touch it, and it is id-only (8 bytes/row), so it
-    * stays ledger-sized forever. */
-  private def purgedIds(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): Option[DataFrame] =
-    idDirIds(spark, s"$dir/purged")
-
-  private def idDirIds(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-      Some(Parquet.read(spark, path).select("vec_id").distinct())
-    else None
-  }
+  /** The takedown ledger of an index root ([[Stores]]). Like the
+    * generations, it does not carry over a [[rebuildIvfIndex]]: the
+    * corpus of record is authoritative for a rebuild. */
+  private def ivfLedger(spark: org.apache.spark.sql.SparkSession,
+                        root: String): Stores.Ledger =
+    Stores.ledger(spark, root, "vec_id")
 
   /** Live corpus rows: the live generation minus tombstoned ids. The
     * anti-join sits ABOVE the scan, so `cell IN (...)` partition
@@ -887,10 +812,7 @@ object Embeddings {
   private def liveRows(spark: org.apache.spark.sql.SparkSession,
                        dir: String): DataFrame = {
     val root = liveIndexRoot(spark, dir)
-    val corpus = Parquet.read(spark, liveCorpusDir(spark, root))
-    tombstoneIds(spark, root)
-      .map(t => corpus.join(t, Seq("vec_id"), "left_anti"))
-      .getOrElse(corpus)
+    ivfLedger(spark, root).live(Parquet.read(spark, liveCorpusDir(spark, root)))
   }
 
   /** Resolve the LIVE corpus generation of a [[writeIvfIndex]] layout:
@@ -934,12 +856,9 @@ object Embeddings {
     // this pass is not consumed; tombstoned cells (bounded collect:
     // ≤ nlist ints) force into the rewrite set — a raw file copy
     // cannot drop rows
-    val ledger = Stores.ledger(spark, root)
+    val ledger = ivfLedger(spark, root)
     val tombFiles = ledger.pending()
-    val tombs: Option[DataFrame] =
-      if (tombFiles.isEmpty) None
-      else Some(Parquet.read(spark, tombFiles.map(_.toString): _*)
-        .select("vec_id").distinct())
+    val tombs = ledger.idsOf(tombFiles)
     val tombCells: Set[Int] = tombs match {
       case None => Set.empty
       case Some(t) => Parquet.read(spark, live).join(t, Seq("vec_id"))
@@ -1136,19 +1055,19 @@ object Embeddings {
       excludeSelf = false, adaptive = adaptive, escapeCap = escapeCap)
   }
 
-  /** Per-query top-k ranking of a (query_id, neighbor_id, cos)
-    * candidate frame — the shared tail of every indexed read path
-    * (ties break on the lower neighbor id, same as [[ivfTopK]]). */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
-    rankedTopK(scored, k).orderBy("query_id", "rank")
+  /** Per-query top-k ranking of a (query_id, neighbor_id, `score`)
+    * candidate frame — the shared tail of every top-k read path (ties
+    * break on the lower neighbor id). */
+  private def rankTopK(scored: DataFrame, k: Int, score: String = "cos"): DataFrame =
+    rankedTopK(scored, k, score).orderBy("query_id", "rank")
 
   /** [[rankTopK]]'s rows without its output order. */
-  private def rankedTopK(scored: DataFrame, k: Int): DataFrame = {
+  private def rankedTopK(scored: DataFrame, k: Int, score: String = "cos"): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
+      .partitionBy("query_id").orderBy(col(score).desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+      .select("query_id", "neighbor_id", score, "rank")
   }
 
   /** Shared probe → prune → exact-score → top-k core of the indexed
@@ -1429,12 +1348,7 @@ object Embeddings {
       .join(broadcast(cand.join(qv, "query_id")), "neighbor_id")
       .select(col("query_id"), col("neighbor_id"),
         cosSim(dot(col("qv"), col("v")), col("qnrm"), col("nrm")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
-      .orderBy("query_id", "rank")
+    rankTopK(scored, k)
   }
 
   /** Multi-table random-hyperplane LSH top-k: `tables` independent
@@ -1492,11 +1406,6 @@ object Embeddings {
       .join(broadcast(cands.join(qv, "query_id")), "neighbor_id")
       .select(col("query_id"), col("neighbor_id"),
         cosine(col("qv"), col("v")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
-      .orderBy("query_id", "rank")
+    rankTopK(scored, k)
   }
 }

@@ -2,7 +2,8 @@ package graft.pipeline
 
 import graft.sources.Parquet
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** The engine's persisted-store conventions, each stated once.
   *
@@ -22,17 +23,36 @@ import org.apache.spark.sql.SparkSession
   * ([[Embeddings.compactIvfIndex]]) and the band index's two stores
   * ([[TextDedup.compactBandIndex]]).
   *
-  * Takedown ledger. A delete appends an id file under `tombstones/`
-  * and readers anti-join it at once. A purging pass snapshots the
-  * files from [[Ledger.pending]], removes their ids' rows, then
-  * [[Ledger.consume]]s them: each is copied into `purged/` — the
-  * durable ids ledger reconcile diffs against, so a purged takedown is
-  * never re-indexed — and the original stays one more cycle for
-  * readers whose plan listed it pre-swap; the next pass's `pending()`
-  * drops it. A delete racing a pass is not in its snapshot and waits
-  * for the next one. Users: the text, IVF and band indexes and the
-  * streaming ingest's corpus purge
-  * ([[graft.streaming.CorpusIngest.purgeCorpusTombstones]]). */
+  * Takedown ledger ([[Ledger]], one per store: `tombstones/` and
+  * `purged/` beside its generations, one long id column). The whole
+  * contract lives here; an index family names only its store and id
+  * column.
+  *  - Write: [[Ledger.write]] is the one tombstone writer — the
+  *    distinct ids as one new file per call, O(batch). Readers exclude
+  *    them at once ([[Ledger.live]], [[Ledger.idsOf]]).
+  *  - Purge: a purging pass snapshots the files from
+  *    [[Ledger.pending]], removes their ids' rows, then
+  *    [[Ledger.consume]]s them: each is copied into `purged/` and the
+  *    original stays one more cycle for readers whose plan listed it
+  *    pre-swap; the next pass's `pending()` drops it. A delete racing a
+  *    pass is not in its snapshot and waits for the next one.
+  *  - Id view: [[Ledger.ids]] is the store's ids minus the pending
+  *    takedowns (what readers serve), or plus every pending AND purged
+  *    takedown (what reconcile diffs against). `purged/` is what keeps
+  *    a takedown whose rows a compaction removed from reading as
+  *    "missing" and being re-indexed from the corpus of record.
+  *  - Reconcile: [[Ledger.reconcile]] is the one repair diff against
+  *    the corpus of record. "Missing" is the record minus ALL ids, so
+  *    a takedown whose doc is still in the record stays down;
+  *    "orphans" are the live ids minus the record. The family supplies
+  *    only its append; orphans go through the ledger writer.
+  *  - Reset: [[reset]] is the one fresh-build reset. A base build
+  *    deletes its stores' generations and the ledger before it writes,
+  *    so no `_v<N>` generation or takedown of an earlier build shadows
+  *    or hides the new one.
+  * Users: the text, IVF and band indexes and the streaming ingest's
+  * corpus ledger ([[graft.streaming.CorpusIngest.takedown]],
+  * [[graft.streaming.CorpusIngest.purgeCorpusTombstones]]). */
 private[graft] object Stores {
 
   /** Highest committed `dir/base_v<N>`, else `dir/base` — the base is
@@ -102,7 +122,7 @@ private[graft] object Stores {
     * bytes). */
   def storeStats(spark: SparkSession, live: String,
                  partPrefix: String, partCol: String):
-      org.apache.spark.sql.DataFrame = {
+      DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{broadcast, count, lit}
     val fs = new Path(live).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -194,9 +214,14 @@ private[graft] object Stores {
   private def copy(fs: FileSystem, src: Path, dst: Path): Unit =
     FileUtil.copy(fs, src, fs, dst, false, fs.getConf)
 
-  /** The takedown ledger (see the object doc) of the store at `dir`. */
-  final class Ledger private[Stores] (fs: FileSystem, tombDir: Path,
-                                      purgedDir: Path) {
+  private val Tombstones = "tombstones"
+  private val Purged = "purged"
+
+  /** The takedown ledger (see the object doc) of the store at `dir`,
+    * its files holding one long `idCol` column. */
+  final class Ledger private[Stores] (spark: SparkSession, fs: FileSystem,
+                                      tombDir: String, purgedDir: String,
+                                      idCol: String) {
     /** Every takedown file on disk, purged or not. */
     def tombstones: Seq[Path] = listed(tombDir)
 
@@ -215,20 +240,100 @@ private[graft] object Stores {
 
     /** Ledgers `files`, a [[pending]] snapshot whose rows are purged. */
     def consume(files: Seq[Path]): Unit = if (files.nonEmpty) {
-      fs.mkdirs(purgedDir)
+      fs.mkdirs(new Path(purgedDir))
       files.foreach(f => copy(fs, f, new Path(purgedDir, f.getName)))
     }
 
-    private def listed(p: Path): Seq[Path] =
+    /** Takedowns: the distinct ids of `ids`' first column as one new
+      * tombstone file. */
+    def write(ids: DataFrame): Unit =
+      ids.select(col(ids.columns.head).cast("long").as(idCol)).distinct()
+        .coalesce(1).write.mode("append").parquet(tombDir)
+
+    def write(ids: Seq[Long]): Unit = {
+      import spark.implicits._
+      write(ids.toDF(idCol))
+    }
+
+    /** The distinct ids of takedown `files`; None when there are none,
+      * so a reader adds no join at all. */
+    def idsOf(files: Seq[Path]): Option[DataFrame] =
+      if (files.isEmpty) None
+      else Some(Parquet.read(spark, files.map(_.toString): _*).select(idCol).distinct())
+
+    /** `rows` minus the pending takedowns, read as the `tombstones/`
+      * directory (the IVF read paths' plans name it). */
+    def live(rows: DataFrame): DataFrame =
+      if (tombstones.isEmpty) rows
+      else rows.join(Parquet.read(spark, tombDir).select(idCol).distinct(),
+        Seq(idCol), "left_anti")
+
+    /** The id view of a store whose live generation is `stored`: its
+      * distinct ids minus the pending takedowns, or, with
+      * `includeTombstoned`, plus every pending and purged one. */
+    def ids(stored: DataFrame, includeTombstoned: Boolean = false): DataFrame =
+      if (!includeTombstoned) live(stored.select(idCol).distinct())
+      else idsOf(tombstones ++ purged)
+        .fold(stored.select(idCol))(stored.select(idCol).unionByName(_)).distinct()
+
+    /** The reconcile diff of the store whose live generation is
+      * `stored` against the corpus of record `record`, joined on its
+      * column `key`: `append` gets the record rows no id of the store
+      * names, and the live ids the record lacks are tombstoned.
+      * Returns (appended, tombstoned); a second pass returns (0, 0).
+      *
+      * Each side's anti-join runs once: its rows are checkpointed
+      * ([[TextDedup.materialize]]), counted and handed to the write.
+      * Not persisted: a write into a path that a cached plan reads makes
+      * Spark re-list and recompute that cache, so an append's second
+      * write (the band index's `bands` after its `shingles`, the IVF
+      * `cellstats` after its `corpus`, the text `_skips` after its
+      * postings) would see its batch already indexed and drop it. A
+      * checkpoint's plan names no path. */
+    def reconcile(record: DataFrame, stored: DataFrame, key: String)
+                 (append: DataFrame => Unit): (Long, Long) = {
+      val missing = record.join(
+        ids(stored, includeTombstoned = true).withColumnRenamed(idCol, key),
+        Seq(key), "left_anti")
+      val orphans = ids(stored)
+        .join(record.select(col(key).as(idCol)), Seq(idCol), "left_anti")
+      (once(missing)(append), once(orphans)(write))
+    }
+
+    private def once(df: DataFrame)(use: DataFrame => Unit): Long = {
+      val m = TextDedup.materialize(df, eager = true)
+      val n = m.count()
+      if (n > 0) use(m)
+      n
+    }
+
+    private def listed(dir: String): Seq[Path] = {
+      val p = new Path(dir)
       if (fs.exists(p))
         fs.listStatus(p).toSeq.map(_.getPath).filter(_.getName.endsWith(".parquet"))
       else Nil
+    }
   }
 
-  def ledger(spark: SparkSession, dir: String, tombs: String = "tombstones",
-             purged: String = "purged"): Ledger =
-    new Ledger(new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration),
-      new Path(s"$dir/$tombs"), new Path(s"$dir/$purged"))
+  /** The takedown ledger of the store at `dir` whose ids are `idCol`;
+    * `prefix` names a ledger that shares its directory with data
+    * Spark lists (the ingest's corpus: `_corpus_tombstones/`). */
+  def ledger(spark: SparkSession, dir: String, idCol: String,
+             prefix: String = ""): Ledger =
+    new Ledger(spark, new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      s"$dir/$prefix$Tombstones", s"$dir/$prefix$Purged", idCol)
+
+  /** The fresh-build reset (see the object doc): deletes every
+    * generation `<store>` / `<store>_v<N>` of `stores` under `dir` and
+    * the ledger directories. */
+  def reset(spark: SparkSession, dir: String, stores: Seq[String]): Unit = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.listStatus(p).map(_.getPath).filter { q =>
+      val n = q.getName
+      n == Tombstones || n == Purged || stores.exists(s => n == s || n.startsWith(s"${s}_v"))
+    }.foreach(fs.delete(_, true))
+  }
 
   // --- serving-path model-parameter cache ---------------------------
   //

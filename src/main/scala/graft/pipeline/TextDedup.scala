@@ -599,7 +599,8 @@ object TextDedup {
     * AQE's runtime conversion broadcasts the (micro-batch-sized)
     * probe side from its observed size. The index is never shuffled:
     * candidates and verification move batch-side rows to index-side
-    * partitions, O(batch × bands) join rows per call. */
+    * partitions, O(batch × bands) join rows per call. A build over an
+    * existing index replaces it ([[Stores.reset]]). */
   def writeBandIndex(docs: DataFrame, dir: String, k: Int = 3,
                      bands: Int = 16, rowsPerBand: Int = 4,
                      buckets: Int = 32): Unit = {
@@ -608,19 +609,7 @@ object TextDedup {
     Seq((k, bands, rowsPerBand, buckets))
       .toDF("k", "bands", "rows_per_band", "buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    // a fresh build is authoritative: drop any compaction generations
-    // of a previous build, or readers would resolve the stale _vN
-    // store over the new base layout
-    locally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.listStatus(p).map(_.getPath)
-        .filter { q =>
-          val n = q.getName
-          n.startsWith("bands") || n.startsWith("shingles") ||
-            n == "tombstones" || n == "purged"
-        }.foreach(q => fs.delete(q, true))
-    }
+    Stores.reset(spark, dir, BandStores)
     // Cluster by bucket before each partitioned write: without it every
     // input partition emits a file into every bucket dir (measured ~2k
     // tiny files for a 32-bucket index), and every pruned probe pays
@@ -666,8 +655,15 @@ object TextDedup {
     * the ids immediately, the next [[compactBandIndex]] purges the
     * bytes. `ids` = one `doc_id` column. */
   def deleteFromBandIndex(ids: DataFrame, dir: String): Unit =
-    ids.select(col(ids.columns.head).cast("long").as("doc_id")).distinct()
-      .coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
+    bandLedger(ids.sparkSession, dir).write(ids)
+
+  /** The band index's two stores. */
+  private val BandStores = Seq("bands", "shingles")
+
+  /** The band index's takedown ledger ([[Stores]]). */
+  private def bandLedger(spark: org.apache.spark.sql.SparkSession,
+                         dir: String): Stores.Ledger =
+    Stores.ledger(spark, dir, "doc_id")
 
   /** Live generation of a band-index store (`bands` or `shingles`). */
   private def liveStore(spark: org.apache.spark.sql.SparkSession,
@@ -704,14 +700,10 @@ object TextDedup {
                        dir: String, maxFilesPerBucket: Int = 4): Int = {
     require(maxFilesPerBucket >= 1,
       s"maxFilesPerBucket $maxFilesPerBucket must be >= 1")
-    val ledger = Stores.ledger(spark, dir)
+    val ledger = bandLedger(spark, dir)
     val tombFiles = ledger.pending()
-    val tombs: Option[DataFrame] =
-      if (tombFiles.isEmpty) None
-      else Some(Parquet.read(spark, tombFiles.map(_.toString): _*)
-        .select("doc_id").distinct())
-    val n = compactStore(spark, dir, "bands", maxFilesPerBucket, tombs) +
-      compactStore(spark, dir, "shingles", maxFilesPerBucket, tombs)
+    val tombs = ledger.idsOf(tombFiles)
+    val n = BandStores.map(compactStore(spark, dir, _, maxFilesPerBucket, tombs)).sum
     // ids matching no live row must still consume, or they would
     // re-force rewrites forever
     ledger.consume(tombFiles)
@@ -719,50 +711,25 @@ object TextDedup {
   }
 
   /** Ids present in the band index (distinct doc_ids of the live
-    * shingles store), optionally including tombstoned ones — the
-    * id-level view [[reconcileBandIndex]] diffs against. */
+    * shingles store), optionally including tombstoned and purged ones:
+    * the [[Stores.Ledger.ids]] view [[reconcileBandIndex]] diffs
+    * against. */
   def bandIndexIds(spark: org.apache.spark.sql.SparkSession, dir: String,
-                   includeTombstoned: Boolean = false): DataFrame = {
-    val stored = Parquet.read(spark, liveStore(spark, dir, "shingles"))
-      .select("doc_id").distinct()
-    val ledger = Stores.ledger(spark, dir)
-    val pending = ledger.tombstones.map(_.toString)
-    if (includeTombstoned) {
-      // stored ∪ pending tombstones ∪ the purged-ids ledger: a
-      // takedown stays in this set even after compaction removed its
-      // rows — without the ledger, reconcile would see the id as
-      // "missing" and re-index a deleted doc from the corpus of record
-      val extra = pending ++ ledger.purged.map(_.toString)
-      if (extra.isEmpty) stored
-      else stored.unionByName(
-        Parquet.read(spark, extra: _*).select("doc_id")).distinct()
-    } else if (pending.isEmpty) stored
-    else stored.join( // live = serving ids: pending tombstones excluded
-      Parquet.read(spark, pending: _*).select("doc_id"), Seq("doc_id"), "left_anti")
-  }
+                   includeTombstoned: Boolean = false): DataFrame =
+    bandLedger(spark, dir).ids(
+      Parquet.read(spark, liveStore(spark, dir, "shingles")), includeTombstoned)
 
-  /** Targeted repair of a band index against the corpus of record —
-    * the counterpart of [[graft.pipeline.Embeddings.reconcileIvfIndex]]
-    * for the crash window the ingest documents (corpus append
-    * committed, band append lost, or vice versa): append band rows +
-    * shingles for docs the index is missing, tombstone index ids
-    * whose docs are gone. O(drift), idempotent; "missing" diffs
-    * against ALL index ids including tombstoned/purged ones, so a
-    * takedown whose doc still sits in the corpus of record stays
-    * taken down rather than being re-indexed by the repair. Returns
-    * (appended docs, tombstoned orphans). */
+  /** Targeted repair of a band index against the corpus of record
+    * through [[Stores.Ledger.reconcile]], for the crash window the
+    * ingest documents (corpus append committed, band append lost, or
+    * vice versa): append band rows + shingles for docs the index is
+    * missing, tombstone index ids whose docs are gone. O(drift).
+    * Returns (appended docs, tombstoned orphans). */
   def reconcileBandIndex(record: DataFrame, dir: String): (Long, Long) = {
     val spark = record.sparkSession
-    val rec = record.select(col("doc_id"), col("text"))
-    val allIds = bandIndexIds(spark, dir, includeTombstoned = true)
-    val missing = rec.join(allIds, Seq("doc_id"), "left_anti")
-    val nMissing = missing.count()
-    if (nMissing > 0) appendToBandIndex(missing, dir)
-    val orphans = bandIndexIds(spark, dir)
-      .join(rec.select("doc_id"), Seq("doc_id"), "left_anti")
-    val nOrphans = orphans.count()
-    if (nOrphans > 0) deleteFromBandIndex(orphans, dir)
-    (nMissing, nOrphans)
+    bandLedger(spark, dir).reconcile(record.select(col("doc_id"), col("text")),
+      Parquet.read(spark, liveStore(spark, dir, "shingles")), "doc_id")(
+      appendToBandIndex(_, dir))
   }
 
   /** Operational snapshot of a band index — what sizes the compaction
@@ -840,7 +807,7 @@ object TextDedup {
       .select(col("bucket"), col("key"), col("doc_id").as("dup_of"))
     // takedowns leave immediately: tombstoned corpus ids drop at the
     // candidate stage (no tombstones -> no join in the plan at all)
-    val tombFiles = Stores.ledger(spark, dir).tombstones
+    val tombFiles = bandLedger(spark, dir).tombstones
     val rawCands = idx.join(bband, Seq("bucket", "key"))
       .filter(col("dup_of") =!= col("doc_id"))
       .select(col("doc_id"), col("dup_of")).distinct()
@@ -920,12 +887,9 @@ object TextDedup {
   private def liveBandRows(spark: org.apache.spark.sql.SparkSession,
                            dir: String): DataFrame = {
     val bands = Parquet.read(spark, liveStore(spark, dir, "bands"))
-    val tombFiles = Stores.ledger(spark, dir).tombstones
-    if (tombFiles.isEmpty) bands
-    else bands.join(
-      Parquet.read(spark, tombFiles.map(_.toString): _*)
-        .select(col("doc_id")).distinct(),
-      Seq("doc_id"), "left_anti")
+    val ledger = bandLedger(spark, dir)
+    ledger.idsOf(ledger.tombstones)
+      .fold(bands)(t => bands.join(t, Seq("doc_id"), "left_anti"))
   }
 
   /** Pair candidates + exact verification over PRE-RESOLVED index

@@ -45,7 +45,8 @@ import org.apache.spark.sql.functions._
   *                              tight bound, drift-corrected at query
   *                              time). Rides the generation like
   *                              `_stats`
-  *   dir/tombstones/            doc_id takedowns
+  *   dir/tombstones/, purged/   the doc_id takedown ledger
+  *                              ([[Stores]])
   *
   * [[search]] cost at 100 TB: `bucket IN (query-term buckets)` prunes
   * every other partition directory; `term IN (...)` pushes into the
@@ -164,7 +165,8 @@ object TextIndex {
 
   /** Build the base index over `docs` (doc_id, text). `blockSize` is
     * the impact-block granularity (postings per skip block): smaller
-    * blocks prune tighter but grow the sidecar ~linearly in 1/size. */
+    * blocks prune tighter but grow the sidecar ~linearly in 1/size. A
+    * build over an existing index replaces it ([[Stores.reset]]). */
   def write(docs: DataFrame, dir: String, buckets: Int = 64,
             blockSize: Int = 4096): Unit = {
     require(buckets >= 1 && blockSize >= 1)
@@ -172,12 +174,7 @@ object TextIndex {
     import spark.implicits._
     Seq((buckets, blockSize)).toDF("buckets", "block_size")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.listStatus(p).map(_.getPath)
-      .filter(q => q.getName.startsWith("postings") ||
-        q.getName == "tombstones" || q.getName == "purged")
-      .foreach(q => fs.delete(q, true))
+    Stores.reset(spark, dir, Seq("postings"))
     val (nd, tl) = docStats(docs)
     val avgdl = if (nd == 0) 1.0 else tl.toDouble / nd
     // postings feed two writes (files + skip sidecar); persist so the
@@ -266,14 +263,15 @@ object TextIndex {
 
   /** Takedowns: O(batch) tombstone append; the ids stop appearing in
     * [[search]] results immediately. */
-  def delete(spark: SparkSession, dir: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    ids.toDF("doc_id").distinct()
-      .coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
-  }
+  def delete(spark: SparkSession, dir: String, ids: Seq[Long]): Unit =
+    textLedger(spark, dir).write(ids)
+
+  /** The index's takedown ledger ([[Stores]]). */
+  private def textLedger(spark: SparkSession, dir: String): Stores.Ledger =
+    Stores.ledger(spark, dir, "doc_id")
 
   private def tombstoneFiles(spark: SparkSession, dir: String): Seq[String] =
-    Stores.ledger(spark, dir).tombstones.map(_.toString)
+    textLedger(spark, dir).tombstones.map(_.toString)
 
   private def statsFiles(spark: SparkSession, store: String): Seq[String] = {
     val p = new Path(s"$store/_stats")
@@ -1045,57 +1043,27 @@ object TextIndex {
   }
 
   /** Ids present in the index (distinct doc_ids of the live postings),
-    * optionally including tombstoned AND purged ones — the id-level
-    * view [[reconcile]] diffs against. Without the purged-ids ledger a
-    * reconcile after compaction would see a purged takedown as
-    * "missing" and re-index it from the corpus of record — the
-    * resurrection bug class the band/IVF stores already guard. */
+    * optionally including tombstoned and purged ones: the
+    * [[Stores.Ledger.ids]] view [[reconcile]] diffs against. */
   def ids(spark: SparkSession, dir: String,
-          includeTombstoned: Boolean = false): DataFrame = {
-    val store = liveStore(spark, dir)
-    val stored = Parquet.read(spark, store).select("doc_id").distinct()
-    val ledger = Stores.ledger(spark, dir)
-    val pending = ledger.tombstones.map(_.toString)
-    if (includeTombstoned) {
-      val extra = pending ++ ledger.purged.map(_.toString)
-      if (extra.isEmpty) stored
-      else stored.unionByName(
-        Parquet.read(spark, extra: _*).select("doc_id")).distinct()
-    } else if (pending.isEmpty) stored
-    else stored.join(
-      broadcast(Parquet.read(spark, pending: _*).select("doc_id").distinct()),
-      Seq("doc_id"), "left_anti")
-  }
+          includeTombstoned: Boolean = false): DataFrame =
+    textLedger(spark, dir).ids(Parquet.read(spark, liveStore(spark, dir)), includeTombstoned)
 
   /** Targeted O(drift) repair against the corpus of record (the crash
     * window between a corpus append and the index append, in either
-    * order): append postings for docs the index is missing, tombstone
-    * index ids whose docs are gone. "Missing" diffs against ALL index
-    * ids including tombstoned/purged, so a takedown whose doc still
-    * sits in the corpus of record stays taken down. Returns (appended,
-    * tombstoned). */
+    * order) through [[Stores.Ledger.reconcile]]: append postings for
+    * docs the index is missing, tombstone index ids whose docs are
+    * gone. Returns (appended, tombstoned). */
   def reconcile(record: DataFrame, dir: String): (Long, Long) = {
     val spark = record.sparkSession
-    val rec = record.select(col("doc_id"), col("text"))
     // a tokenless doc produces no postings rows, so it would read as
     // "missing" on every pass and re-append its stats delta forever —
     // it is unindexable by definition (can never match a query), so
     // it is out of scope for the diff
-    val indexable = rec.filter(length(trim(col("text"))) > 0)
-    // materialize the diff once: count + the two writes inside
-    // append() would otherwise re-run the anti-join (which scans the
-    // live postings plus both ledgers) three times
-    val missing = TextDedup.materialize(
-      indexable.join(ids(spark, dir, includeTombstoned = true),
-        Seq("doc_id"), "left_anti"),
-      eager = true)
-    val nMissing = missing.count()
-    if (nMissing > 0) append(missing, dir)
-    val orphans = ids(spark, dir)
-      .join(rec.select("doc_id"), Seq("doc_id"), "left_anti")
-    val orphanIds = orphans.collect().map(_.getLong(0)).toSeq
-    if (orphanIds.nonEmpty) delete(spark, dir, orphanIds)
-    (nMissing, orphanIds.length.toLong)
+    val indexable = record.select(col("doc_id"), col("text"))
+      .filter(length(trim(col("text"))) > 0)
+    textLedger(spark, dir).reconcile(indexable,
+      Parquet.read(spark, liveStore(spark, dir)), "doc_id")(append(_, dir))
   }
 
   /** Physical purge + small-file maintenance through
@@ -1110,10 +1078,9 @@ object TextIndex {
     * exact after every compaction. Returns buckets rewritten. */
   def compact(spark: SparkSession, dir: String, maxFilesPerBucket: Int = 4): Int = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ledger = Stores.ledger(spark, dir)
+    val ledger = textLedger(spark, dir)
     val tombs = ledger.pending()
-    val tombDf = if (tombs.isEmpty) None
-      else Some(Parquet.read(spark, tombs.map(_.toString): _*).select("doc_id").distinct())
+    val tombDf = ledger.idsOf(tombs)
     val live = liveStore(spark, dir)
     val tombBuckets: Set[Int] = tombDf match {
       case None => Set.empty

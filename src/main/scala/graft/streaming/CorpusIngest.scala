@@ -27,6 +27,13 @@ import org.apache.spark.sql.functions._
   */
 object CorpusIngest {
 
+  /** One index the ingest keeps current: its O(batch) append of a
+    * micro-batch's survivors, its compaction and its reconcile against
+    * the corpus of record. */
+  private final case class MaintainedIndex(append: DataFrame => Unit,
+                                           compact: () => Unit,
+                                           reconcile: DataFrame => Unit)
+
   /** Corpus-of-record takedown — the document half of the
     * right-to-erasure path (the index halves are
     * [[graft.pipeline.Embeddings.deleteFromIvfIndex]] /
@@ -53,8 +60,7 @@ object CorpusIngest {
                bandIndexDir: Option[String] = None,
                textIndexDir: Option[String] = None): Unit = {
     import spark.implicits._
-    ids.toDF("doc_id").coalesce(1)
-      .write.mode("append").parquet(s"$outDir/_corpus_tombstones")
+    corpusLedger(spark, outDir).write(ids)
     ivfIndexDir.foreach(d =>
       graft.pipeline.Embeddings.deleteFromIvfIndex(spark, d, ids))
     bandIndexDir.foreach(d =>
@@ -65,7 +71,7 @@ object CorpusIngest {
 
   private def corpusLedger(spark: org.apache.spark.sql.SparkSession,
                            outDir: String): graft.pipeline.Stores.Ledger =
-    graft.pipeline.Stores.ledger(spark, outDir, "_corpus_tombstones", "_corpus_purged")
+    graft.pipeline.Stores.ledger(spark, outDir, "doc_id", prefix = "_corpus_")
 
   /** The landed corpus as of now: everything appended to `outDir`
     * minus tombstoned takedowns. THE canonical reader — the ingest's
@@ -75,12 +81,9 @@ object CorpusIngest {
   def landedCorpus(spark: org.apache.spark.sql.SparkSession,
                    outDir: String): DataFrame = {
     val raw = Parquet.read(spark, outDir)
-    val tombs = corpusLedger(spark, outDir).tombstones
-    if (tombs.isEmpty) raw
-    else raw.join(
-      broadcast(Parquet.read(spark, tombs.map(_.toString): _*)
-        .select("doc_id").distinct()),
-      Seq("doc_id"), "left_anti")
+    val ledger = corpusLedger(spark, outDir)
+    ledger.idsOf(ledger.tombstones)
+      .fold(raw)(t => raw.join(broadcast(t), Seq("doc_id"), "left_anti"))
   }
 
   /** Physically remove tombstoned documents' BYTES from `outDir` —
@@ -143,9 +146,10 @@ object CorpusIngest {
     // 2. the ledger's pending tombstones
     val ledger = corpusLedger(spark, outDir)
     val tombFiles = ledger.pending()
-    if (tombFiles.isEmpty) return 0
-    val victims = Parquet.read(spark, tombFiles.map(_.toString): _*)
-      .select("doc_id").distinct()
+    val victims = ledger.idsOf(tombFiles) match {
+      case Some(v) => v
+      case None => return 0
+    }
 
     // 3. locate touched part files — doc_id column only crosses this
     // scan. A corpus whose every file was already purged has no data
@@ -348,6 +352,24 @@ object CorpusIngest {
         // empty parquet file and probes the landed corpus for nothing
         if (batch.isEmpty) () else {
         val spark = batch.sparkSession
+        import graft.pipeline.{Embeddings, TextDedup, TextIndex}
+        def text(b: DataFrame) = b.select(col("doc_id"), col("text"))
+        // the configured indexes, in maintenance order
+        val indexes: Seq[MaintainedIndex] = Seq(
+          nearDupIndexDir.map(bd => MaintainedIndex(
+            b => TextDedup.appendToBandIndex(text(b), bd),
+            () => TextDedup.compactBandIndex(spark, bd, maxIndexFilesPerCell),
+            r => TextDedup.reconcileBandIndex(r, bd))),
+          textIndexDir.map(td => MaintainedIndex(
+            b => TextIndex.append(text(b), td),
+            () => TextIndex.compact(spark, td, maxIndexFilesPerCell),
+            r => TextIndex.reconcile(r, td))),
+          for (embed <- embedder; dir <- ivfIndexDir) yield MaintainedIndex(
+            b => Embeddings.appendToIvfIndex(embed(b), dir),
+            () => Embeddings.compactIvfIndex(spark, dir, maxIndexFilesPerCell),
+            // the record carries no vectors: embed only the missing docs
+            r => Embeddings.reconcileIvf(r, "doc_id", dir)(embed))
+        ).flatten
         // landedCorpus, not a raw read: a takedown filed while the
         // stream runs must stop gating arrivals at the NEXT batch
         val landed =
@@ -388,8 +410,7 @@ object CorpusIngest {
         // referenced more than once when indexing or band-gating
         // (corpus append + embed and/or band/text append): materialize
         // the micro-batch once
-        val multiRef = (embedder.isDefined && ivfIndexDir.isDefined) ||
-          nearDupIndexDir.isDefined || textIndexDir.isDefined
+        val multiRef = indexes.nonEmpty
         val indexed = if (multiRef) gated.persist() else gated
         val sink = if (outputFilesPerBatch > 0) indexed.coalesce(outputFilesPerBatch)
                    else indexed
@@ -400,74 +421,24 @@ object CorpusIngest {
         // maintenance cadences below still run on their clock
         val batchHasRows = !multiRef || !indexed.isEmpty
         // corpus of record for the reconcile cadences = snapshot ∪
-        // landed MINUS takedowns — built once per batch, not once per
-        // index (each construction re-lists the tombstone dir)
+        // landed MINUS takedowns (landedCorpus), so a taken-down doc's
+        // index rows orphan-tombstone on the cadence — built once per
+        // batch, not once per index (each construction re-lists the
+        // tombstone dir)
         lazy val record = snapshot.select(col("doc_id"), col("text"))
           .unionByName(
             landedCorpus(spark, outDir).select(col("doc_id"), col("text")))
-        nearDupIndexDir.foreach { bd =>
-          if (batchHasRows) graft.pipeline.TextDedup.appendToBandIndex(
-            indexed.select(col("doc_id"), col("text")), bd)
-          // band stores ride the same compaction cadence as the IVF
-          // index (one maintenance clock per ingest; serialized with
-          // appends inside this foreachBatch, single-writer by design)
-          if (compactIndexEvery > 0 && batchId > 0 &&
-              batchId % compactIndexEvery == 0) {
-            graft.pipeline.TextDedup.compactBandIndex(
-              spark, bd, maxIndexFilesPerCell)
-            ()
-          }
-          // ... and the reconcile cadence: repairs a band append lost
-          // to the crash window above, O(drift) like the IVF repair
-          if (reconcileIndexEvery > 0 && batchId % reconcileIndexEvery == 0) {
-            // corpus of record EXCLUDES takedowns (landedCorpus), so a
-            // taken-down doc's band rows orphan-tombstone right here
-            graft.pipeline.TextDedup.reconcileBandIndex(record, bd)
-            ()
-          }
-        }
-        textIndexDir.foreach { td =>
-          if (batchHasRows) graft.pipeline.TextIndex.append(
-            indexed.select(col("doc_id"), col("text")), td)
-          if (compactIndexEvery > 0 && batchId > 0 &&
-              batchId % compactIndexEvery == 0) {
-            graft.pipeline.TextIndex.compact(spark, td, maxIndexFilesPerCell)
-            ()
-          }
-          if (reconcileIndexEvery > 0 && batchId % reconcileIndexEvery == 0) {
-            graft.pipeline.TextIndex.reconcile(record, td)
-            ()
-          }
-        }
-        (embedder, ivfIndexDir) match {
-          case (Some(embed), Some(dir)) =>
-            if (batchHasRows)
-              graft.pipeline.Embeddings.appendToIvfIndex(embed(indexed), dir)
-            // cadence keyed to batchId (not a closure counter) so a
-            // restart resumes the schedule instead of resetting it
-            if (compactIndexEvery > 0 && batchId > 0 &&
-                batchId % compactIndexEvery == 0) {
-              graft.pipeline.Embeddings.compactIvfIndex(
-                spark, dir, maxIndexFilesPerCell)
-              ()
-            }
-            if (reconcileIndexEvery > 0 && batchId % reconcileIndexEvery == 0) {
-              // "missing" diffs against ALL index ids incl. tombstoned
-              // — a takedown whose doc still sits in the landed corpus
-              // must stay deleted, not be resurrected by the cadence
-              val allIds = graft.pipeline.Embeddings
-                .ivfIndexIds(spark, dir, includeTombstoned = true)
-                .withColumnRenamed("vec_id", "doc_id")
-              val missing = record.join(allIds, Seq("doc_id"), "left_anti")
-              if (!missing.isEmpty)
-                graft.pipeline.Embeddings.appendToIvfIndex(embed(missing), dir)
-              val liveIds = graft.pipeline.Embeddings.ivfIndexIds(spark, dir)
-                .withColumnRenamed("vec_id", "doc_id")
-              val orphans = liveIds.join(record, Seq("doc_id"), "left_anti")
-              if (!orphans.isEmpty)
-                graft.pipeline.Embeddings.deleteFromIvfIndex(orphans, dir)
-            }
-          case _ => ()
+        // one maintenance clock for every configured index, serialized
+        // with appends inside this foreachBatch (single writer by
+        // design); cadences keyed to batchId (not a closure counter) so
+        // a restart resumes the schedule instead of resetting it
+        val compactDue = compactIndexEvery > 0 && batchId > 0 &&
+          batchId % compactIndexEvery == 0
+        val reconcileDue = reconcileIndexEvery > 0 && batchId % reconcileIndexEvery == 0
+        indexes.foreach { ix =>
+          if (batchHasRows) ix.append(indexed)
+          if (compactDue) ix.compact()
+          if (reconcileDue) ix.reconcile(record)
         }
         // takedown byte purge rides the same maintenance clock —
         // serialized with appends (single writer), batchId-keyed so a

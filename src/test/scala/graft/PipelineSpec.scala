@@ -815,6 +815,34 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     assert(Embeddings.ivfTopKIndexed(spark, dir, 10, 5).collect().nonEmpty)
   }
 
+  test("writeIvfIndex over a compacted or rebuilt index serves exactly a fresh build") {
+    // a base build is authoritative: neither the old build's committed
+    // corpus_v<N>, nor its tombstones, nor a rebuild's gen_v<G> may
+    // outlive it ([[Stores.reset]])
+    val a = emb.filter(col("vec_id") % 2 === 0)
+    val b = emb.filter(col("vec_id") % 3 =!= 0)
+    def stats(d: String) = Embeddings.ivfIndexStats(spark, d).collect().toSeq
+    def ids(d: String) =
+      Embeddings.ivfIndexIds(spark, d).collect().map(_.getLong(0)).toSet
+    val ref = java.nio.file.Files.createTempDirectory("graft_ivf_resetref").toString
+    Embeddings.writeIvfIndex(b, ref, nlist = 8)
+    for (rebuild <- Seq(false, true)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_reset").toString
+      Embeddings.writeIvfIndex(a, dir, nlist = 8)
+      // ids in both builds: deleted from A, purged (corpus_v1), and one
+      // more left pending
+      Embeddings.deleteFromIvfIndex(spark, dir, Seq(2L, 4L, 8L))
+      assert(Embeddings.compactIvfIndex(spark, dir) > 0)
+      if (rebuild) assert(Embeddings.rebuildIvfIndex(a, dir, nlist = 8) == 1)
+      Embeddings.deleteFromIvfIndex(spark, dir, Seq(10L))
+      Embeddings.writeIvfIndex(b, dir, nlist = 8)
+      assert(Embeddings.ivfTopKIndexed(spark, dir, 10, 5).collect().toSeq ==
+        Embeddings.ivfTopKIndexed(spark, ref, 10, 5).collect().toSeq, s"rebuild=$rebuild")
+      assert(ids(dir) == ids(ref), s"rebuild=$rebuild")
+      assert(stats(dir) == stats(ref), s"rebuild=$rebuild")
+    }
+  }
+
   test("index lifecycle state machine: random op interleavings track the model's live set") {
     // The round-10 review bugs (reconcile resurrecting tombstones,
     // compaction consuming a racing delete) were INTERACTION bugs
@@ -896,6 +924,84 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     assert(served.nonEmpty &&
       served.forall(r => live.contains(r.getLong(1))),
       "read path served an id outside the model's live set")
+  }
+
+  /** One index family's takedown lifecycle as the reconcile contract
+    * drives it ([[graft.pipeline.Stores.Ledger.reconcile]]): `record`
+    * is the corpus of record, keyed by `key`. */
+  private case class LedgerFamily(name: String, key: String,
+                                  record: () => org.apache.spark.sql.DataFrame,
+                                  build: (org.apache.spark.sql.DataFrame, String) => Unit,
+                                  delete: (Long, String) => Unit,
+                                  compact: String => Int,
+                                  reconcile: (org.apache.spark.sql.DataFrame, String) => (Long, Long),
+                                  liveIds: String => org.apache.spark.sql.DataFrame)
+
+  /** Hash-derived 8-dimension vectors of (doc_id, text) rows — an
+    * embedder for the ingest's reconcile, which embeds only the missing
+    * docs. */
+  private def hashEmbed(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{array, lit, pmod, xxhash64}
+    df.select(col("doc_id").as("vec_id"),
+      array((0 until 8).map(i =>
+        (pmod(xxhash64(col("text"), lit(i)), lit(1000L)).cast("double") / 500.0) - 1.0): _*)
+        .as("embedding"))
+  }
+
+  private val ledgerFamilies = Seq(
+    LedgerFamily("text index", "doc_id", () => docs.select("doc_id", "text"),
+      (d, dir) => graft.pipeline.TextIndex.write(d, dir, buckets = 4),
+      (id, dir) => graft.pipeline.TextIndex.delete(spark, dir, Seq(id)),
+      dir => graft.pipeline.TextIndex.compact(spark, dir, maxFilesPerBucket = 64),
+      (r, dir) => graft.pipeline.TextIndex.reconcile(r, dir),
+      dir => graft.pipeline.TextIndex.ids(spark, dir)),
+    LedgerFamily("band index", "doc_id", () => docs.select("doc_id", "text"),
+      (d, dir) => TextDedup.writeBandIndex(d, dir, buckets = 4),
+      (id, dir) => TextDedup.deleteFromBandIndex(spark.range(id, id + 1).toDF("doc_id"), dir),
+      dir => TextDedup.compactBandIndex(spark, dir, maxFilesPerBucket = 64),
+      (r, dir) => TextDedup.reconcileBandIndex(r, dir),
+      dir => TextDedup.bandIndexIds(spark, dir)),
+    LedgerFamily("IVF index", "vec_id", () => emb,
+      (d, dir) => Embeddings.writeIvfIndex(d, dir, nlist = 4, pqM = 4, pqK = 8),
+      (id, dir) => Embeddings.deleteFromIvfIndex(spark, dir, Seq(id)),
+      dir => Embeddings.compactIvfIndex(spark, dir),
+      (r, dir) => Embeddings.reconcileIvfIndex(r, dir),
+      dir => Embeddings.ivfIndexIds(spark, dir)),
+    // the reconcile the ingest's reconcileIndexEvery cadence runs: the
+    // record is (doc_id, text) and only the missing docs are embedded
+    LedgerFamily("ingest IVF cadence", "doc_id", () => docs.select("doc_id", "text"),
+      (d, dir) => Embeddings.writeIvfIndex(hashEmbed(d), dir, nlist = 4, pqM = 4, pqK = 4),
+      (id, dir) => Embeddings.deleteFromIvfIndex(spark, dir, Seq(id)),
+      dir => Embeddings.compactIvfIndex(spark, dir),
+      (r, dir) => Embeddings.reconcileIvf(r, "doc_id", dir)(hashEmbed),
+      dir => Embeddings.ivfIndexIds(spark, dir)))
+
+  ledgerFamilies.foreach { f =>
+    test(s"reconcile contract, ${f.name}: lost appends re-added, phantoms orphaned, takedowns stay down") {
+      import org.apache.spark.sql.functions.lit
+      def idSet(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getLong(0)).toSet
+      val dir = java.nio.file.Files.createTempDirectory("graft_reconcile").toString
+      val record = f.record().filter(col(f.key) < 80).cache()
+      // the damaged index: built without the lost slice, with a phantom
+      // whose doc the record does not hold
+      val lost = idSet(record.filter(col(f.key) % 5 === 1).select(f.key))
+      val phantom = record.filter(col(f.key) === 0).withColumn(f.key, lit(999999L))
+      f.build(record.filter(col(f.key) % 5 =!= 1).unionByName(phantom), dir)
+      // two takedowns whose docs stay in the record: one purged by a
+      // compaction, one pending
+      val (purged, pending) = (3L, 2L)
+      f.delete(purged, dir)
+      assert(f.compact(dir) > 0, "the compaction purged nothing")
+      f.delete(pending, dir)
+      assert(f.reconcile(record, dir) == ((lost.size.toLong, 1L)))
+      val live = idSet(f.liveIds(dir))
+      assert(lost.subsetOf(live), "a lost append was not re-added")
+      assert(!live(999999L), "the phantom was not orphaned")
+      assert(!live(pending), "a pending takedown was re-indexed")
+      assert(!live(purged), "a purged takedown was re-indexed")
+      assert(live == idSet(record.select(f.key)) - pending - purged)
+      assert(f.reconcile(record, dir) == ((0L, 0L)), "the second pass repaired again")
+    }
   }
 
   test("quantizer training fails loud on an empty training frame") {

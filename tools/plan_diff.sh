@@ -17,9 +17,11 @@
 # (`<tmp>/graft_fixtures<n>/<tag>_<sf>`) or at the older fixed path
 # (`/tmp/graft_<tag>_<hex>`), becomes `FIXTURE/<tag>`, and the bucketed
 # fixture tables (`orders_bkt_<hex>`, `lineitem_bkt_<hex>`) lose their
-# testdata-dir suffix. Prints a unified diff per changed query and
-# exits non-zero on any difference, including a query dumped on one
-# side only.
+# testdata-dir suffix. Files the queries read from the repository
+# (`<checkout>/src/test/resources/...`) lose the checkout directory,
+# so two checkouts of the same code compare equal. Prints a unified
+# diff per changed query and exits non-zero on any difference,
+# including a query dumped on one side only.
 #
 # Each directory holds one PlanDump run; files pair by query name, the
 # file name minus its `_<suffix>.txt` (so the suffix has no `_`):
@@ -40,7 +42,7 @@ for side in A B; do
     [ ! -e "$TMP/$side/$query.txt" ] || { echo "FAIL: $src holds two dumps of $query"; exit 1; }
     sed -E -e 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g; s/(lambda [a-z]+)_[0-9]+/\1_N/g; s/RDD\[[0-9]+\]/RDD[N]/g; s/\.scala:[0-9]+/.scala:N/g' \
       -e 's/Lambda\$[0-9]+\/0x[0-9a-f]+/Lambda$N/g; s/@[0-9a-f]{5,8}\b/@H/g; s/[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}/UUID/g' "$f" \
-      | sed -E "s#[^][ ,()']*/graft_fixtures[0-9]*/([a-z_]+)_[0-9a-f]{8}#FIXTURE/\\1#g; s#[^][ ,()']*/graft_([a-z_]+)_[0-9a-f]+\\b#FIXTURE/\\1#g; s#\\b(orders|lineitem)_bkt_[0-9a-f]+\\b#\\1_bkt#g" \
+      | sed -E "s#[^][ ,()']*/graft_fixtures[0-9]*/([a-z_]+)_[0-9a-f]{8}#FIXTURE/\\1#g; s#[^][ ,()']*/graft_([a-z_]+)_[0-9a-f]+\\b#FIXTURE/\\1#g; s#\\b(orders|lineitem)_bkt_[0-9a-f]+\\b#\\1_bkt#g; s#[^][ ,()']*/src/test/resources/#CHECKOUT/src/test/resources/#g" \
       > "$TMP/$side/$query.txt"
   done
 done
